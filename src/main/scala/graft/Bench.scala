@@ -1,7 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main. Headline queries (SURVEY.md §6) against
+/** Benchmark main. Every registered query ([[headline]]) against
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout AND in a file.
   *
   * Methodology:
@@ -17,407 +16,20 @@ import org.apache.spark.sql.SparkSession
   *   never flatter the total.
   */
 object Bench {
-  /** The round-1/2 headline ten first (cross-round comparable), then
-    * the round-3 and round-4 additions — totals across rounds are NOT
-    * comparable once the list grows; compare per-query values. */
-  val headline: Seq[String] = Seq(
+  /** The rounds-1/2 cross-round set — the only totals comparable
+    * across every round; reported as its own `headline10` object. */
+  val headline10: Seq[String] = Seq(
     "q01_pricing_summary", "q03_topk_revenue", "q05_regional_join",
     "q_zone_xmatch", "q_dedup_minhash", "q_ann_bruteforce",
     "q_sessionize", "q_text_quality", "q_lightcurve_stats",
-    "q_asof_join",
-    "q_ann_ivf", "q_range_nbr", "q_pipeline_clean",
-    "q_tfidf", "q_dedup_clusters", "q_funnel", "q_shared_scan",
-    "q_bloom_join", "q_window_range", "q_triangles", "q_scd2",
-    "q_gap_fill",
-    // round-7 additions: iterative graph (regresses silently if the
-    // active-set optimization breaks), the two sort-free quantile ops,
-    // the histogram-split exact ntile, and the cell-bounded skyline
-    "q_pagerank", "q_mode", "q_quartile_bucket", "q_ntile", "q_skyline",
-    // round-7 wave-2: spatial argmin, exact EMA, RankSplit-ranked vocab
-    "q_nearest_nbr", "q_ema", "q_zipf",
-    // round-8: two-catalog cross-match, containment dedup (char-gram
-    // inverted index), periodogram (bounded explode), and the
-    // productionized PQ (k-means + LUT ADC) — each would regress
-    // silently if its blocking/fold discipline broke
-    "q_xmatch_2cat", "q_dedup_contain", "q_periodogram", "q_ann_pq",
-    // r19: PQ distortion telemetry — one encode scan + a x8 subspace
-    // explode into an 8-key aggregate; regresses if the error fold
-    // ever joins back per subspace instead of riding the literal
-    "q_pq_distortion",
-    "q_ann_ivfpq",
-    // round-9: the most expensive previously-unbenched queries, so
-    // regressions can't hide in unbenched code — spatial knn, the two
-    // biggest pair/fingerprint outputs, the RankSplit-heavy ranks,
-    // sketch-style aggregates, and the widest window/sequence scans
-    "q_knn3", "q_edit_dist_pairs", "q_retention", "q_winnow_fingerprint",
-    "q_xmatch_unmatched", "q_percent_rank", "q_attribution",
-    "q_heavy_hitters", "q_collocations", "q_hopping",
-    // round-9 wave-2: the new pipeline gates — bench-set broadcast
-    // contamination join and the zero-shuffle repetition fold
-    "q_decontaminate", "q_repetition", "q_pack_shards",
-    // round-9 wave-3: gate telemetry (kernel-heavy scan), chunking
-    // (bounded explode), vocabulary drift (corpus shuffle + topK)
-    "q_gate_stats", "q_chunk", "q_source_drift",
-    // round-10: the production-path stored ANN searches (pre-built
-    // codes + bucketed vector store; first sample builds the cache,
-    // the median reports the warm searches production actually runs)
-    // and the two new areaspec members
-    "q_ann_pq_stored", "q_ann_ivfpq_stored", "q_poly_search",
-    "q_ellipse_search",
-    // round-10 wave-2: BPE — vocab induction amortizes behind the
-    // frozen-artifact memo (build step; near-zero warm), tokenization
-    // is the real per-corpus scan being measured
-    "q_bpe_vocab", "q_bpe_tokens", "q_chunk_bpe",
-    // round-10 wave-3: the clustering consumers of the stored IVF
-    // model — cluster profiling (scan + 8-key aggregate) and
-    // SemDeDup (cluster-blocked pair join) — and the phase-fold
-    // composition over the periodogram
-    "q_kmeans_profile", "q_semdedup", "q_period_fold",
-    // and mixture planning (corpus-wide hash-ordered sampling window)
-    "q_source_mix",
-    // round-10 wave-4: corpus-global line dedup (segment-df join +
-    // ordered reassembly — regresses silently if the count-aggregated
-    // join-back ever becomes a posting-list product) and the
-    // zero-shuffle hashed-feature quality gate
-    "q_line_dedup", "q_quality_classifier",
-    // round-10 wave-5: friends-of-friends (pointer-jumping CC over
-    // the zone pair graph — the iterative op most exposed to a
-    // convergence regression), the bigram-LM gate (vocabulary-keyed
-    // joins), the PII regex scan, and the CMS sketch fold
-    "q_fof_groups", "q_lm_score", "q_pii_scrub", "q_sketch_cms",
-    // round-10 wave-6: the Landy–Szalay correlation function — three
-    // zone-grid pair streams into combinable bin counts
-    "q_two_point_corr",
-    // round-11: multi-band photometry — per-(object, band) stats and
-    // the conditional-aggregation color index — and the subsampled
-    // correlation-function scale path (should bench WELL below the
-    // full statistic; regression here means the sample stopped
-    // composing upstream of the pair streams)
-    "q_lightcurve_band", "q_color_index", "q_two_point_sampled",
-    // the streamed LSM store's read path (r17): warm path must scan
-    // the compaction-bounded partials store, never the raw events —
-    // regresses toward q_lightcurve_band's time if the store stops
-    // answering from its fold
-    "q_lightcurve_band_stored",
-    // r18: the LSM's per-batch arrival telemetry — one partials-store
-    // scan into a 5-row zero-filled aggregate; regresses if the read
-    // stops riding the compaction-bounded store (build amortizes with
-    // q_lightcurve_band_stored)
-    "q_lc_stream_batches",
-    // round-11 wave-2: the structure function — the per-object pair
-    // stream (cadence-bounded quadratic) into lag-binned cells;
-    // regresses silently if the pair join stops being per-object
-    "q_structure_function",
-    // and the visit-calibration join (broadcast visit aggregate over
-    // one source scan — regresses silently if the join-back ever
-    // shuffles the source side)
-    "q_visit_calib",
-    // round-11 wave-3: astrometric fit (one object-key shuffle),
-    // source-pair KMV overlap (bounded-heap bottom-K + exact twin),
-    // and DSIR importance scoring (control-plane histogram + one
-    // codegen fold pass — regresses if scoring ever grows a join)
-    "q_proper_motion", "q_source_overlap", "q_importance_weight",
-    // r18: the annual-parallax fit — same one-exchange shape as
-    // q_proper_motion (shared window/aggregate shuffle + a per-row
-    // Cramer chain); a blowup means the trig lookup left codegen or
-    // the reduced frame grew a join
-    "q_parallax",
-    // r19: the fit's goodness-of-fit twin — the same one-exchange
-    // 17-sum aggregate + per-row residual chains; must bench
-    // ~q_parallax (a blowup means the RSS grew a residual pass)
-    "q_astrom_chi2",
-    // offset-free span dedup — the ×L window explode through the
-    // fp-keyed rank; the most expensive text pass by design, watch
-    // that the window stays fp-partitioned (a doc-keyed sort here
-    // would be a silent quadratic regression)
-    "q_span_dedup",
-    // robust sigmaMAD — two object-keyed rank passes; regresses if
-    // the two windows stop sharing one object partitioning
-    "q_mad",
-    // tokenizer fertility — one codegen tokenization scan + a 20-key
-    // aggregate; regresses if the scan grows an explode or a join
-    "q_bpe_fertility",
-    // annular profile (the cone scan + one ~10-key aggregate) and the
-    // chromatic-variability pairing (two object-prefixed shuffles)
-    "q_radial_profile", "q_crossband_corr",
-    // shard-mix diversity — RankSplit running weight + two combinable
-    // aggregates; regresses if the global cumsum becomes one window
-    "q_mix_diversity",
-    // recall telemetry — both searches / both pair generations + one
-    // join; the monitored eval queries, so their cost belongs in the
-    // artifact too
-    "q_ann_recall", "q_dedup_recall",
-    // r19: the estimator-calibration census — candidates from the
-    // SAME df-capped index join + a per-row signature fold; regresses
-    // if the match count ever explodes the 128-long arrays
-    "q_minhash_err",
-    // r17: the nprobe sweep — the x3 explode must stay on the candidate
-    // sliver; regresses if a per-operating-point corpus rescan appears
-    "q_ann_recall_curve",
-    // drift monitor — broadcast midpoint + one combinable histogram
-    "q_value_drift",
-    // completeness curve — the association grid + a flag join-back
-    "q_completeness",
-    // round-12: the stored nightly-association lifecycle — first
-    // sample builds the halo table + appends the batches, the median
-    // reports the warm telemetry scan production actually runs
-    // (regresses if the replay guard breaks and batches re-associate)
-    "q_assoc_history",
-    // and its transient half — warm cost is the stored-table scan +
-    // one combinable aggregate; the build amortizes with q_assoc_history
-    "q_transient_rate",
-    // the stored-layout self cross-match: the benchable zero-exchange
-    // proof of the chunk-overlap design, vs q_zone_xmatch's in-plan
-    // grid (regresses if halo completeness or bucket co-location breaks)
-    "q_xmatch_stored",
-    // round-13: perceptual (dHash-family) blob near-dup — one binary
-    // decode pass into 4-int signatures, capped piece blocking;
-    // regresses if the candidate join stops being block-capped
-    "q_blob_phash",
-    // the reprocessing campaign: stored detection archive × stored
-    // catalog, both at rest in one bucketing — the only zero-exchange
-    // two-table association; regresses if either side starts moving
-    "q_xmatch_reprocess",
-    // the steady-state LSM read: bucketed base probe + broadcast
-    // delta sliver; regresses if the delta join stops broadcasting
-    // (first sample builds the delta store; warm is the read path)
-    "q_assoc_delta",
-    // forced photometry from the stored match table: one det_k join +
-    // a combinable obj_k aggregate; regresses if photometry ever
-    // re-runs the spatial match instead of reading the store
-    "q_forced_phot",
-    // r19: the gate's injection-recovery census — one extra gate
-    // pass over a 2x signature table; regresses if the injection
-    // ever touches the bytes instead of the 4-int signatures
-    "q_phash_recovery",
-    // the stored perceptual index: warm path is one piece-table scan
-    // + the capped block self-join (no decode, no join-back) — should
-    // bench BELOW the in-plan q_blob_phash; first sample builds
-    "q_blob_phash_stored",
-    // per-batch arrival telemetry over the STREAMED pairs store: warm
-    // path is one partitioned-store scan + a 3-group aggregate;
-    // regresses if the read stops pruning to the pairs store (first
-    // sample builds the streamed lifecycle)
-    "q_blob_phash_batches",
-    // cross-modal dup telemetry: one decode pass to signatures, two
-    // capped blockings (pieces + md5-caption), caption strings move
-    // only for the surviving pairs — regresses if either graph goes
-    // all-pairs
-    "q_modal_mismatch",
-    // round-14: Stetson J/K — one (object, band) shuffle shared by
-    // the group windows, the lead() pairing, and the final aggregate;
-    // regresses if the windows stop sharing a single sort or the
-    // linear consecutive-pair J ever becomes a self-join
-    "q_stetson",
-    // exact two-sample KS drift gate — one (source, value) histogram
-    // aggregate + windows over the tiny dense grid; regresses if the
-    // grid ever joins back against documents instead of the histogram
-    "q_ks_drift",
-    // its pre-sampled 100-TB path: same shape, md5 sample pushed to
-    // the scan — regresses if the sample predicate stops pruning
-    // before the histogram aggregate
-    "q_ks_drift_sampled",
-    // mergeable daily-HLL distinct telemetry — two combinable
-    // aggregates whose shuffle carries KB sketch blobs; regresses if
-    // the exact twin's expand ever dominates or the merge re-scans
-    "q_sketch_hll_merge",
-    // von Neumann η — one (object, band) shuffle shared by the lag
-    // window and the exact-bigint aggregate
-    "q_eta",
-    "q_theil_sen",
-    "q_dcf",
-    // perceptual dedup clusters — pair generation + the sliver-only
-    // label loop; regresses if singletons ever enter the iteration
-    "q_blob_clusters",
-    // irregular grouping sets — one scan, Expand ×3, one combinable
-    // aggregate; regresses if the three reports ever become three scans
-    "q_grouping_sets",
-    "q_hash_sample",
-    "q_kmv_overlap",
-    // batched director-index lookup over the stored bucket layout —
-    // regresses if the obkt IN-list stops partition-pruning or the
-    // warm index cache stops short-circuiting the build
-    "q_object_lookup_many",
-    // generalized Lomb-Scargle on the 16-period grid — regresses if
-    // the trig lookup leaves codegen or the x16 explode stops
-    // combining map-side; the banded form shares the chain with band
-    // appended to the key (regresses if the key split ever shuffles
-    // twice)
-    "q_lomb_scargle", "q_lomb_scargle_band",
-    // r17: the dof-aware F readout and the coadd — both must bench as
-    // their parent one-shuffle shapes (GLS reduced frame + per-row
-    // math; the banded aggregate with per-row weights)
-    "q_gls_fstat", "q_coadd_flux",
-    // the joint multiband statistic — regresses if the pivot ever
-    // becomes a join or the band sums leave the reduced frame
-    "q_multiband_gls",
-    // BLS transit search — the same x16 explode with a 35-column
-    // conditional pivot aggregate; regresses if the window argmax
-    // (one greatest over 48 structs) ever becomes a join or window
-    "q_bls",
-    // the BLS composition gate (r17): same frame with the dip-only
-    // argmax — must bench ~q_bls; a blowup means the dip restriction
-    // broke the single wide-aggregate shape
-    "q_transit_candidates",
-    // and the secondary-eclipse vetting — four more integer fields in
-    // the window structs, same single wide aggregate; a blowup means
-    // the antiphase readout became a join or second pass
-    "q_secondary_eclipse",
-    // r18: the injection-recovery completeness census — the same one
-    // wide BLS aggregate over a bounded ~6.75x augmented series;
-    // regresses if the injection explode stops combining map-side or
-    // the census grows a second corpus pass
-    "q_transit_recovery",
-    // and the vetting's twin-dip census — the secondary-eclipse wide
-    // aggregate over a x6 augmented series; same regression modes
-    "q_eb_recovery",
-    // r19: the censuses' registered 25% md5 object samples — each
-    // must bench WELL below its full census (the predicate sits on
-    // the series scan, below the injection explode; a near-equal
-    // time means the sample stopped pruning the augmented build)
-    "q_transit_recovery_sampled", "q_eb_recovery_sampled",
-    // Lafler-Kinman — the lag window must SHARE the (object, period)
-    // shuffle with the sums aggregate; regresses if a second
-    // exchange appears between them
-    "q_lafler_kinman",
-    // r19: conditional entropy — the one corpus-scale exchange is
-    // the (object, period, phase, mag) cell aggregate; regresses if
-    // the n_i window or the argmax ever leaves the reduced cell frame
-    "q_ce_period",
-    // hard-negative band mining — regresses if the band predicate
-    // leaves codegen or the probe side stops broadcasting
-    "q_hard_negatives", "q_ann_mips",
-    // curriculum phases — regresses if the global order leaves the
-    // histogram-split path for a one-task window
-    "q_curriculum", "q_funnel_time", "q_blob_qa",
-    // r16 variability features — each ONE (object, band) shuffle
-    // shared by its windows and final aggregate; regress if a second
-    // exchange ever appears between window and aggregate
-    "q_beyond1std", "q_rcs", "q_max_slope", "q_flux_ratio",
-    // r16 corpus telemetry: zero-join lexical diversity (regresses if
-    // the per-doc expression grows a shuffle) and the gram-keyed
-    // novelty census (regresses if the join-back stops riding the
-    // reduced postings-min frame)
-    "q_ttr", "q_ngram_novelty",
-    // language-gate confusion matrix — one scorer scan + two tiny
-    // aggregates; regresses if the row totals stop broadcasting
-    "q_lang_confusion",
-    "q_phase_coverage",
-    // dedup threshold calibration sweep — regresses if the candidate
-    // floor stops riding the df-capped index or the x10 explode
-    // leaves the pair sliver
-    "q_dedup_threshold_curve",
-    // threshold/range vector search — regresses if the integer
-    // membership predicate leaves codegen or the probe side stops
-    // broadcasting
-    "q_ann_range",
-    "q_harmonic_fit",
-    "q_outlier_epochs",
-    "q_crowding",
-    "q_repeatability",
-    "q_embedding_qa",
-    "q_changepoint",
-    "q_cadence",
-    "q_split_leakage",
-    "q_ann_recall_ivfpq",
-    "q_skewness",
-    "q_kurtosis",
-    "q_amplitude",
-    // round-15 late additions: the per-object export pack (regresses
-    // if the sort_array pack stops being one object-key shuffle), the
-    // batched cone probes (regresses if the probe side stops
-    // broadcasting or the dec-band prune leaves codegen), and the
-    // one-row source-concentration census
-    "q_lightcurve_pack",
-    "q_cone_search_many",
-    "q_gini",
-    // composed variability x periodicity gate — regresses if either
-    // parent frame stops reducing before the join
-    "q_periodic_candidates",
-    // round-16: the fast batch — every REMAINING registered query
-    // (mostly sub-second A/B singles and the blob/metadata entries),
-    // so BENCH_FULL covers the complete SparkEntry surface and a 10x
-    // regression in any registered entry is visible in the round
-    // artifact instead of hiding in unbenched code (r15 queue #1).
-    // Grouped, not curated: the watch commentary lives with the
-    // entries above; these are here for coverage.
-    "q_having", "q_window_topn", "q_window_running", "q_distinct_count",
-    "q_percentiles", "q_semi_join", "q_anti_join", "q_rollup", "q_cube",
-    "q_skew_join", "q_topn_idiom", "q_pivot", "q_case_pivot",
-    "q_corr_subquery", "q_full_outer", "q_nullsafe_join", "q_benford",
-    "q_percentile_disc", "q_histogram", "q_weighted_median", "q_unpivot",
-    "q_set_ops", "q_string_agg",
-    "q_variability_class", "q_lightcurve_delta", "q_time_bucket",
-    "q_event_json", "q_anomaly", "q_first_last",
-    "q_object_lookup", "q_streaks", "q_transitions", "q_running_distinct",
-    "q_autocorr", "q_lightcurve_trend",
-    "q_cone_search", "q_box_search", "q_spatial_density",
-    // r17: one catalog scan + per-row trig + an 18-key aggregate —
-    // regresses only if the trig expression falls out of codegen
-    "q_galactic_density",
-    "q_dedup_exact", "q_dedup_lsh_pairs", "q_dedup_simhash",
-    "q_ngram_jaccard", "q_cluster_sizes", "q_dedup_embedding",
-    "q_degree_dist", "q_dup_ratio",
-    "q_ann_filtered", "q_ann_lsh", "q_ann_range_lsh", "q_ann_range_recall",
-    "q_lang_id", "q_token_count", "q_fingerprint", "q_sample_stratified",
-    "q_blob_meta", "q_blob_features", "q_blob_framesample", "q_blob_dedup",
-    "q_sketch_distinct", "q_sketch_quantile",
-    "q_profile", "q_constraints",
-    "q_rfm", "q_cohort_ltv", "q_audience_overlap", "q_sequence_match",
-    // round-16 continuation: Q13/Q11 report shapes (regress if the
-    // outer-join filter slides into a WHERE or the global scalar
-    // stops broadcasting), the post-dedup survivor census, and the
-    // MOPS tracklet census (regresses if the pair stage stops riding
-    // the zone grid)
-    "q_order_count_dist", "q_global_share", "q_dedup_survivors",
-    // r17: Q18 — the pre-join HAVING aggregate must keep the joins on
-    // the qualifying sliver; and the ambiguity census — one grid pass
-    // + sliver windows, regresses if the windows hit the detection table
-    "q_large_orders", "q_xmatch_ambiguous",
-    // r18: Q21 — both correlated subqueries must stay ONE combinable
-    // order-key self-aggregate; a blowup means the fact table started
-    // self-joining row-to-row
-    "q_waiting_suppliers",
-    // r18 wave 2: Q7 (both dims must shrink to the two nations BEFORE
-    // the fact joins), Q10 (TakeOrdered on the reduced aggregate,
-    // never a fact-table sort), Q19 (the part-side implicate of the
-    // disjunction must stay pushed into the part scan)
-    "q_nation_trade", "q_returned_customers", "q_promo_parts",
-    // Q17: the correlated per-part average must stay a decorrelated
-    // aggregate of the pinned brand sliver — a blowup means the
-    // sliver re-derived per side or the avg became a window
-    "q_small_quantity",
-    // r19: the remaining classic report shapes, completing the
-    // Q1-Q22 family. Q2: the correlated MIN must stay ONE link
-    // aggregate + witness join (a blowup means the subquery
-    // re-correlated per part); Q4: the EXISTS must stay LeftSemi
-    // (never an inner join + distinct); Q6: pure scan-local — any
-    // exchange beyond the 1-row aggregate is a regression; Q8/Q9:
-    // dim slivers must shrink their fact side BEFORE the fact joins;
-    // Q12/Q14: one conditional aggregate, no second pass for the
-    // denominators; Q15: the scalar max must broadcast onto the
-    // reduced supplier frame (never a global window); Q16: the
-    // NOT-IN must stay a broadcast LeftAnti; Q20: the (part,supp)
-    // aggregate is pinned — a blowup means the fact scanned twice
-    "q_min_acct_supplier", "q_order_priority", "q_revenue_forecast",
-    "q_market_share", "q_nation_profit", "q_shipmode_priority",
-    "q_promo_revenue", "q_top_supplier", "q_part_supplier_census",
-    "q_dominant_suppliers",
-    "q_tracklets", "q_track_chains",
-    // the per-track motion fit (r17): rides the same pinned pair
-    // sliver as the chain census plus ONE detection-table equi-join —
-    // regresses if the melt lookup ever becomes three scans
-    "q_track_motion",
-    // and its registered 25% mid-key sample — must bench WELL below the
-    // full readout or the pushdown below the chain join broke
-    "q_track_motion_sampled",
-    // portable bloom sketch — regresses if the probe join stops
-    // riding the vocabulary-sized frames
-    "q_sketch_bloom")
+    "q_asof_join")
 
-  /** The rounds-1/2 cross-round set — the only totals comparable
-    * across every round; reported as its own `headline10` object. */
-  val headline10: Seq[String] = headline.take(10)
+  /** Every registered query: [[headline10]] first, then the rest of
+    * [[SparkEntry.queries]] in sorted order, so the artifact covers
+    * the complete surface by construction. What each query's time
+    * should look like is written at its definition ("Bench watch"). */
+  def headline: Seq[String] =
+    headline10 ++ SparkEntry.queries.keySet.diff(headline10.toSet).toSeq.sorted
 
   def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -430,21 +42,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local test files are ~1-10 MB; the 128 MB default split would
-      // scan each table in one task. On a real cluster the inputs are
-      // many-file and this setting is irrelevant; here it restores the
-      // scan parallelism the cluster would naturally have.
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -465,22 +63,15 @@ object Bench {
       System.gc()
     }
 
+    val unregistered = headline10.filterNot(SparkEntry.queries.contains)
+    require(unregistered.isEmpty,
+      s"headline10 names not registered in SparkEntry: ${unregistered.mkString(", ")}")
+
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b runs an isolated subset — the
     // forensic mode for "did this query regress or did the suite?".
     // A name that matches nothing is a failed forensic run, not an
     // empty one: misspelling the query must not silently conclude
     // "did not regress" for a query that never executed.
-    // The bench map must cover the COMPLETE registered surface — a
-    // registered query missing here is invisible to the round
-    // artifact, so a 10x regression in it can't be seen (r15 found 66
-    // such blind spots). Fail loudly in either direction.
-    val unregistered = headline.filterNot(SparkEntry.queries.contains)
-    require(unregistered.isEmpty,
-      s"bench names not registered in SparkEntry: ${unregistered.mkString(", ")}")
-    val unbenched = SparkEntry.queries.keySet.diff(headline.toSet)
-    require(unbenched.isEmpty,
-      s"registered queries missing from the bench map: ${unbenched.toSeq.sorted.mkString(", ")}")
-
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     for (o <- only) {
@@ -488,8 +79,7 @@ object Bench {
       require(unknown.isEmpty,
         s"SPARK_GRAFT_BENCH_ONLY names not in the headline list: ${unknown.mkString(", ")}")
     }
-    val names = headline.filter(SparkEntry.queries.contains)
-      .filter(n => only.forall(_.contains(n)))
+    val names = headline.filter(n => only.forall(_.contains(n)))
     require(names.nonEmpty, "no queries selected to bench")
     materialize(names.head) // warm-up: JVM + codegen + parquet footer cache
     quiesce()
@@ -504,15 +94,21 @@ object Bench {
         // 81 s in-suite vs 31.6 s isolated in r19). Drop the PREVIOUS
         // sample's now-dead blocks before timing the next one; no
         // System.gc here (per-sample full GC was measured in r8 to
-        // inflate sub-second queries 15-20%). The timed region is
-        // unchanged: unpersist runs strictly outside t0..t1.
+        // inflate sub-second queries 15-20%). The sample's DataFrame
+        // cache entries go too: left in the CacheManager, samples
+        // 2..n would replay an InMemoryRelation over the dropped
+        // blocks. The timed region is unchanged: both evictions run
+        // strictly outside t0..t1.
         val before = spark.sparkContext.getPersistentRDDs.keySet
         val t0 = System.nanoTime()
         materialize(name) // throws on failure: a broken query fails the bench
         val dt = (System.nanoTime() - t0) / 1e9
-        if (i < iters) spark.sparkContext.getPersistentRDDs
-          .filter { case (id, _) => !before.contains(id) }
-          .values.foreach(_.unpersist(true))
+        if (i < iters) {
+          spark.sparkContext.getPersistentRDDs
+            .filter { case (id, _) => !before.contains(id) }
+            .values.foreach(_.unpersist(true))
+          spark.catalog.clearCache()
+        }
         dt
       }
       quiesce()

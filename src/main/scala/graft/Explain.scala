@@ -1,22 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev tool: dump formatted plans for the headline queries (plan
-  * audit: pushdown, pruning, join strategies, codegen spans). */
+/** Plan audit: dump formatted plans of the named registry queries
+  * (default: [[Bench.headline10]]) for pushdown, pruning, join
+  * strategies and codegen spans, under the same session settings
+  * [[Bench]] times them with:
+  * `sbt "runMain graft.Explain q_a q_b"` against `SPARK_GRAFT_SF_DIR`. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else Bench.headline
+    val names = if (args.nonEmpty) args.toSeq else Bench.headline10
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     // SPARK_GRAFT_EXPLAIN_EXECUTE=1: materialize first, then print the
     // FINAL adaptive plan (AQE join selection, stage/exchange reuse,
     // skew splits are only visible post-execution).

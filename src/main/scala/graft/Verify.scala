@@ -1,8 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.util.control.NonFatal
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/parity.py`). A
+  * failing query does not stop the dump, but the run exits non-zero
+  * naming every failed query and its exception class. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -10,24 +12,7 @@ object Verify {
     // re-verification of one oracle without the full 100+-query dump
     val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // dogfood the library's own extension point: SQL functions,
-      // TopK strategy and the row_number-rewrite rule are active for
-      // every verified query
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries INT64 TIMESTAMP(NANOS) which Spark 4
-      // refuses by default; read as Long (nanos since epoch).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // restore cluster-like scan parallelism on the small local files
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // JSON string escape (shared by the marker and oracle dumps below)
     def q(s: String): String = "\"" + s.flatMap {
@@ -61,12 +46,16 @@ object Verify {
       Files.writeString(markerPath,
         names.toSeq.sorted.map(q).mkString("[", ",", "]"))
     }
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name))
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+    val failed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      if (!selected(name)) None
+      else
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(s"$name (${e.getClass.getName})")
         }
     }
     // ALWAYS dump the full oracle map, even in subset mode: a focused
@@ -78,5 +67,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

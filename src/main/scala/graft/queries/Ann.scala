@@ -153,7 +153,10 @@ object Ann {
     * guaranteed-exact set for bucket recall — registered exact
     * because range semantics define correctness by the THRESHOLD, and
     * the recall-telemetry discipline (q_ann_recall*) already covers
-    * the approximate families. */
+    * the approximate families.
+    *
+    * Bench watch: regresses if the integer membership predicate
+    * leaves codegen or the probe side stops broadcasting. */
   def qAnnRange(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = Tables.embeddings(s, dir).select($"vec_id",
@@ -342,7 +345,10 @@ object Ann {
     * Scale shape: one broadcast probe pass over the corpus scan with
     * a per-row codegen band predicate (no shuffle before the
     * top-k); at 100 TB the band test composes with the sign-bucket
-    * candidate generation exactly as [[qAnnRangeLsh]] does. */
+    * candidate generation exactly as [[qAnnRangeLsh]] does.
+    *
+    * Bench watch: regresses if the band predicate leaves codegen or
+    * the probe side stops broadcasting. */
   def qHardNegatives(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = Tables.embeddings(s, dir).select($"vec_id",
@@ -682,7 +688,10 @@ object Ann {
     * [[qAnnIvf]] candidate join, broadcast probes), the ×|sweep|
     * explode applies to the CANDIDATE sliver only, and the exact side
     * is the fixed [[NQueries]] probe sample as in every recall
-    * query. */
+    * query.
+    *
+    * Bench watch: the x3 explode must stay on the candidate sliver;
+    * regresses if a per-operating-point corpus rescan appears. */
   def qAnnRecallCurve(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = intEmb(s, dir)
@@ -1222,10 +1231,10 @@ object Ann {
       // aggregate input rows and 512 grouping keys for the identical
       // integer sums (bit-for-bit: Σ per (m, code, d) is
       // order-independent either way). At sf0.1 the two shapes time
-      // identically (~1.2 s JIT-warm, interleaved A/B in
-      // [[graft.tools.ProfIvfPq]] — the apparent 3→1 s win was JIT
-      // warmup); the 8× row reduction is kept for the scale path,
-      // where aggregate input rows dominate fixed overhead.
+      // identically (~1.2 s JIT-warm, interleaved A/B in one JVM —
+      // the apparent 3→1 s win was JIT warmup); the 8× row
+      // reduction is kept for the scale path, where aggregate input
+      // rows dominate fixed overhead.
       val dimSums = (0 until PqSub).map(d =>
         sum(expr(s"iv[m * $PqSub + $d]")).as(s"s$d"))
       val stats = withCodes(e.select($"vec_id", $"iv"), cent)
@@ -1349,7 +1358,11 @@ object Ann {
     * encode scan (the [[graft.functions.PqEncode]] codegen kernel) +
     * a map-side ×[[PqM]] subspace explode on 8-dim slices into a
     * combinable [[PqM]]-key aggregate; the codebook rides as a
-    * 512-long literal. */
+    * 512-long literal.
+    *
+    * Bench watch: one encode scan + a x8 subspace explode into an
+    * 8-key aggregate; regresses if the error fold ever joins back per
+    * subspace instead of riding the literal. */
   def qPqDistortion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = intEmb(s, dir)
@@ -1872,6 +1885,8 @@ object Ann {
     pqRerank(e, pqAdcCandidates(codes, qdf), qdf)
   }
 
+  /** Bench watch: regresses silently if the k-means + LUT ADC fold
+    * discipline breaks. */
   def qAnnPq(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = intEmb(s, dir)

@@ -304,7 +304,10 @@ object Bpe {
     * Scale shape: the tokenization is the same single codegen corpus
     * pass as [[qBpeTokens]] (K nested literal replaces, no explode),
     * then ONE combinable aggregate on the source key — fertility at
-    * 100 TB costs the corpus scan it cannot avoid and nothing else. */
+    * 100 TB costs the corpus scan it cannot avoid and nothing else.
+    *
+    * Bench watch: regresses if the tokenization scan grows an explode
+    * or a join. */
   def qBpeFertility(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val merges = mergesFor(s, dir)

@@ -101,7 +101,10 @@ object CoreOlap {
     * the two joins then carry that sliver against orders and customer
     * (AQE broadcasts the filtered side at runtime — no hint, the
     * q03 discipline, since all three inputs are fact-scale at the
-    * 100 TB target). */
+    * 100 TB target).
+    *
+    * Bench watch: the pre-join HAVING aggregate must keep the joins
+    * on the qualifying sliver. */
   def qLargeOrders(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val big = Tables.lineitem(s, dir)
@@ -150,7 +153,11 @@ object CoreOlap {
     * The qualifying sliver then joins orders on the order key (AQE
     * broadcasts the sliver at runtime), the per-supplier count is a
     * ~|supplier|-key aggregate, and only supplier/nation (true dims)
-    * join after. */
+    * join after.
+    *
+    * Bench watch: both correlated subqueries must stay ONE combinable
+    * order-key self-aggregate; a blowup means the fact table started
+    * self-joining row-to-row. */
   def qWaitingSuppliers(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // r20: the two exact distincts + max planned as Expand ×3 — every
@@ -226,7 +233,10 @@ object CoreOlap {
     * the scan; the fact joins then carry only the doubly-restricted
     * sliver, and the report is a ≤|2×2×years|-key combinable
     * aggregate. Revenue follows the house exact-cents discipline
-    * ([[sumScaled]]). */
+    * ([[sumScaled]]).
+    *
+    * Bench watch: both dims must shrink to the two nations BEFORE the
+    * fact joins. */
   def qNationTrade(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val nat = Tables.nation(s, dir)
@@ -290,7 +300,10 @@ object CoreOlap {
     * dim) broadcasts; the top-20 is (revenue DESC, c_custkey) — a
     * total order, so the LIMIT is deterministic — resolved by
     * TakeOrdered on the |customers|-bounded aggregate, never a global
-    * sort of the fact table. */
+    * sort of the fact table.
+    *
+    * Bench watch: TakeOrdered on the reduced aggregate, never a
+    * fact-table sort. */
   def qReturnedCustomers(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val li = Tables.lineitem(s, dir).filter($"l_returnflag" === "R")
@@ -352,7 +365,10 @@ object CoreOlap {
     * the brands), so the join's build side is the qualifying part
     * sliver, not the part table; the residual OR evaluates on the
     * joined row inside codegen; one ≤3-key combinable aggregate
-    * after. */
+    * after.
+    *
+    * Bench watch: the part-side implicate of the disjunction must
+    * stay pushed into the part scan. */
   def qPromoParts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     def legConds = PromoLegs.map { case (brand, szMax, qLo, qHi) =>
@@ -404,7 +420,10 @@ object CoreOlap {
     * aggregate OF THAT SAME SLIVER (never a second fact scan — the
     * sliver is localCheckpoint-pinned so the self-join's two readers
     * share one materialization), joined back on the part key; the
-    * report is a single global row. */
+    * report is a single global row.
+    *
+    * Bench watch: a blowup means the brand sliver re-derived per side
+    * or the avg became a window. */
   def qSmallQuantity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pb = Tables.part(s, dir).filter($"p_brand" === SmallQtyBrand)
@@ -485,7 +504,11 @@ object CoreOlap {
     * (part, acct_c100) equality returns ties exactly as the textbook
     * form does. Nation/region are broadcast dims; the link DISTINCT
     * is the only fact-table shuffle, and it runs AFTER the part-
-    * sliver semi-restriction so only the sliver's lineitems move. */
+    * sliver semi-restriction so only the sliver's lineitems move.
+    *
+    * Bench watch: the correlated MIN must stay ONE link aggregate +
+    * witness join; a blowup means the subquery re-correlated per
+    * part. */
   def qMinAcctSupplier(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val regSup = Tables.supplier(s, dir)
@@ -547,7 +570,10 @@ object CoreOlap {
     * orders are never duplicated by their multi-line matches, so no
     * DISTINCT is needed downstream — and the date window prunes the
     * orders scan BEFORE the join. The report is a 5-key combinable
-    * aggregate. */
+    * aggregate.
+    *
+    * Bench watch: the EXISTS must stay LeftSemi (never an inner join
+    * + distinct). */
   def qOrderPriority(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ret = Tables.lineitem(s, dir).filter($"l_returnflag" === "R")
@@ -585,7 +611,10 @@ object CoreOlap {
     * Scale shape: at 100 TB this is THE predicate-pushdown showcase —
     * the date window reaches the parquet scan as a pushed filter,
     * the two value predicates run in the scan stage, and the single
-    * aggregate is map-side partial + one 1-row exchange. */
+    * aggregate is map-side partial + one 1-row exchange.
+    *
+    * Bench watch: pure scan-local; any exchange beyond the 1-row
+    * aggregate is a regression. */
   def qRevenueForecast(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.lineitem(s, dir)
@@ -628,7 +657,10 @@ object CoreOlap {
     * onto their fact side BEFORE the fact joins; the part sliver
     * prunes lineitem early; the report is one |years|-key combinable
     * conditional aggregate — the share never needs a second pass or a
-    * self-join of the market against itself. */
+    * self-join of the market against itself.
+    *
+    * Bench watch: the dim slivers must shrink the fact side BEFORE
+    * the fact joins. */
   def qMarketShare(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sup = Tables.supplier(s, dir).select($"s_suppkey", $"s_nationkey")
@@ -706,7 +738,10 @@ object CoreOlap {
     * with the filtered part table is the most selective edge, and AQE
     * broadcasts the sliver at runtime); orders contributes only the
     * year column; nation broadcasts onto supplier. One
-    * |nations × years|-key combinable aggregate. */
+    * |nations × years|-key combinable aggregate.
+    *
+    * Bench watch: the dim slivers must shrink the fact side BEFORE
+    * the fact joins. */
   def qNationProfit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pl = Tables.part(s, dir)
@@ -757,7 +792,10 @@ object CoreOlap {
     * Scale shape: the date window prunes the lineitem scan; the join
     * carries only (order key, priority); the report is a 2-key
     * combinable CASE aggregate — the canonical "join then conditional
-    * count" plan with zero extra exchanges. */
+    * count" plan with zero extra exchanges.
+    *
+    * Bench watch: one conditional aggregate, no second pass for the
+    * denominators. */
   def qShipmodePriority(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.lineitem(s, dir)
@@ -798,7 +836,10 @@ object CoreOlap {
     * Scale shape: the date window prunes the lineitem scan; part
     * contributes one flag column through an equi-join AQE resolves
     * (both sides fact-scale at 100 TB — no hint); ONE combinable
-    * conditional aggregate on the 12-key month axis. */
+    * conditional aggregate on the 12-key month axis.
+    *
+    * Bench watch: one conditional aggregate, no second pass for the
+    * denominators. */
   def qPromoRevenue(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.lineitem(s, dir)
@@ -847,7 +888,10 @@ object CoreOlap {
     * broadcast back onto that reduced frame (the [[qGlobalShare]]
     * global-scalar discipline — never a window over a single
     * partition); the supplier dim joins after the equality filter,
-    * touching only the winner(s). */
+    * touching only the winner(s).
+    *
+    * Bench watch: the scalar max must broadcast onto the reduced
+    * supplier frame (never a global window). */
   def qTopSupplier(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val rev = Tables.lineitem(s, dir)
@@ -895,7 +939,9 @@ object CoreOlap {
     * Scale shape: the NOT IN is a LeftAnti join against the tiny
     * excluded sliver (broadcast at runtime); the part sliver prunes
     * its scan on all three predicates; the census is one combinable
-    * count-distinct aggregate on the |brand × type × size| frame. */
+    * count-distinct aggregate on the |brand × type × size| frame.
+    *
+    * Bench watch: the NOT-IN must stay a broadcast LeftAnti. */
   def qPartSupplierCensus(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val excl = Tables.supplier(s, dir)
@@ -943,7 +989,10 @@ object CoreOlap {
     * the per-part total and the share filter read it — the
     * [[qSmallQuantity]] discipline, so the fact table is scanned
     * once; everything above runs on the |part × supplier| reduced
-    * frame, and the dims join a ≤|supplier|-row result. */
+    * frame, and the dims join a ≤|supplier|-row result.
+    *
+    * Bench watch: the (part, supp) aggregate is pinned; a blowup
+    * means the fact scanned twice. */
   def qDominantSuppliers(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pq = Tables.lineitem(s, dir)
@@ -1103,20 +1152,18 @@ object CoreOlap {
     // aggregates. Split into single-distinct branches (each plans as
     // a two-level aggregate over just its own column, no Expand) and
     // join on the 3-row flag key (broadcast). Result identical: same
-    // exact distinct counts, same rows.
+    // exact distinct counts, same rows. The branches join NULL-SAFE
+    // (`<=>`): GROUP BY keeps a NULL flag as its own group, and a
+    // plain equi-join would drop that group from the result.
     val li = Tables.lineitem(s, dir)
-    val orders = li.groupBy($"l_returnflag")
-      .agg(countDistinct($"l_orderkey").as("n_orders"))
-    val parts = li.groupBy($"l_returnflag")
-      .agg(countDistinct($"l_partkey").as("n_parts"))
-    val suppPart = li.groupBy($"l_returnflag")
-      .agg(countDistinct($"l_suppkey", $"l_partkey").as("n_supp_part"))
-    val totals = li.groupBy($"l_returnflag")
-      .agg(count(lit(1)).as("n"))
-    orders.join(parts, Seq("l_returnflag"))
-      .join(suppPart, Seq("l_returnflag"))
-      .join(totals, Seq("l_returnflag"))
-      .select($"l_returnflag", $"n_orders", $"n_parts", $"n_supp_part", $"n")
+    def branch(i: Int, agg: Column): DataFrame =
+      li.groupBy($"l_returnflag".as(s"f$i")).agg(agg)
+    branch(0, countDistinct($"l_orderkey").as("n_orders"))
+      .join(branch(1, countDistinct($"l_partkey").as("n_parts")), $"f0" <=> $"f1")
+      .join(branch(2, countDistinct($"l_suppkey", $"l_partkey").as("n_supp_part")),
+        $"f0" <=> $"f2")
+      .join(branch(3, count(lit(1)).as("n")), $"f0" <=> $"f3")
+      .select($"f0".as("l_returnflag"), $"n_orders", $"n_parts", $"n_supp_part", $"n")
       .orderBy($"l_returnflag")
   }
 
@@ -1222,7 +1269,10 @@ object CoreOlap {
     * (bit order = the declared column order, matching DuckDB's
     * GROUPING(...)). Spark expands the sets map-side (one Expand ×3)
     * into ONE combinable aggregate — three reports for one scan and
-    * one shuffle, where three separate queries would scan thrice. */
+    * one shuffle, where three separate queries would scan thrice.
+    *
+    * Bench watch: regresses if the three reports ever become three
+    * scans. */
   def qGroupingSets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.lineitem(s, dir)
@@ -2103,7 +2153,10 @@ object CoreOlap {
     * key; the first aggregate groups by that SAME key, so Catalyst
     * reuses the join's partitioning (one exchange each side, none
     * between join and aggregate — spec-pinned); the second aggregate
-    * runs on the |distinct counts|-row reduced frame. */
+    * runs on the |distinct counts|-row reduced frame.
+    *
+    * Bench watch: regresses if the outer-join filter slides into a
+    * WHERE. */
   def qOrderCountDist(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cust = Tables.customer(s, dir).select($"c_custkey")
@@ -2144,7 +2197,9 @@ object CoreOlap {
     * everything after lives on the |parts| frame with a broadcast
     * scalar — the filter can't be pushed below the aggregate (it
     * depends on the total), but it prunes before the presentation
-    * sort. */
+    * sort.
+    *
+    * Bench watch: regresses if the global scalar stops broadcasting. */
   def qGlobalShare(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // pin the reduced per-part frame: the global scalar and the final

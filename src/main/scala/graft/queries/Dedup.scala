@@ -207,7 +207,10 @@ object Dedup {
     * index join as q_ngram_jaccard (never all-pairs), the ×10
     * threshold explode is a bounded constant like the period grid,
     * and both aggregates run on the pair sliver; the final frame is
-    * 10 rows. */
+    * 10 rows.
+    *
+    * Bench watch: regresses if the candidate floor stops riding the
+    * df-capped index or the x10 explode leaves the pair sliver. */
   def qDedupThresholdCurve(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
@@ -393,7 +396,10 @@ object Dedup {
     * q_ngram_jaccard (never all-pairs), signatures attach by two
     * doc-key joins, the match count is a per-row zip_with fold over
     * the two 128-long arrays, and the census is a ≤10-key aggregate
-    * zero-filled on the decile literal. */
+    * zero-filled on the decile literal.
+    *
+    * Bench watch: regresses if the match count ever explodes the
+    * 128-long arrays. */
   def qMinhashErr(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
@@ -762,6 +768,8 @@ object Dedup {
       .orderBy($"d1", $"d2")
   }
 
+  /** Bench watch: regresses silently if the char-gram inverted-index
+    * blocking breaks. */
   def qDedupContain(s: SparkSession, dir: String): DataFrame =
     containPairs(Tables.documents(s, dir))
 
@@ -1053,8 +1061,6 @@ object Dedup {
     // counts on fixture graphs through this — race-free, unlike a
     // shared field, under sbt's concurrent suites)
     if (itersOut != null) itersOut.set(it)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged after $it iterations")
     require(converged,
       s"connected components did not converge in $maxIters iterations")
     // hand the (checkpointed — physically materialized, so re-rooting
@@ -1471,7 +1477,10 @@ object Dedup {
     * middle of duplication families? A doc that near-matches many
     * already-well-matched docs is boilerplate radiating through the
     * corpus — dedup pipelines rank by this to pick audit samples.
-    * Singletons are excluded (their rank is the constant base). */
+    * Singletons are excluded (their rank is the constant base).
+    *
+    * Bench watch: regresses silently if the active-set optimization
+    * breaks. */
   def qPageRank(s: SparkSession, dir: String): DataFrame =
     pageRank(ngramJaccardPairsCore(Tables.documents(s, dir)).select("d1", "d2"))
 
@@ -1787,7 +1796,10 @@ object Dedup {
     * a viral boilerplate segment fans out 1:1, never a posting-list
     * product — no cap needed, unlike the pair-generating stages
     * above); reassembly is one shuffle on doc_id with bounded per-doc
-    * state. Hot fps on the probe side are AQE skew-split. */
+    * state. Hot fps on the probe side are AQE skew-split.
+    *
+    * Bench watch: regresses silently if the count-aggregated
+    * join-back ever becomes a posting-list product. */
   def qLineDedup(s: SparkSession, dir: String): DataFrame =
     lineDedup(Tables.documents(s, dir))
 
@@ -2025,7 +2037,11 @@ object Dedup {
     * key whose cardinality grows with the corpus, so the sort is
     * tiny-group-per-partition (it is the fp-shuffle that carries the
     * cost, same exchange a groupBy would need); the per-doc roll-up
-    * is one combinable aggregate. Nothing joins a posting list. */
+    * is one combinable aggregate. Nothing joins a posting list.
+    *
+    * Bench watch: the most expensive text pass by design; the window
+    * must stay fp-partitioned (a doc-keyed sort here would be a
+    * silent quadratic regression). */
   def qSpanDedup(s: SparkSession, dir: String): DataFrame =
     spanDedup(Tables.documents(s, dir))
 
@@ -2512,7 +2528,10 @@ object Dedup {
     * everything after — the first-doc min, the gram-keyed join, the
     * |sources|-key rollup — runs on reduced frames. No per-gram
     * window (a boilerplate gram's posting list would hot-key it), no
-    * all-pairs anything. */
+    * all-pairs anything.
+    *
+    * Bench watch: regresses if the join-back stops riding the reduced
+    * postings-min frame. */
   def qNgramNovelty(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val grams = Tables.documents(s, dir)

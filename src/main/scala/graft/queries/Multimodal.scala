@@ -420,6 +420,8 @@ object Multimodal {
       .select($"d1", $"d2", $"hamming")
   }
 
+  /** Bench watch: regresses if the candidate join stops being
+    * block-capped. */
   def qBlobPhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // three consumers (piece explode + both verify sides) — pin the
@@ -465,7 +467,10 @@ object Multimodal {
     * production gate's capped equi-join — the census costs one extra
     * gate pass over a 2× signature table. Tallies zero-fill on the
     * 5-row cell literal (LEFT join + GREATEST — the r19 census
-    * discipline). */
+    * discipline).
+    *
+    * Bench watch: regresses if the injection ever touches the bytes
+    * instead of the 4-int signatures. */
   def qPhashRecovery(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val off = PhashInjOffset
@@ -701,7 +706,9 @@ object Multimodal {
     * Scale shape: the iterating frame is the edge-touching sliver
     * (dup rate × corpus); the pair generation is the capped blocking
     * above — nothing here is all-pairs, nothing iterates over the
-    * full corpus. */
+    * full corpus.
+    *
+    * Bench watch: regresses if singletons ever enter the iteration. */
   def qBlobClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sigs = phashSigs(s, dir).localCheckpoint(true)
@@ -1271,7 +1278,10 @@ object Multimodal {
     * [[blobBatch]] per batch, all replay-guarded); the DuckDB oracle
     * recomputes the full corpus pair set brute-force and re-derives
     * each pair's arrival batch, so the hash certifies the streamed
-    * store's CONTENT, not just its shape. */
+    * store's CONTENT, not just its shape.
+    *
+    * Bench watch: regresses if the read stops pruning to the pairs
+    * store (the first sample builds the streamed lifecycle). */
   def qBlobPhashBatches(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (_, pairsPath) = ensurePhashStream(s, dir)
@@ -1316,7 +1326,11 @@ object Multimodal {
     * ingest paid the decode once. First execution builds the index
     * (crashed partial builds rebuild — it is a derived cache, the
     * [[Ann.ivfStoredModel]] pattern); the measured warm path is one
-    * index scan + the capped block self-join. */
+    * index scan + the capped block self-join.
+    *
+    * Bench watch: the warm path is one piece-table scan + the capped
+    * block self-join (no decode, no join-back), so it should bench
+    * BELOW the in-plan q_blob_phash. */
   def qBlobPhashStored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val path = phashIndexPath(dir)
@@ -1430,7 +1444,9 @@ object Multimodal {
     * perceptual graph, md5(caption) blocks for the text graph — the
     * boilerplate-caption mega-group is dropped at [[PhashBlockCap]]
     * exactly like a monochrome signature block); caption strings
-    * move only for the surviving pair set. */
+    * move only for the surviving pair set.
+    *
+    * Bench watch: regresses if either candidate graph goes all-pairs. */
   def qModalMismatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // sigs: three consumers inside phashPairsOf + the text_dup verify

@@ -203,7 +203,10 @@ object Quality {
     * Scale shape: one corpus scan scores per-doc (codegen fold, the
     * q_quality_classifier bound), RankSplit's stages are combinable
     * / broadcast / cell-bounded, and the census is one combinable
-    * (phase, source) aggregate on the ranked frame. */
+    * (phase, source) aggregate on the ranked frame.
+    *
+    * Bench watch: regresses if the global order leaves the
+    * histogram-split path for a one-task window. */
   def qCurriculum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val k = CurriculumPhases
@@ -299,7 +302,10 @@ object Quality {
     * `cumB = cumTotal − cumA` avoids ever building the complement's
     * histogram. Bigint bounds: products stay under 2^63 up to
     * ~3·10^9 docs/side; past that, [[qKsDriftSampled]] is the
-    * registered pre-sampled path. */
+    * registered pre-sampled path.
+    *
+    * Bench watch: regresses if the grid ever joins back against
+    * documents instead of the histogram. */
   def qKsDrift(s: SparkSession, dir: String): DataFrame =
     ksDrift(s, Tables.documents(s, dir))
 
@@ -364,7 +370,10 @@ object Quality {
     * Past ~3·10⁹ docs/side the full query's bigint products overflow
     * and the KS n for any published sensitivity target is far smaller
     * anyway — this entry is that documented slice as a hash-checked
-    * query, not a comment. */
+    * query, not a comment.
+    *
+    * Bench watch: regresses if the sample predicate stops pruning
+    * before the histogram aggregate. */
   def qKsDriftSampled(s: SparkSession, dir: String): DataFrame =
     ksDrift(s, Tables.documents(s, dir)
       .where(Text.splitBucketCol < KsSampleMilli))

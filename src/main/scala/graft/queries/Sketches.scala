@@ -273,7 +273,10 @@ object Sketches {
     * aggregate whose output is |types|×|days| KB-sized blobs; the
     * merge shuffles only those blobs. The exact twin costs a real
     * distinct — it exists FOR the harness (drop `exact_users` /
-    * `in_bound` and the count-distinct expand disappears). */
+    * `in_bound` and the count-distinct expand disappears).
+    *
+    * Bench watch: regresses if the exact twin's expand ever dominates
+    * or the merge re-scans. */
   def qSketchHllMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = Tables.events(s, dir).select($"event_type", $"user_id",
@@ -472,7 +475,10 @@ object Sketches {
     * bit-key equi-join, |sources|-key aggregates. At 100 TB the
     * probe side rides the md5-bucket sample every *_sampled entry
     * uses (probing EVERY global fingerprint is corpus-sized by
-    * definition); the census semantics are unchanged per probe. */
+    * definition); the census semantics are unchanged per probe.
+    *
+    * Bench watch: regresses if the probe join stops riding the
+    * vocabulary-sized frames. */
   def qSketchBloom(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)

@@ -130,7 +130,10 @@ object Spatial {
     * cone reads only its overlapping zone partitions); the
     * (probe, salt) aggregate shuffles match rows only, holds ~1/16th
     * of a cone per group, and the outer digest folds ≤[[ConeSigSalts]]
-    * rows per probe. */
+    * rows per probe.
+    *
+    * Bench watch: regresses if the probe side stops broadcasting or
+    * the dec-band prune leaves codegen. */
   def qConeSearchMany(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val probes = ConeProbes.toDF("probe_id", "ra0", "dec0", "r")
@@ -430,7 +433,10 @@ object Spatial {
     * partition key ([[writeZonePartitioned]]), so the nightly job
     * never re-shuffles the big side — while detections take the ≤×9
     * explode. Unmatched detections (new transients) fall out and
-    * would feed an object-creation branch. */
+    * would feed an object-creation branch.
+    *
+    * Bench watch: regresses silently if the zone-grid blocking
+    * breaks. */
   def qXmatch2cat(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     gridCandidates(detections(s, dir).withColumnRenamed("det_k", "k"),
@@ -513,7 +519,9 @@ object Spatial {
     * Scale shape: the same one zone-grid pass as the association
     * itself; the rank and count windows share ONE detection-key
     * partitioning over the candidate sliver (never the detection
-    * table), then a combinable per-detection pivot of ranks 1-2. */
+    * table), then a combinable per-detection pivot of ranks 1-2.
+    *
+    * Bench watch: regresses if the windows hit the detection table. */
   def qXmatchAmbiguous(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -648,6 +656,8 @@ object Spatial {
         round($"decl2" * 1000000).cast("long").as("de2_u6"))
   }
 
+  /** Bench watch: regresses if the pair stage stops riding the zone
+    * grid. */
   def qTracklets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cand = trackletPairs(s, dir)
@@ -848,7 +858,10 @@ object Spatial {
     * checkpoint, the 28.4M-combination chain join and the output
     * sort, none of which the fit stage touched), but the plan drops
     * a corpus-scale join + wide aggregate — the part that grows at
-    * 100 TB. */
+    * 100 TB.
+    *
+    * Bench watch: regresses if the melt lookup ever becomes three
+    * scans. */
   def qTrackMotion(s: SparkSession, dir: String): DataFrame =
     trackMotionOver(trackletPairs(s, dir).localCheckpoint(true))
 
@@ -976,7 +989,10 @@ object Spatial {
     * every stage above all scale with the sample. Exact on its
     * slice — the spec reconciles it row-for-row against the full
     * readout filtered by the same predicate, and the oracle is the
-    * full readout's with the mid predicate spliced. */
+    * full readout's with the mid predicate spliced.
+    *
+    * Bench watch: must bench WELL below q_track_motion, or the
+    * pushdown below the chain join broke. */
   def qTrackMotionSampled(s: SparkSession, dir: String): DataFrame =
     motionFitOver(
       sampledChainFrame(
@@ -1591,6 +1607,14 @@ object Spatial {
     // ensure(), 3 batches × every store-backed query sample. The
     // guards below re-check after healing, so a crashed append still
     // heals exactly as before; only the nothing-to-do path changed.
+    //
+    // Invariant: a `batch_id=` dir implies a COMPLETE batch only once
+    // `Catalog.recoverAppends` has run on the store. An append stages
+    // its files and moves them into place after its manifest is
+    // written; a crash mid-move leaves a partial `batch_id=` dir that
+    // recovery rolls forward from that manifest. Both
+    // `healOwnedStore` calls (which run `recoverAppends`) must
+    // therefore stay BEFORE this check.
     def committed(path: String): Boolean = {
       val pd = new org.apache.hadoop.fs.Path(path, s"batch_id=$batchId")
       Catalog.tableComplete(s, path) &&
@@ -1941,7 +1965,11 @@ object Spatial {
     * re-execution appends nothing), then the telemetry is one
     * partition-pruned scan + a per-night aggregate. The DuckDB oracle
     * recomputes every night's association brute-force, so the hash
-    * check certifies the stored table's CONTENT, not just its shape. */
+    * check certifies the stored table's CONTENT, not just its shape.
+    *
+    * Bench watch: the first sample builds the halo table and appends
+    * the batches, the median reports the warm telemetry scan;
+    * regresses if the replay guard breaks and batches re-associate. */
   def qAssocHistory(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (matchPath, _) = ensureAssocStores(s, dir)
@@ -2050,7 +2078,10 @@ object Spatial {
     * the measured warm path is the campaign scan a survey actually
     * re-runs. The DuckDB oracle recomputes the association
     * brute-force, so the hash certifies both stored layouts'
-    * CONTENT. */
+    * CONTENT.
+    *
+    * Bench watch: the only zero-exchange two-table association;
+    * regresses if either stored side starts moving. */
   def qXmatchReprocess(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val haloTable = ensureHaloTable(s, dir)
@@ -2118,7 +2149,10 @@ object Spatial {
     * own position), which is the telemetry invariant this query
     * watches. Oracle recomputes both pair streams brute-force, so the
     * hash certifies the delta store's CONTENT through the read
-    * path. */
+    * path.
+    *
+    * Bench watch: regresses if the delta join stops broadcasting (the
+    * first sample builds the delta store; warm is the read path). */
   def qAssocDelta(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val haloTable = ensureHaloTable(s, dir)
@@ -2166,7 +2200,10 @@ object Spatial {
     * spatial work was paid once at association time and amortizes over
     * every photometry query. Oracle recomputes the association
     * brute-force, so the hash certifies the stored pairs' content
-    * through the photometry read. */
+    * through the photometry read.
+    *
+    * Bench watch: regresses if photometry ever re-runs the spatial
+    * match instead of reading the store. */
   def qForcedPhot(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (matchPath, _) = ensureAssocStores(s, dir)
@@ -2408,7 +2445,10 @@ object Spatial {
     * the order-free content pin.
     *
     * Scale shape: one catalog scan, per-row trig, ONE combinable
-    * aggregate on ≤18 keys. */
+    * aggregate on ≤18 keys.
+    *
+    * Bench watch: regresses only if the trig expression falls out of
+    * codegen. */
   def qGalacticDensity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     points(s, dir)
@@ -2482,25 +2522,21 @@ object Spatial {
     * here; the contracted loop converges in a handful). With the
     * adaptive length the group density is scale-free by
     * construction, so the iterating frame stays a bounded fraction
-    * of the data at any catalog size. */
-  /** The FoF linking-pair stream (d1, d2, band1, band2) — factored so
-    * [[graft.tools.ProfFof]] can time the grid pass apart from the CC
-    * closure. */
-  private[graft] def fofPairsForProf(s: SparkSession, dir: String): DataFrame = {
+    * of the data at any catalog size.
+    *
+    * Bench watch: the iterative op most exposed to a convergence
+    * regression; watch its round count and per-round cost. */
+  def qFofGroups(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pts = points(s, dir)
     val link = fofLinkDeg(pts.count())
     def bandOf(decl: Column): Column =
       floor(floor((decl + 90.0) / link) / FofBandZones).cast("long")
-    gridCandidates(pts, pts, link)
+    // the linking-pair stream (d1, d2, band1, band2)
+    val pairs = gridCandidates(pts, pts, link)
       .filter($"k1" < $"k2")
       .select($"k1".as("d1"), $"k2".as("d2"),
         bandOf($"decl1").as("band1"), bandOf($"decl2").as("band2"))
-  }
-
-  def qFofGroups(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = fofPairsForProf(s, dir)
     Dedup.contractedComponents(pairs)
       .groupBy($"cluster_id".as("group_id"))
       .agg(count(lit(1)).as("n_members"),
@@ -2632,7 +2668,11 @@ object Spatial {
     * sampling d and r by the SAME key predicate keeps |d| = |r|
     * exactly. Survey-scale runs tune [[TpcSampleHex]]; correctness is
     * scale-independent because both engines evaluate the identical
-    * md5 predicate. */
+    * md5 predicate.
+    *
+    * Bench watch: should bench WELL below q_two_point_corr; a
+    * near-equal time means the sample stopped composing upstream of
+    * the pair streams. */
   def qTwoPointSampled(s: SparkSession, dir: String): DataFrame =
     twoPointOver(hashSample(points(s, dir)), hashSample(randPoints(s, dir)))
 

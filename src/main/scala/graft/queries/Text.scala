@@ -134,7 +134,9 @@ object Text {
     * Scale shape: one document scan through the shared codegen
     * scorer into ONE combinable (label, predicted) aggregate —
     * ≤|langs|² cells; the row totals are a second aggregate OF that
-    * tiny frame, broadcast back. */
+    * tiny frame, broadcast back.
+    *
+    * Bench watch: regresses if the row totals stop broadcasting. */
   def qLangConfusion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // two consumers (cells + row totals) of one ≤|langs|²-row frame:
@@ -1115,7 +1117,9 @@ object Text {
     * global window would funnel the corpus through ONE task), then
     * two combinable aggregates ((shard, source) → shard). The
     * RankSplit input is a cheap projection re-derived per pass (its
-    * documented contract; the scan is the cost floor anyway). */
+    * documented contract; the scan is the cost floor anyway).
+    *
+    * Bench watch: regresses if the global cumsum becomes one window. */
   def qMixDiversity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val base = Tables.documents(s, dir).select($"doc_id", $"source",
@@ -1192,7 +1196,9 @@ object Text {
     * — and no interpreted higher-order fold, which was the previous
     * shape's whole cost), and the keep/drop coin is a per-row md5 —
     * at 100 TB the selection costs one streaming pass plus two tiny
-    * aggregates. */
+    * aggregates.
+    *
+    * Bench watch: regresses if scoring ever grows a join. */
   def qImportanceWeight(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
@@ -1428,7 +1434,10 @@ object Text {
     *
     * Scale shape: zero joins, zero explodes — one document scan into
     * ONE combinable |sources|-key aggregate. Empty documents are
-    * excluded (no tokens → no ratio). */
+    * excluded (no tokens → no ratio).
+    *
+    * Bench watch: regresses if the per-doc expression grows a
+    * shuffle. */
   def qTtr(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)

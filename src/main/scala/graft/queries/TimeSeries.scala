@@ -961,6 +961,8 @@ object TimeSeries {
         $"b.score".as("score"))
   }
 
+  /** Bench watch: regresses silently if the bounded explode or its fold
+    * discipline breaks. */
   def qPeriodogram(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     bestPeriods(s, dir).orderBy($"user_id")
@@ -1044,7 +1046,10 @@ object TimeSeries {
     * explode, per-row O(1) table lookups inside codegen, ONE
     * combinable (object, period) aggregate, then the argmax on the
     * |objects|×16 reduced frame. Nothing driver-side, no window over
-    * raw rows. */
+    * raw rows.
+    *
+    * Bench watch: regresses if the trig lookup leaves codegen or the
+    * x16 explode stops combining map-side. */
   def qLombScargle(s: SparkSession, dir: String): DataFrame =
     lombScargleOver(series(s, dir))
 
@@ -1214,7 +1219,10 @@ object TimeSeries {
     * do not share. A perfect fit (P = 1, unbounded F) carries a null.
     *
     * Scale shape: [[qLombScargle]]'s reduced per-object frame plus
-    * two per-row expressions — nothing new shuffles. */
+    * two per-row expressions — nothing new shuffles.
+    *
+    * Bench watch: must bench as its parent one-shuffle shape (the GLS
+    * reduced frame + per-row math). */
   def qGlsFstat(s: SparkSession, dir: String): DataFrame =
     glsFstatOver(series(s, dir))
 
@@ -1420,7 +1428,10 @@ object TimeSeries {
     * Scale shape: identical to the GLS — a constant ×16 grid explode,
     * one combinable wide aggregate (35 int64 columns), then per-row
     * expressions and an argmax on the reduced frame. No joins, no
-    * windows over raw rows, nothing driver-side. */
+    * windows over raw rows, nothing driver-side.
+    *
+    * Bench watch: regresses if the window argmax (one greatest over
+    * 48 structs) ever becomes a join or window. */
   def qBls(s: SparkSession, dir: String): DataFrame =
     blsOver(series(s, dir))
 
@@ -1613,7 +1624,10 @@ object TimeSeries {
     *
     * Scale shape: identical to [[qBls]] — the gate is a per-row
     * filter over the |objects|-row reduced frame; nothing new
-    * shuffles. */
+    * shuffles.
+    *
+    * Bench watch: must bench ~q_bls; a blowup means the dip
+    * restriction broke the single wide-aggregate shape. */
   def qTransitCandidates(s: SparkSession, dir: String): DataFrame =
     transitCandidatesOver(series(s, dir))
 
@@ -1665,7 +1679,10 @@ object TimeSeries {
     *
     * Scale shape: identical to [[qBls]] — the ONE wide combinable
     * aggregate, per-row window expressions (now carrying four more
-    * integer fields), one argmax on the reduced frame. */
+    * integer fields), one argmax on the reduced frame.
+    *
+    * Bench watch: a blowup means the antiphase readout became a join
+    * or a second pass. */
   def qSecondaryEclipse(s: SparkSession, dir: String): DataFrame =
     secondaryEclipseOver(series(s, dir))
 
@@ -1805,7 +1822,10 @@ object TimeSeries {
     * [[qSecondaryEclipse]]'s one wide combinable aggregate over it,
     * the injected census is one distinct on the raw series attached
     * as a broadcast scalar, and the tallies/zero-fill run on the
-    * 6-row cell literal. */
+    * 6-row cell literal.
+    *
+    * Bench watch: regresses if the injection explode stops combining
+    * map-side or the census grows a second corpus pass. */
   def qEbRecovery(s: SparkSession, dir: String): DataFrame =
     ebRecoveryOver(series(s, dir))
 
@@ -1919,7 +1939,10 @@ object TimeSeries {
     * the ×6 injection explode, so the augmented build, the wide
     * secondary-eclipse aggregate and the census all scale with the
     * sample; the cell literal zero-fills whatever the slice
-    * empties. */
+    * empties.
+    *
+    * Bench watch: must bench WELL below q_eb_recovery; a near-equal
+    * time means the sample stopped pruning the augmented build. */
   def qEbRecoverySampled(s: SparkSession, dir: String): DataFrame =
     ebRecoveryOver(sampledSeries(series(s, dir)))
 
@@ -1974,7 +1997,10 @@ object TimeSeries {
     * composite key multiplies the REDUCED frame, not the shuffle
     * count), the injected census is a |keeps|-explode distinct on the
     * raw series, and the tallies/zero-fill run on the 9-row cell
-    * literal. */
+    * literal.
+    *
+    * Bench watch: regresses if the injection explode stops combining
+    * map-side or the census grows a second corpus pass. */
   def qTransitRecovery(s: SparkSession, dir: String): DataFrame =
     transitRecoveryOver(series(s, dir))
 
@@ -2121,6 +2147,9 @@ object TimeSeries {
       TransitSampleHexLt)
   }
 
+  /** Bench watch: must bench WELL below q_transit_recovery; a
+    * near-equal time means the sample stopped pruning the augmented
+    * build. */
   def qTransitRecoverySampled(s: SparkSession, dir: String): DataFrame =
     transitRecoveryOver(sampledSeries(series(s, dir)))
 
@@ -2149,7 +2178,10 @@ object TimeSeries {
     * (object, period) shuffle shared by the lag window and the sums
     * aggregate (the window sorts ~n rows per (object, period)
     * partition — parallelism |objects|×16), then the argmin on the
-    * reduced frame. */
+    * reduced frame.
+    *
+    * Bench watch: regresses if a second exchange appears between the
+    * lag window and the sums aggregate. */
   def qLaflerKinman(s: SparkSession, dir: String): DataFrame =
     laflerKinmanOver(series(s, dir))
 
@@ -2255,7 +2287,10 @@ object TimeSeries {
     * corpus-scale exchange is the (object, period, φ, m) cell
     * aggregate (map-side combinable; everything above — the n_i
     * window, the period aggregate, the argmax — runs on the
-    * ≤|objects|·16·32-cell reduced frame). */
+    * ≤|objects|·16·32-cell reduced frame).
+    *
+    * Bench watch: regresses if the n_i window or the argmax ever
+    * leaves the reduced cell frame. */
   def qCePeriod(s: SparkSession, dir: String): DataFrame =
     cePeriodOver(series(s, dir))
 
@@ -2454,7 +2489,11 @@ object TimeSeries {
     * index path costs |distinct buckets| directory listings + the
     * probed row groups, independent of table size — the same
     * point-vs-scan gap Pserv's director index exists for, times k
-    * amortized into one planning round trip. */
+    * amortized into one planning round trip.
+    *
+    * Bench watch: regresses if the obkt IN-list stops
+    * partition-pruning or the warm index cache stops short-circuiting
+    * the build. */
   def qObjectLookupMany(s: SparkSession, dir: String): DataFrame = {
     val idx = ensureObjectIndex(s, dir)
     graft.sources.ObjectIndex.lookupMany(s, idx, LookupIds)
@@ -2593,7 +2632,12 @@ object TimeSeries {
     * loop a survey runs anyway); the measured warm path is ONE scan
     * of the compaction-bounded partials store (~1 row per key plus
     * the tail) and one combinable merge — never the raw event
-    * history. */
+    * history.
+    *
+    * Bench watch: the warm path must scan the compaction-bounded
+    * partials store, never the raw events; regresses toward
+    * q_lightcurve_band's time if the store stops answering from its
+    * fold. */
   def qLightcurveBandStored(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val path = ensureLcStatsStore(s, dir)
@@ -2634,7 +2678,12 @@ object TimeSeries {
     * Scale shape: the warm path is ONE scan of the compaction-bounded
     * partials store into a ≤|ids|-row combinable aggregate, then the
     * zero-fill join on the 5-row id literal; the build amortizes with
-    * [[qLightcurveBandStored]] (same content-keyed cache). */
+    * [[qLightcurveBandStored]] (same content-keyed cache).
+    *
+    * Bench watch: one partials-store scan into a 5-row zero-filled
+    * aggregate; regresses if the read stops riding the
+    * compaction-bounded store (the build amortizes with
+    * q_lightcurve_band_stored). */
   def qLcStreamBatches(s: SparkSession, dir: String): DataFrame =
     lcStreamBatchesOver(s, ensureLcStatsStore(s, dir), LcStoreBatches)
 
@@ -2702,7 +2751,10 @@ object TimeSeries {
     *
     * Scale shape: one scan, per-row arithmetic, ONE combinable
     * shuffle on the (object, band) key — [[qLightcurveBand]]'s
-    * exactly. */
+    * exactly.
+    *
+    * Bench watch: must bench as its parent one-shuffle shape (the
+    * banded aggregate with per-row weights). */
   def qCoaddFlux(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     bandedSeries(s, dir)
@@ -2809,7 +2861,10 @@ object TimeSeries {
     * shape (constant ×16 explode, ONE combinable shuffle, argmax on
     * the reduced |objects|×|bands|×16 frame) carry over verbatim.
     * Per-band epoch counts are ~n/5, so the int64 bound is LOOSER
-    * than the mixed-stream query's. */
+    * than the mixed-stream query's.
+    *
+    * Bench watch: regresses if the band key split ever shuffles
+    * twice. */
   def qLombScargleBand(s: SparkSession, dir: String): DataFrame =
     lombScargleBandOver(bandedSeries(s, dir))
 
@@ -2917,7 +2972,10 @@ object TimeSeries {
     * reduced |objects|×|bands|×16 frame down to |objects|×16, the
     * fixed chain in codegen, and the argmax. No new shuffle shape —
     * the multiband joint statistic costs one more tiny aggregate
-    * than the per-band one. */
+    * than the per-band one.
+    *
+    * Bench watch: regresses if the pivot ever becomes a join or the
+    * band sums leave the reduced frame. */
   def qMultibandGls(s: SparkSession, dir: String): DataFrame =
     multibandGlsOver(bandedSeries(s, dir))
 
@@ -3047,7 +3105,10 @@ object TimeSeries {
     * reduction is map-side combinable into |bands|×|bins| cells.
     * Δ² sums in decimal(38,0) (exact at any corpus size — a bigint
     * sum would overflow past ~4e9 pairs/bin); the only IEEE step is
-    * the final mean division, so the hash is stable. */
+    * the final mean division, so the hash is stable.
+    *
+    * Bench watch: regresses silently if the pair join stops being
+    * per-object. */
   def qStructureFunction(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val b = bandedSeries(s, dir)
@@ -3096,7 +3157,10 @@ object TimeSeries {
     * join-back broadcasts (explicitly: at 100 TB the source side
     * never shuffles for this join; a decade of LSST is ~10⁶ visits,
     * KBs per row). Sources scan once, join map-side, aggregate
-    * map-side. */
+    * map-side.
+    *
+    * Bench watch: regresses silently if the join-back ever shuffles
+    * the source side. */
   def qVisitCalib(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val src = series(s, dir)
@@ -3284,7 +3348,10 @@ object TimeSeries {
     * q_structure_function argument), so tasks stay bounded no matter
     * the catalog size; this is the many-small-groups regime where a
     * per-group sort beats a RankSplit histogram (built for few LARGE
-    * groups, as q_percentile_disc uses). */
+    * groups, as q_percentile_disc uses).
+    *
+    * Bench watch: regresses if the two windows stop sharing one
+    * object partitioning. */
   def qMad(s: SparkSession, dir: String): DataFrame =
     madOf(series(s, dir))
 
@@ -3452,7 +3519,11 @@ object TimeSeries {
     * sufficient-statistic aggregate carrying BOTH coordinates' sums
     * share the user_id shuffle — one exchange total, map-side
     * combinable, no join, nothing driver-side; both Cramer chains
-    * run per-row on the |objects| reduced frame. */
+    * run per-row on the |objects| reduced frame.
+    *
+    * Bench watch: same one-exchange shape as q_proper_motion; a
+    * blowup means the trig lookup left codegen or the reduced frame
+    * grew a join. */
   def qParallax(s: SparkSession, dir: String): DataFrame =
     parallaxFitOver(astromDesign(s, dir))
 
@@ -3668,7 +3739,10 @@ object TimeSeries {
     * noise-free planted fixture must land RSS exactly 0.0 (all
     * products exact at fixture magnitudes, the cancellation is
     * exact), and the per-epoch jitter terms make every real corpus
-    * row strictly positive — both spec-pinned. */
+    * row strictly positive — both spec-pinned.
+    *
+    * Bench watch: must bench ~q_parallax; a blowup means the RSS grew
+    * a residual pass. */
   def qAstromChi2(s: SparkSession, dir: String): DataFrame =
     astromChi2Over(astromDesign(s, dir))
 
@@ -3800,7 +3874,10 @@ object TimeSeries {
     * aggregates, the lead() pairing, and the final groupBy (window
     * partition = group key, so the sort is reused); no self-join —
     * the consecutive-pair form of J is linear in the series where
-    * the naive all-pairs form is quadratic. */
+    * the naive all-pairs form is quadratic.
+    *
+    * Bench watch: regresses if the windows stop sharing a single sort
+    * or the linear consecutive-pair J ever becomes a self-join. */
   def qStetson(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val wg = Window.partitionBy($"user_id", $"band")
@@ -3901,7 +3978,10 @@ object TimeSeries {
     * Scale shape: both inputs are the already-reduced per-object(-
     * band) frames — the join adds one shuffle over |objects| rows on
     * top of the two parents' own one-shuffle shapes; nothing
-    * corpus-sized crosses it. */
+    * corpus-sized crosses it.
+    *
+    * Bench watch: regresses if either parent frame stops reducing
+    * before the join. */
   def qPeriodicCandidates(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val j = qStetson(s, dir)
@@ -4729,7 +4809,10 @@ object TimeSeries {
     * across parquet/duckdb readers; the signature pins the exact
     * content AND order), alongside the readable scalars. TimeSeries
     * spec asserts the array cells directly against a driver-side
-    * recompute. */
+    * recompute.
+    *
+    * Bench watch: regresses if the sort_array pack stops being one
+    * object-key shuffle. */
   def qLightcurvePack(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     lightcurvePack(series(s, dir))
@@ -4770,7 +4853,10 @@ object TimeSeries {
     * Scale shape: one (object, band) shuffle; the three group sums
     * ride one unordered window over it (cadence-bounded partitions),
     * the flag is a per-row codegen comparison, and the final count
-    * reuses the same partitioning. */
+    * reuses the same partitioning.
+    *
+    * Bench watch: regresses if a second exchange ever appears between
+    * window and aggregate. */
   def qBeyond1std(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val wg = Window.partitionBy($"user_id", $"band")
@@ -4833,7 +4919,10 @@ object TimeSeries {
     * window, the unordered group sums, and the final max/min
     * aggregate all share its sort/partitioning; per-group state is
     * the cadence-bounded series every per-object window query
-    * already holds. */
+    * already holds.
+    *
+    * Bench watch: regresses if a second exchange ever appears between
+    * window and aggregate. */
   def qRcs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val wg = Window.partitionBy($"user_id", $"band")
@@ -4903,7 +4992,10 @@ object TimeSeries {
     *
     * Scale shape: one (object, band) shuffle; lead() and the final
     * aggregate share its sort, pairs are linear in epochs (the
-    * consecutive stream, never a self-join). */
+    * consecutive stream, never a self-join).
+    *
+    * Bench watch: regresses if a second exchange ever appears between
+    * window and aggregate. */
   def qMaxSlope(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val wo = Window.partitionBy($"user_id", $"band")
@@ -4949,7 +5041,10 @@ object TimeSeries {
     *
     * Scale shape: identical to q_amplitude — one (object, band) rank
     * window serves all six percentiles, then a self-join-free
-    * conditional aggregate; one shuffle total. */
+    * conditional aggregate; one shuffle total.
+    *
+    * Bench watch: regresses if a second exchange ever appears between
+    * window and aggregate. */
   def qFluxRatio(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val wg = Window.partitionBy($"user_id", $"band")

@@ -2,15 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with RegistryRows {
   import SparkTestSession._
   import spark.implicits._
-
-  for ((name, fn) <- queries.Bpe.defs) {
-    test(s"$name runs and returns rows at sf0.001") {
-      assert(fn(spark, sf).count() > 0, s"$name returned no rows")
-    }
-  }
 
   test("induction is greedy and deterministic on a hand-derivable corpus") {
     // word freqs: the=4, aaaa=2, then=1. Pair counts round 1:

@@ -20,20 +20,8 @@ object SparkTestSession {
   val sf: String = "/root/testdata/sf0.001"
 }
 
-class CoreOlapSpec extends AnyFunSuite {
+class CoreOlapSpec extends AnyFunSuite with RegistryRows {
   import SparkTestSession._
-
-  // queries that may legitimately return 0 rows at tiny scale factors
-  private val zeroOk = Set("q_anti_join")
-
-  for ((name, fn) <- queries.CoreOlap.defs) {
-    test(s"$name runs and returns rows at sf0.001") {
-      val df = fn(spark, sf)
-      val n = df.count()
-      if (!zeroOk(name)) assert(n > 0, s"$name returned no rows")
-      assert(df.columns.nonEmpty)
-    }
-  }
 
   test("q01 aggregates match a hand check") {
     import org.apache.spark.sql.functions._
@@ -854,5 +842,25 @@ class CoreOlapSpec extends AnyFunSuite {
       val grp = byPart(pk); grp.size < 2 && 2 * sq > grp.values.sum
     }
     assert(sole > 0, "the n_supp >= 2 gate is vacuous at sf0.001")
+  }
+
+  test("q_distinct_count keeps the NULL l_returnflag group") {
+    import org.apache.spark.sql.functions._
+    // a copy of lineitem with the flag NULLed on every 7th order
+    val dir = java.nio.file.Files.createTempDirectory("graft_nullflag").toString
+    Tables.lineitem(spark, sf)
+      .withColumn("l_returnflag",
+        when(col("l_orderkey") % 7 === 0, lit(null).cast("string"))
+          .otherwise(col("l_returnflag")))
+      .write.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.lineitem(spark, dir)
+    assert(li.filter(col("l_returnflag").isNull).count() > 0)
+    val exp = li.groupBy("l_returnflag")
+      .agg(countDistinct("l_orderkey"), countDistinct("l_partkey"),
+        countDistinct("l_suppkey", "l_partkey"), count(lit(1)))
+      .collect().toSet
+    val got = queries.CoreOlap.qDistinctCount(spark, dir).collect().toSet
+    assert(exp.exists(_.isNullAt(0)))
+    assert(got == exp)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class DedupAnnSpec extends AnyFunSuite {
+class DedupAnnSpec extends AnyFunSuite with RegistryRows {
 
   test("q_minhash_err census equals a driver recompute over the candidate pairs; populated deciles exist") {
     import SparkTestSession._
@@ -69,12 +69,6 @@ class DedupAnnSpec extends AnyFunSuite {
   }
 
   import SparkTestSession._
-
-  for ((name, fn) <- queries.Dedup.defs ++ queries.Ann.defs) {
-    test(s"$name runs and returns rows at sf0.001") {
-      assert(fn(spark, sf).count() > 0, s"$name returned no rows")
-    }
-  }
 
   test("q_ngram_novelty equals a driver recompute of the first-appearance rule") {
     def md5hex(s: String): String =

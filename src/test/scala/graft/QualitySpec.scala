@@ -3,16 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class QualitySpec extends AnyFunSuite {
+class QualitySpec extends AnyFunSuite with RegistryRows {
   import SparkTestSession._
-
-  for ((name, fn) <- queries.Quality.defs) {
-    test(s"$name runs and returns rows at sf0.001") {
-      val df = fn(spark, sf)
-      assert(df.count() > 0)
-      assert(df.columns.nonEmpty)
-    }
-  }
 
   test("q_profile: one row per profiled column, bounds consistent") {
     val df = queries.Quality.qProfile(spark, sf).cache()

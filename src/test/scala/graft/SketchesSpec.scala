@@ -2,14 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-class SketchesSpec extends AnyFunSuite {
+class SketchesSpec extends AnyFunSuite with RegistryRows {
   import SparkTestSession._
-
-  for ((name, fn) <- queries.Sketches.defs) {
-    test(s"$name runs and returns rows at sf0.001") {
-      assert(fn(spark, sf).count() > 0)
-    }
-  }
 
   test("q_sketch_distinct: exact side matches countDistinct and every HLL++ estimate is in bound") {
     val rows = queries.Sketches.qSketchDistinct(spark, sf).collect()

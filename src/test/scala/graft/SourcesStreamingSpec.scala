@@ -10,14 +10,8 @@ import graft.sources.Catalog
 import graft.streaming.EventStream
 import graft.streaming.EventStream.Event
 
-class MultimodalSpec extends AnyFunSuite {
+class MultimodalSpec extends AnyFunSuite with RegistryRows {
   import SparkTestSession._
-
-  for ((name, fn) <- queries.Multimodal.defs) {
-    test(s"$name runs and returns rows at sf0.001") {
-      assert(fn(spark, sf).count() > 0)
-    }
-  }
 
   test("q_blob_meta length equals utf-8 byte count of text") {
     val df = queries.Multimodal.qBlobMeta(spark, sf)

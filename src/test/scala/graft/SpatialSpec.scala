@@ -3,15 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SpatialSpec extends AnyFunSuite {
+class SpatialSpec extends AnyFunSuite with RegistryRows {
   import SparkTestSession._
-
-  for ((name, fn) <- queries.Spatial.defs) {
-    test(s"$name runs and returns rows at sf0.001") {
-      val df = fn(spark, sf)
-      assert(df.count() > 0)
-    }
-  }
 
   test("q_cone_search distances are within the radius") {
     val df = queries.Spatial.qConeSearch(spark, sf)

@@ -5,14 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TextHashAlgos
 import org.apache.spark.unsafe.types.UTF8String
 
-class TextSpec extends AnyFunSuite {
+class TextSpec extends AnyFunSuite with RegistryRows {
   import SparkTestSession._
-
-  for ((name, fn) <- queries.Text.defs) {
-    test(s"$name runs and returns rows at sf0.001") {
-      assert(fn(spark, sf).count() > 0)
-    }
-  }
 
   test("q_lang_confusion aggregates exactly q_lang_id's per-doc verdicts") {
     val perDoc = queries.Text.qLangId(spark, sf).collect()

@@ -3,16 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TimeSeriesSpec extends AnyFunSuite {
+class TimeSeriesSpec extends AnyFunSuite with RegistryRows {
   import SparkTestSession._
-
-  for ((name, fn) <- queries.TimeSeries.defs) {
-    test(s"$name runs and returns rows at sf0.001") {
-      val df = fn(spark, sf)
-      assert(df.count() > 0)
-      assert(df.columns.nonEmpty)
-    }
-  }
 
   test("q_lightcurve_band partitions q_lightcurve_stats exactly (per-band n/sum reconcile)") {
     val band = queries.TimeSeries.qLightcurveBand(spark, sf)

@@ -4,6 +4,10 @@
 Usage: after `sbt "runMain graft.Verify <sfDir> <outDir>"`:
     python3 tools/parity.py <sfDir> <outDir> [jsonOut]
 
+Every key of oracle_sql.json (in subset mode: every name in
+_subset.json) counts toward the total; one with no result dir is
+reported as MISSING. Exits non-zero unless every query passes.
+
 The optional third argument writes the machine-readable per-query
 record (PARITY_FULL_r{N}.json at seal): one entry per compared query
 with its status and row count, plus the pass/total counts — the
@@ -54,6 +58,14 @@ def main(sfdir, outdir, json_out=None):
         print(f"[subset   ] comparing only {sorted(subset)}; "
               f"{len(stale)} stale result dir(s) skipped")
         names = [n for n in names if n not in stale]
+    # Every expected query counts, also one whose Verify write left no
+    # result dir: it fails as MISSING instead of dropping out of both
+    # the pass count and the total.
+    expected = subset if subset is not None else set(oracle)
+    missing = sorted(expected - set(names))
+    for name in missing:
+        print(f"[MISSING  ] {name}: no result dir (query failed or never ran?)")
+        rec(name, "missing")
     for name in names:
         files = glob.glob(f"{outdir}/{name}/*.parquet")
         if not files:
@@ -114,13 +126,16 @@ def main(sfdir, outdir, json_out=None):
             print(f"[OK       ] {name}: rows={len(g)}")
             rec(name, "ok", len(g))
             n_ok += 1
-    print(f"== {n_ok}/{len(names)} pass")
+    total = len(names) + len(missing)
+    print(f"== {n_ok}/{total} pass")
     if json_out:
         with open(json_out, "w") as f:
-            json.dump({"sf_dir": sfdir, "total": len(names), "pass": n_ok,
+            json.dump({"sf_dir": sfdir, "total": total, "pass": n_ok,
                        "queries": record}, f, indent=1, sort_keys=True)
         print(f"== wrote {json_out}")
+    return n_ok == total
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2], sys.argv[3] if len(sys.argv) > 3 else None)
+    ok = main(sys.argv[1], sys.argv[2], sys.argv[3] if len(sys.argv) > 3 else None)
+    sys.exit(0 if ok else 1)
