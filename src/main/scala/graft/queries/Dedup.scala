@@ -912,6 +912,26 @@ object Dedup {
        |ORDER BY d1, d2""".stripMargin
 
   // ---------------------------------------------------------------
+  private val loopSessions =
+    new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  /** The [[connectedComponents]] loop session of `caller`: created once
+    * per caller session (`newSession()`, AQE off) and kept while the
+    * caller lives. A fresh session per call would bring its own
+    * executor class loader, and Spark keys its codegen cache by
+    * (class loader, code), so every call would recompile the loop's
+    * generated classes. The child holds no reference to its caller,
+    * so the weak key still lets the caller be collected. */
+  private[graft] def loopSession(caller: SparkSession): SparkSession =
+    loopSessions.synchronized {
+      Option(loopSessions.get(caller)).getOrElse {
+        val l = caller.newSession()
+        l.conf.set("spark.sql.adaptive.enabled", "false")
+        loopSessions.put(caller, l)
+        l
+      }
+    }
+
   /** Connected components of an undirected pair graph by iterative
     * min-label propagation with per-round path compression: every
     * node ends up labeled with the smallest node id reachable from
@@ -973,20 +993,21 @@ object Dedup {
     // without AQE: the only wide key is cluster_id in a
     // min-aggregate, which combines map-side.
     //
-    // The overrides live on a CHILD session (`newSession()` — same
-    // SparkContext and shared cache manager, ISOLATED SQL conf), so
-    // a concurrent query on the caller's session never observes AQE
-    // off or a shrunken shuffle width; the loop frames are re-rooted
-    // onto it via the resolved logical plan (they read the same
-    // persisted blocks through the shared cache). The caller's
-    // conf value parses defensively — a non-numeric width (e.g. a
-    // runtime that sets 'auto') falls back to the 200 default.
+    // The overrides live on the caller's LOOP session (see
+    // [[loopSession]]: same SparkContext and shared cache manager,
+    // ISOLATED SQL conf), so a concurrent query on the caller's
+    // session never observes AQE off or a shrunken shuffle width; the
+    // loop frames are re-rooted onto it via the resolved logical plan
+    // (they read the same persisted blocks through the shared cache).
+    // The caller's conf value parses defensively — a non-numeric
+    // width (e.g. a runtime that sets 'auto') falls back to the 200
+    // default. Two concurrent calls may race on the loop session's
+    // width; that changes only the width, never a result.
     val sess = nodes.sparkSession
     val activeN = active.count()
-    val loopSess = sess.newSession()
+    val loopSess = loopSession(sess)
     val baseShuf = scala.util.Try(sess.conf.get("spark.sql.shuffle.partitions"))
       .toOption.flatMap(_.toLongOption).getOrElse(200L)
-    loopSess.conf.set("spark.sql.adaptive.enabled", "false")
     loopSess.conf.set("spark.sql.shuffle.partitions",
       math.max(4L, math.min(baseShuf, activeN / 1000000L + 4L)).toString)
     def reRoot(df: DataFrame, to: SparkSession): DataFrame =
@@ -1066,7 +1087,7 @@ object Dedup {
     // hand the (checkpointed — physically materialized, so re-rooting
     // is free) label frame back to the CALLER's session: the
     // data-scale window + singleton join below want its conf (AQE on,
-    // full shuffle width), and the loop session is discarded here
+    // full shuffle width)
     labels = reRoot(labels, sess)
     // component sizes over the (tiny) edge-touching set only; the
     // singleton majority joins back as size-1 clusters with no window

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** Director index — the reference's single most-used access path:
   * fetch ONE object's full light curve (`WHERE objectId = ?
@@ -11,14 +12,21 @@ import org.apache.spark.sql.functions._
   * directory (`obkt = user_id mod numBuckets`) as the first PHYSICAL
   * partition key plus (user_id, ts) sort within each file:
   *
-  *  - the `obkt = id mod n` equality is a static PARTITION filter —
-  *    the scan lists exactly one of n directories (no footer reads
-  *    elsewhere, no data reads elsewhere);
+  *  - the schema is part of the format: every writer projects its
+  *    rows onto the declared events schema ([[IndexSchema]] adds the
+  *    two partition levels), and every read passes it, so no read
+  *    pays a parquet footer job to infer what graft itself wrote;
+  *  - a lookup reads only its bucket's directory (`basePath` = the
+  *    index root, so `obkt`/`ibatch` are still partition columns):
+  *    the scan lists exactly one of n directories, nothing else is
+  *    listed, and no footer or data is read elsewhere. The
+  *    `obkt = id mod n` equality stays as a static PARTITION filter;
   *  - the `user_id = id` equality is a pushed parquet filter, and
   *    because files are sorted by user_id the row-group min/max
   *    stats skip to the handful of row groups holding that object;
-  *  - rows inside a row group are already in (user_id, ts) order,
-  *    so the per-object time sort is a near-no-op.
+  *  - the reply (one object's curve) is sorted in one partition, so
+  *    a [[lookup]] is ONE Spark job: no schema job, no listing job,
+  *    no range-partitioning sample or shuffle.
   *
   * ONE layout for every maintenance discipline: all writers emit
   * `obkt=<b>/ibatch=<g>` (two partition levels), so a path can be
@@ -55,15 +63,28 @@ object ObjectIndex {
     (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
   }
 
-  /** The shared write discipline: non-null keys, modulus bucket,
+  private val Events = Catalog.schemas("events")
+
+  /** The declared index schema: the events columns every writer
+    * projects onto, then the two partition levels. */
+  val IndexSchema: StructType = Events.add("obkt", IntegerType).add("ibatch", LongType)
+
+  /** The shared write discipline: rows projected onto the declared
+    * events schema (a missing column fails here, a narrower type such
+    * as an INT `event_id` is widened), non-null keys, modulus bucket,
     * generation column, one write task per bucket (no small-file
     * explosion), (user_id, ts) clustering within files. */
-  private def bucketed(df: DataFrame, numBuckets: Int, gen: Long): DataFrame =
-    df.filter(col("user_id").isNotNull)
+  private def bucketed(df: DataFrame, numBuckets: Int, gen: Long): DataFrame = {
+    val missing = Events.fieldNames.filterNot(c => df.columns.exists(_.equalsIgnoreCase(c)))
+    require(missing.isEmpty, "director-index rows lack the declared events " +
+      s"column(s) ${missing.mkString(", ")}")
+    df.select(Events.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+      .filter(col("user_id").isNotNull)
       .withColumn("obkt", pmod(col("user_id"), lit(numBuckets)).cast("int"))
       .withColumn("ibatch", lit(gen))
       .repartition(numBuckets, col("obkt"))
       .sortWithinPartitions("user_id", "ts", "event_id")
+  }
 
   /** Materialize the index layout from scratch (generation
     * [[BaseGen]]). */
@@ -138,34 +159,46 @@ object ObjectIndex {
       .option("checkpointLocation", checkpointPath)
       .start()
 
+  /** The bucket directories of `bkts` that exist, read with the
+    * declared [[IndexSchema]] and `basePath` = the index root: Spark
+    * lists only these directories, infers no schema, and still sees
+    * `obkt`/`ibatch` as partition columns. A bucket no writer has
+    * touched has no directory and contributes no rows; an index root
+    * that does not exist fails loudly. */
+  private def readBuckets(s: SparkSession, path: String, bkts: Seq[Int]): DataFrame = {
+    val (f, root) = fs(s, path)
+    val dirs = bkts.map(b => new org.apache.hadoop.fs.Path(root, s"obkt=$b")).filter(f.exists)
+    if (dirs.nonEmpty)
+      s.read.schema(IndexSchema).option("basePath", path).parquet(dirs.map(_.toString): _*)
+    else {
+      require(f.exists(root), s"no director index at $path")
+      s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), IndexSchema)
+    }
+  }
+
+  /** The light-curve projection both lookups return. */
+  private def curve(df: DataFrame): DataFrame =
+    df.select(col("user_id"), col("event_id"), expr("ts DIV 1000").as("tus"),
+      round(col("value") * 100).cast("long").as("xc"), col("event_type"))
+
   /** Point lookup against the index layout. Returns the same
     * projection as `TimeSeries.qObjectLookup` over the flat table —
     * the spec asserts both the parity and that the scan read exactly
     * one bucket directory. `floorMod` (not `%`) so a negative
-    * objectId probes the same non-negative bucket `pmod` wrote. */
+    * objectId probes the same non-negative bucket `pmod` wrote.
+    *
+    * Cost: ONE Spark job. The scan lists only the bucket's directory
+    * under the declared schema (no footer job), and the reply — one
+    * object's rows — is sorted in a single partition instead of by a
+    * range shuffle (which would add a sampling job and a map job). */
   def lookup(s: SparkSession, path: String, objectId: Long,
     numBuckets: Int = DefaultBuckets): DataFrame = {
-    import s.implicits._
-    s.read.parquet(path)
-      .filter($"obkt" === Math.floorMod(objectId, numBuckets.toLong).toInt &&
-        $"user_id" === objectId)
-      .select($"user_id", $"event_id", expr("ts DIV 1000").as("tus"),
-        round($"value" * 100).cast("long").as("xc"), $"event_type")
-      .orderBy($"tus", $"event_id")
+    val b = Math.floorMod(objectId, numBuckets.toLong).toInt
+    curve(readBuckets(s, path, Seq(b))
+      .filter(col("obkt") === b && col("user_id") === objectId))
+      .coalesce(1).sortWithinPartitions("tus", "event_id")
   }
 
-  /** Batched director-index lookup — the daily operational shape
-    * (alert follow-up resolves a k-object IN-list, not one object):
-    * the same projection as [[lookup]] for k objects in ONE scan that
-    * lists exactly the |distinct buckets| partition directories —
-    * `obkt IN (...)` is a static partition filter (ids are
-    * deduplicated and ids sharing a bucket share its listing), and
-    * the `user_id` IN-list pushes to parquet so row-group min/max
-    * stats skip within each bucket's sorted files. Cost is
-    * O(|distinct buckets| footers + the k objects' row groups) —
-    * independent of table size, and one JVM/planning round trip
-    * instead of k point-lookup jobs. Output is (user_id, time)-
-    * ordered so each object's curve comes out contiguous. */
   /** Above this many distinct ids the `user_id` side switches from a
     * literal IN-list to a broadcast id-frame SEMI-JOIN: an alert-night
     * list of 10⁴–10⁵ ids as literals bloats the plan tree (analysis/
@@ -178,6 +211,20 @@ object ObjectIndex {
     * partition directories at planning time. */
   val LookupManyInListMax = 1000
 
+  /** Batched director-index lookup — the daily operational shape
+    * (alert follow-up resolves a k-object IN-list, not one object):
+    * the same projection as [[lookup]] for k objects in ONE scan that
+    * lists exactly the |distinct buckets| partition directories (ids
+    * are deduplicated and ids sharing a bucket share its directory;
+    * `obkt IN (...)` stays a static partition filter), and the
+    * `user_id` IN-list pushes to parquet so row-group min/max
+    * stats skip within each bucket's sorted files. Cost is
+    * O(|distinct buckets| footers + the k objects' row groups) —
+    * independent of table size, and one JVM/planning round trip
+    * instead of k point-lookup jobs. Output is (user_id, time)-
+    * ordered so each object's curve comes out contiguous: the scan
+    * stays parallel and the bounded reply is sorted in one partition
+    * behind a single shuffle, so the IN-list path runs 2 Spark jobs. */
   def lookupMany(s: SparkSession, path: String, objectIds: Seq[Long],
     numBuckets: Int = DefaultBuckets,
     inListMax: Int = LookupManyInListMax): DataFrame = {
@@ -185,7 +232,7 @@ object ObjectIndex {
     require(objectIds.nonEmpty, "lookupMany needs at least one object id")
     val ids = objectIds.distinct
     val bkts = ids.map(id => Math.floorMod(id, numBuckets.toLong).toInt).distinct
-    val base = s.read.parquet(path).filter($"obkt".isin(bkts: _*))
+    val base = readBuckets(s, path, bkts).filter($"obkt".isin(bkts: _*))
     val matched =
       if (ids.size <= inListMax) base.filter($"user_id".isin(ids: _*))
       else {
@@ -196,10 +243,7 @@ object ObjectIndex {
           pmod($"user_id", lit(numBuckets.toLong)).cast("int"))
         base.join(broadcast(idDf), Seq("obkt", "user_id"), "left_semi")
       }
-    matched
-      .select($"user_id", $"event_id", expr("ts DIV 1000").as("tus"),
-        round($"value" * 100).cast("long").as("xc"), $"event_type")
-      .orderBy($"user_id", $"tus", $"event_id")
+    curve(matched).repartition(1).sortWithinPartitions("user_id", "tus", "event_id")
   }
 
   // ---------------------------------------------------------------
@@ -283,7 +327,7 @@ object ObjectIndex {
       // stage the fold INSIDE the index root (underscore-hidden from
       // readers, and reclaimable by recoverCompaction after a hard
       // crash; the commit write reads the staged files, not `path`)
-      s.read.parquet(path)
+      s.read.schema(IndexSchema).parquet(path)
         .filter(col("ibatch").isin(gens.distinct: _*))
         .withColumn("ibatch", lit(gen))
         .repartition(numBuckets, col("obkt"))
@@ -298,7 +342,7 @@ object ObjectIndex {
       if (!f.rename(mtmp, new org.apache.hadoop.fs.Path(p, CompactManifest)))
         throw new java.io.IOException(s"could not commit compaction manifest at $p")
       // commit the new generation (adds obkt=*/ibatch=gen dirs only)
-      s.read.parquet(tmp.toString)
+      s.read.schema(IndexSchema).parquet(tmp.toString)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("obkt", "ibatch").parquet(path)

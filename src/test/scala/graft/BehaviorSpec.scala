@@ -57,6 +57,38 @@ class BehaviorSpec extends AnyFunSuite with RegistryRows {
       (40L, 10L, 4L), (50L, 50L, 1L)))
   }
 
+  test("connectedComponents reuses one loop session per caller and leaves the caller's conf alone") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // a caller session of its own, so no concurrent suite shares its loop session
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.adaptive.enabled", "true")
+    caller.conf.set("spark.sql.shuffle.partitions", "6")
+    val loop = queries.Dedup.loopSession(caller)
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    loop.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = { runs.incrementAndGet(); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    import caller.implicits._
+    val nodes = Seq(10L, 20L, 30L, 40L, 50L).toDF("doc_id")
+    val pairs = Seq((10L, 20L), (20L, 30L), (30L, 40L)).toDF("d1", "d2")
+    def call(): Int = {
+      val got = queries.Dedup.connectedComponents(nodes, pairs)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == Set((10L, 10L), (20L, 10L), (30L, 10L), (40L, 10L), (50L, 50L)))
+      org.apache.spark.graftx.JobProbe.drain(spark.sparkContext)
+      runs.get()
+    }
+    val first = call()
+    val second = call()
+    assert(first > 0 && second > first,
+      s"the loop ran outside the caller's loop session ($first, then $second runs on it)")
+    assert(queries.Dedup.loopSession(caller) eq loop)
+    assert(caller.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(caller.conf.get("spark.sql.shuffle.partitions") == "6")
+  }
+
   test("contractedComponents: filament chain collapses locally, contracted loop converges in few rounds") {
     import spark.implicits._
     import java.util.concurrent.atomic.AtomicInteger

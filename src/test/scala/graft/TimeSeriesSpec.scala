@@ -549,6 +549,16 @@ class TimeSeriesSpec extends AnyFunSuite with RegistryRows {
     folds.unpersist()
   }
 
+  /** The scan listed exactly the given bucket directories of the index
+    * at `root` — not the root, not another bucket. */
+  private def assertRootPaths(scan: org.apache.spark.sql.execution.FileSourceScanExec,
+    root: String, buckets: Seq[Long]): Unit = {
+    val got = scan.relation.location.rootPaths.map(_.toUri.getPath).toSet
+    val want = buckets.map(b =>
+      new org.apache.hadoop.fs.Path(root, s"obkt=$b").toUri.getPath).toSet
+    assert(got == want, s"the scan listed $got, wanted the bucket directories $want")
+  }
+
   test("object-index lookup prunes to one bucket and matches the flat point query") {
     val out = java.nio.file.Files.createTempDirectory("graft_objidx").toString
     val nb = 16 // 15 distinct users at sf0.001 -> most buckets non-empty
@@ -584,6 +594,7 @@ class TimeSeriesSpec extends AnyFunSuite with RegistryRows {
         "no PartitionFilters on the object-index scan")
       assert(scans.head.metrics("numFiles").value == 1L,
         s"lookup read ${scans.head.metrics("numFiles").value} files, wanted 1")
+      assertRootPaths(scans.head, out, Seq(Math.floorMod(id, nb.toLong)))
       val planStr = scans.head.toString
       assert(planStr.contains("PushedFilters") && planStr.contains("user_id"),
         s"user_id filter not pushed to parquet:\n$planStr")
@@ -621,6 +632,7 @@ class TimeSeriesSpec extends AnyFunSuite with RegistryRows {
       assert(scans.head.metrics("numFiles").value == wantBuckets.size.toLong,
         s"lookupMany read ${scans.head.metrics("numFiles").value} files, " +
           s"wanted the ${wantBuckets.size} distinct buckets'")
+      assertRootPaths(scans.head, out, wantBuckets)
       val planStr = scans.head.toString
       assert(planStr.contains("PushedFilters") && planStr.contains("user_id"),
         s"user_id IN-list not pushed to parquet:\n$planStr")
@@ -722,7 +734,100 @@ class TimeSeriesSpec extends AnyFunSuite with RegistryRows {
       assert(scans.head.metrics("numFiles").value == filesInBucket.toLong,
         s"lookup read ${scans.head.metrics("numFiles").value} files, " +
           s"wanted the bucket's $filesInBucket")
+      assertRootPaths(scans.head, out, Seq(id % nb))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("object-index lookup runs one Spark job, lookupMany at most two, neither infers a schema") {
+    import org.apache.spark.graftx.JobProbe
+    val out = java.nio.file.Files.createTempDirectory("graft_objidx_jobs").toString
+    val nb = 8
+    sources.ObjectIndex.build(spark, sf, out, nb)
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      var oneRows, manyRows = 0
+      val one = JobProbe(spark.sparkContext) {
+        oneRows = sources.ObjectIndex.lookup(spark, out, queries.TimeSeries.LookupId, nb)
+          .collect().length
+      }
+      val many = JobProbe(spark.sparkContext) {
+        manyRows = sources.ObjectIndex.lookupMany(spark, out, Seq(3L, 11L, 5L, 14L), nb)
+          .collect().length
+      }
+      assert(oneRows > 0 && manyRows > 0, "the probes must return rows")
+      assert(one.size == 1, s"lookup started ${one.size} jobs: $one")
+      assert(many.size <= 2, s"lookupMany started ${many.size} jobs: $many")
+      val footer = (one ++ many).flatten.filter(_.startsWith("parquet at ObjectIndex.scala"))
+      assert(footer.isEmpty, s"a lookup inferred the index schema: $footer")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("object-index lookups of ids whose bucket directory does not exist") {
+    val out = java.nio.file.Files.createTempDirectory("graft_objidx_gap").toString
+    val nb = 64 // 15 distinct users at sf0.001 -> most buckets have no directory
+    sources.ObjectIndex.build(spark, sf, out, nb)
+    val present = new java.io.File(out).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("obkt="))
+      .map(_.getName.stripPrefix("obkt=").toLong).toSet
+    val absent = (0L until nb).filterNot(present)
+    assert(present.nonEmpty && absent.size >= 2, s"fixture buckets: $present")
+    val cols = Seq("user_id", "event_id", "tus", "xc", "event_type")
+
+    val none = sources.ObjectIndex.lookup(spark, out, absent.head + 3 * nb, nb)
+    assert(none.columns.toSeq == cols && none.collect().isEmpty,
+      "a lookup into a missing bucket must return no rows with the usual columns")
+
+    val users = Tables.events(spark, sf).select("user_id").distinct()
+      .collect().map(_.getLong(0)).sorted.take(3).toSeq
+    val ids = users ++ absent.take(2)
+    val want = Tables.events(spark, sf)
+      .filter(col("user_id").isin(ids: _*))
+      .selectExpr("user_id", "event_id", "ts DIV 1000 AS tus")
+      .orderBy(col("user_id"), col("tus"), col("event_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    for (inListMax <- Seq(sources.ObjectIndex.LookupManyInListMax, 0)) {
+      val many = sources.ObjectIndex.lookupMany(spark, out, ids, nb, inListMax)
+      assert(many.columns.toSeq == cols)
+      val got = many.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(want.nonEmpty && got == want,
+        s"lookupMany (inListMax $inListMax) over partly missing buckets: " +
+          s"${got.length} rows, wanted ${want.length}")
+    }
+  }
+
+  test("object-index writers project onto the declared events schema") {
+    val out = java.nio.file.Files.createTempDirectory("graft_objidx_types").toString
+    val nb = 8
+    val ev = Tables.events(spark, sf)
+    sources.ObjectIndex.build(spark, sf, out, nb)
+    def parquetFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isFile) Seq(f).filter(_.getName.endsWith(".parquet"))
+      else f.listFiles().toSeq.flatMap(parquetFiles)
+    val before = parquetFiles(new java.io.File(out)).size
+
+    // a delta without `value` fails before it writes anything
+    val e = intercept[IllegalArgumentException] {
+      sources.ObjectIndex.append(spark, ev.drop("value"), out, nb)
+    }
+    assert(e.getMessage.contains("value"), s"message does not name the column: ${e.getMessage}")
+    assert(parquetFiles(new java.io.File(out)).size == before,
+      "the rejected delta wrote files")
+
+    // an INT event_id is widened to the declared LONG
+    val delta = ev.filter(col("user_id") === queries.TimeSeries.LookupId)
+      .withColumn("event_id", (col("event_id") + 1000000L).cast("int"))
+    sources.ObjectIndex.append(spark, delta, out, nb)
+    val files = parquetFiles(new java.io.File(out))
+    assert(files.size > before, "the delta wrote no files")
+    for (f <- files) {
+      val t = spark.read.parquet(f.getPath).schema("event_id").dataType
+      assert(t == org.apache.spark.sql.types.LongType, s"$f stores event_id as $t")
+    }
+    val ids = sources.ObjectIndex.lookup(spark, out, queries.TimeSeries.LookupId, nb)
+      .collect().map(_.getLong(1))
+    assert(ids.count(_ >= 1000000L) == delta.count() && ids.length == 2 * delta.count(),
+      "the appended rows do not read back under the declared schema")
   }
 
   test("q_stetson matches a driver-side recompute; K obeys Cauchy-Schwarz") {
