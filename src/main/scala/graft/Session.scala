@@ -20,9 +20,6 @@ object Session {
       // every query
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries INT64 TIMESTAMP(NANOS) which Spark 4
-      // refuses by default; read as Long (nanos since epoch).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // local test files are ~1-10 MB; the 128 MB default split would
       // scan each table in one task. On a real cluster the inputs are
       // many-file and this setting is irrelevant; here it restores the

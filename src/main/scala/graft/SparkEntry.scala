@@ -26,23 +26,21 @@ object SparkEntry {
     * view so `spark.sql("SELECT ... FROM lineitem ...")` works — the
     * reference's users write SQL, and with `GraftExtensions` active
     * the custom functions (minhash_sig, areaspec_circle, …) resolve
-    * there too. Views are lazy; no data moves at registration.
+    * there too. Views are lazy and every table reads with its declared
+    * schema, so registration starts no Spark job.
     *
-    * `events` registers through [[Tables.events]] so SQL sees the
-    * engine-wide bigint-nanoseconds `ts` contract regardless of the
-    * parquet vintage. On top of the raw tables, the Pserv catalog
+    * Every table of `Catalog.schemas` registers through [[Tables]], so
+    * SQL sees the same types as the DataFrame queries (`events.ts` as
+    * bigint nanoseconds). On top of the raw tables, the Pserv catalog
     * schema (Object / ForcedSource — the names the reference's SQL
     * workload queries) is registered as derived views over the same
     * deterministic mappings every spatial/light-curve query uses, so
     * e.g. `SELECT * FROM object WHERE areaspec_circle(ra, decl, 180,
     * 20, 25)` is exactly the reference's cone-search idiom. */
   def registerTables(spark: SparkSession, dir: String): Unit = {
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings")
-      .foreach { t =>
-        spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-      }
-    Tables.events(spark, dir).createOrReplaceTempView("events")
+    graft.sources.Catalog.schemas.keys.foreach { t =>
+      Tables.read(spark, dir, t).createOrReplaceTempView(t)
+    }
     // Pserv's Object table: THE golden-angle point locus — built
     // from queries.Spatial.points, so the SQL view and every spatial
     // query share one derivation by construction

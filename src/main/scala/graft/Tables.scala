@@ -1,18 +1,23 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Catalog
 
 /** Typed readers for the driver-generated testdata tables.
   *
   * Mirrors the catalog-table surface of the reference (Pserv's
   * Object/ForcedSource/CcdVisit tables, `python/desc/pserv` ingest
-  * path) over the harness's TPC-H-ish parquet. Column pruning +
-  * predicate pushdown happen at the parquet scan because every query
-  * selects explicitly from these raw reads.
+  * path) over the harness's TPC-H-ish parquet. Every accessor reads
+  * through [[Catalog.readParquet]], the single reader of the catalog
+  * tables: the declared schema means building a frame starts no Spark
+  * job, and `events.ts` arrives as BIGINT epoch nanoseconds. Column
+  * pruning + predicate pushdown happen at the parquet scan because
+  * every query selects explicitly from these raw reads.
   */
 object Tables {
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Table `name` of the catalog directory `dir`. */
+  def read(spark: SparkSession, dir: String, name: String): DataFrame =
+    Catalog.readParquet(spark, name, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = read(s, d, "nation")
@@ -21,23 +26,7 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame       = read(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame     = read(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = read(s, d, "lineitem")
-  /** `events.ts` contract: BIGINT epoch NANOSECONDS. The harness's
-    * generator has written the column both as parquet timestamp[ns]
-    * (which Spark 4 surfaces as LONG ns under
-    * `spark.sql.legacy.parquet.nanosAsLong`) and as timestamp[us]
-    * (surfaced as TIMESTAMP_NTZ); normalize here so every downstream
-    * plan sees one type regardless of generator vintage. The session
-    * TZ is pinned UTC, so NTZ→LTZ preserves the UTC instant and the
-    * derived `tus` values match DuckDB's `epoch_us(ts)` exactly. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = read(s, d, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => raw
-      case _ => raw.withColumn("ts",
-        org.apache.spark.sql.functions
-          .expr("unix_micros(cast(ts as timestamp_ltz)) * 1000"))
-    }
-  }
+  def events(s: SparkSession, d: String): DataFrame     = read(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame  = read(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = read(s, d, "embeddings")
 }

@@ -1455,7 +1455,7 @@ object CoreOlap {
   // ---------------------------------------------------------------
   def qCasePivot(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // ts is Long nanos (nanosAsLong); integer DIV keeps full precision
+    // ts is Long nanos (Catalog.readParquet); integer DIV keeps full precision
     val day = expr("ts DIV 86400000000000").as("day_idx")
     Tables.events(s, dir)
       .groupBy(day)

@@ -1078,15 +1078,25 @@ object Spatial {
     * zone grid as [[qZoneXmatch]] (each ORDERED pair arises exactly
     * once: probe explodes over the neighbor cells, build sits in its
     * home cell), so no all-pairs product exists anywhere. The
-    * argmin is two combinable aggregates on k1 — min distance, then
-    * min neighbor id at that distance (deterministic under rounded-
-    * distance ties) — with an equi-join back on (k1, exact double),
-    * bit-identical on both engines because both sides compute the
-    * identical haversine tree. Points with no neighbor within 1°
-    * drop out, matching the oracle. */
+    * argmin is ONE combinable aggregate on k1 — `min(struct(dist_r6,
+    * k2))` orders by distance, then by neighbor id, so a rounded-
+    * distance tie goes to the smallest k2 exactly as the oracle's
+    * MIN(k2) at the minimum distance; no join back, so the pair list
+    * is consumed once. Points with no neighbor within 1° drop out,
+    * matching the oracle. */
+  def qNearestNbr(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    orderedPairs(s, dir, 1.0)
+      .groupBy($"k1")
+      .agg(min(struct($"dist_r6", $"k2")).as("nn"))
+      .select($"k1", $"nn.k2".as("nn_k"), $"nn.dist_r6".as("nn_dist"))
+      .orderBy($"k1")
+  }
+
   /** All ORDERED neighbor pairs (k1→k2, k1≠k2) within `radius` —
     * [[gridCandidates]] over the catalog against itself, keeping both
-    * directions. Shared by [[qNearestNbr]] and [[qKnn3]]. */
+    * directions. Shared by [[qNearestNbr]], [[qKnn3]] and
+    * [[qCrowding]]. */
   private def orderedPairs(s: SparkSession, dir: String,
     radius: Double): DataFrame = {
     import s.implicits._
@@ -1094,24 +1104,6 @@ object Spatial {
     gridCandidates(pts, pts, radius)
       .filter($"k1" =!= $"k2")
       .select($"k1", $"k2", $"dist_r6")
-      // r20: pin the matched sliver — qNearestNbr reads it as BOTH
-      // argmin build and join probe (two independent subtrees: the
-      // grid join's haversine executed once per subtree), and both
-      // consumers end in an orderBy whose range sampling re-executes
-      // the pre-sort stage. Pinned, the spatial work runs exactly once.
-      .localCheckpoint(true)
-  }
-
-  def qNearestNbr(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pairs = orderedPairs(s, dir, 1.0)
-    val nearest = pairs.groupBy($"k1").agg(min($"dist_r6").as("nn_dist"))
-      .withColumnRenamed("k1", "nk1")
-    pairs.join(nearest, $"k1" === $"nk1" && $"dist_r6" === $"nn_dist")
-      .groupBy($"k1", $"nn_dist")
-      .agg(min($"k2").as("nn_k"))
-      .select($"k1", $"nn_k", $"nn_dist")
-      .orderBy($"k1")
   }
 
   val qNearestNbrSql: String =

@@ -19,8 +19,8 @@ import graft.Tables
   *
   * Determinism: all float reductions in exact integer space
   * (value scaled ×100 → bigint); time arithmetic in integer
-  * nanos/micros (`ts` is read as Long nanos — see nanosAsLong note in
-  * Verify).
+  * nanos/micros (`ts` is read as Long nanos — see
+  * [[graft.sources.Catalog.readParquet]]).
   */
 object TimeSeries {
 

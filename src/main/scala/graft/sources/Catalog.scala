@@ -13,6 +13,13 @@ import org.apache.spark.sql.types._
   * exactly the declared columns — pruning is guaranteed at the source,
   * and (c) type drift in incoming files fails loudly at read time
   * instead of corrupting the catalog.
+  *
+  * Single reader: this object is the only place that knows the catalog
+  * tables' on-disk format, and [[readParquet]] is the only reader of
+  * them — [[graft.Tables]] and `SparkEntry.registerTables` go through
+  * it. Read contract: a declared type the file cannot supply fails at
+  * read time; a declared column the file lacks reads as NULL (no
+  * footer is opened to check).
   */
 object Catalog {
 
@@ -37,14 +44,14 @@ object Catalog {
     "orders" -> StructType(Seq(
       StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
       StructField("o_orderstatus", StringType), StructField("o_totalprice", DoubleType),
-      StructField("o_orderdate", TimestampType), StructField("o_orderpriority", StringType))),
+      StructField("o_orderdate", TimestampNTZType), StructField("o_orderpriority", StringType))),
     "lineitem" -> StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType),
       StructField("l_suppkey", LongType), StructField("l_linenumber", IntegerType),
       StructField("l_quantity", DoubleType), StructField("l_extendedprice", DoubleType),
       StructField("l_discount", DoubleType), StructField("l_tax", DoubleType),
       StructField("l_returnflag", StringType), StructField("l_linestatus", StringType),
-      StructField("l_shipdate", TimestampType))),
+      StructField("l_shipdate", TimestampNTZType))),
     "events" -> StructType(Seq(
       StructField("event_id", LongType), StructField("ts", LongType), // nanos
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -58,9 +65,19 @@ object Catalog {
       StructField("embedding", ArrayType(FloatType)),
       StructField("label", IntegerType))))
 
-  /** Parquet reader with the declared (pruned) schema. */
+  /** Parquet reader with the declared (pruned) schema. `events.ts` is
+    * stored as parquet TIMESTAMP_MICROS without a zone, so it is read
+    * as TIMESTAMP_NTZ and normalized to the declared BIGINT epoch
+    * nanoseconds. The NTZ→LTZ cast keeps the UTC instant only under a
+    * UTC session zone (every graft session pins it), which is what
+    * makes the derived values match DuckDB's `epoch_us(ts)`. */
   def readParquet(s: SparkSession, table: String, path: String): DataFrame =
-    s.read.schema(schemas(table)).parquet(path)
+    if (table != "events") s.read.schema(schemas(table)).parquet(path)
+    else s.read.schema(StructType(schemas(table).map(f =>
+        if (f.name == "ts") f.copy(dataType = TimestampNTZType) else f)))
+      .parquet(path)
+      .withColumn("ts", org.apache.spark.sql.functions
+        .expr("unix_micros(cast(ts as timestamp_ltz)) * 1000"))
 
   /** CSV ingest (headerless, the reference's bulk-load file shape). */
   def readCsv(s: SparkSession, table: String, path: String): DataFrame =

@@ -11,7 +11,6 @@ object SparkTestSession {
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -19,7 +19,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // SparkContext; withExtensions applies to this session regardless
       .withExtensions(new GraftExtensions()(_))
       .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     saved.foreach(SparkSession.setDefaultSession)

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.expr
 import org.scalatest.funsuite.AnyFunSuite
@@ -643,10 +644,46 @@ class CatalogSpec extends AnyFunSuite {
 
   test("declared schemas read every catalog table (pruned, no inference)") {
     for ((table, schema) <- Catalog.schemas) {
-      val df = Catalog.readParquet(spark, table, s"$sf/$table.parquet")
+      val path = s"$sf/$table.parquet"
+      val df = Catalog.readParquet(spark, table, path)
       assert(df.schema.fieldNames.toSeq == schema.fieldNames.toSeq, table)
       assert(df.count() > 0, table)
+      if (table != "events")
+        assert(df.schema == spark.read.parquet(path).schema,
+          s"$table: declared schema differs from the file's")
     }
+    // events.ts: the file's zone-less epoch microseconds, as BIGINT
+    // nanoseconds, row for row
+    val events = Catalog.readParquet(spark, "events", s"$sf/events.parquet")
+    assert(events.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    val fileUs = spark.read.parquet(s"$sf/events.parquet")
+      .select("event_id", "ts").collect()
+      .map { r =>
+        val t = r.getAs[java.time.LocalDateTime](1)
+        r.getLong(0) -> (t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
+          t.getNano / 1000)
+      }
+    val gotNs = events.select("event_id", "ts").collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    assert(fileUs.length == gotNs.length && fileUs.map(_._1).distinct.length == fileUs.length)
+    assert(gotNs.toMap == fileUs.toMap.view.mapValues(_ * 1000L).toMap,
+      "events.ts is not the file's epoch microseconds x 1000")
+  }
+
+  test("catalog table frames and registerTables start no Spark job") {
+    import org.apache.spark.graftx.JobProbe
+    val accessors = Seq[(SparkSession, String) => DataFrame](Tables.region,
+      Tables.nation, Tables.customer, Tables.supplier, Tables.part,
+      Tables.orders, Tables.lineitem, Tables.events, Tables.documents,
+      Tables.embeddings)
+    val frames = JobProbe(spark.sparkContext) { accessors.foreach(_(spark, sf)) }
+    assert(frames.isEmpty, s"building the table frames started jobs: $frames")
+    val views = spark.newSession()
+    val registered = JobProbe(spark.sparkContext) {
+      SparkEntry.registerTables(views, sf)
+    }
+    assert(registered.isEmpty, s"registerTables started jobs: $registered")
+    assert(Catalog.schemas.keySet.forall(views.catalog.tableExists))
   }
 
   test("partitioned sink writes pruning-friendly layout and round-trips") {

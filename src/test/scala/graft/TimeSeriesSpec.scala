@@ -701,7 +701,6 @@ class TimeSeriesSpec extends AnyFunSuite with RegistryRows {
     val nb = 16
     val ev = Tables.events(spark, sf)
     // build from the first half, append the second as a delta batch
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sources.ObjectIndex.build(spark, sf, out, nb)
     // overwrite with half, then append the rest (simulating ingest)
     val half = ev.filter(col("event_id") < 500)
