@@ -162,7 +162,7 @@ case class PqEncode(child: Expression, cent: Seq[Seq[Seq[Long]]])
     cent.flatten.map(c => c.map(x => x * x).sum).toArray
   // containsNull = true: the kernel never emits nulls, but the stored
   // pq_codes tables read back from parquet as array<int> WITH nullable
-  // elements, and appendPartitioned's drift guard compares exact types
+  // elements, and Store.append's drift guard compares exact types
   // — declaring false would wedge every append against an existing
   // store (and the pre-native encode declared true as well).
   override def dataType: DataType =

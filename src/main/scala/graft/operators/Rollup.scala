@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Catalog
+import graft.sources.{Catalog, Store}
 
 /** Incremental materialized-view maintenance for the daily event
   * rollup — the aggregation layer every telemetry/training-data
@@ -60,10 +60,11 @@ object Rollup {
     val days = delta.select(dayOfTs.as("day"))
       .distinct().collect().map(_.getString(0))
     require(days.nonEmpty, "empty delta batch")
-    // partition-type inference may surface `day` as DATE; compare as
-    // string so the filter prunes regardless
-    val slice = s.read.parquet(basePath)
-      .filter(col("day").cast("string").isin(days.toSeq: _*))
+    // the base table's columns are the caller's: declared from the
+    // delta in hand, plus its string `day` partition
+    val slice = Store(delta.withColumn("day", dayOfTs).schema, Seq("day"))
+      .read(s, basePath)
+      .filter(col("day").isin(days.toSeq: _*))
     Catalog.replacePartitions(s,
       compute(slice.drop("day")).filter(col("day").isin(days.toSeq: _*)),
       rollupPath, "day")

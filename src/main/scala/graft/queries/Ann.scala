@@ -3,8 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType,
+  StringType, StructField, StructType}
 import graft.Tables
 import graft.functions.VectorOps
+import graft.sources.Store
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
   *
@@ -568,7 +571,7 @@ object Ann {
     if (graft.sources.Catalog.tableComplete(s, path))
       return loadIvfModel(s, path)
     val lists = ivfTrain(intEmbOf(raw))
-    graft.sources.Catalog.createIfAbsent(s, ivfModelRows(s, lists), path)
+    ModelStore.create(s, ivfModelRows(s, lists), path)
     lists
   }
 
@@ -580,9 +583,7 @@ object Ann {
   def loadIvfModel(s: SparkSession, path: String): Seq[(Long, Seq[Long], Long)] = {
     require(graft.sources.Catalog.tableComplete(s, path),
       s"$path is not a complete IVF model table — build it first")
-    val rows = s.read.parquet(path).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(4)))
-      .toSeq
+    val rows = modelRowsAt(s, path)
     require(rows.nonEmpty && rows.forall(_._1 == "ivf"),
       s"$path is not a standalone IVF model table (kinds: " +
         s"${rows.map(_._1).distinct.sorted.mkString(",")}) — point " +
@@ -590,35 +591,13 @@ object Ann {
     ivfModelOf(rows)
   }
 
-  /** Per-corpus cache location for the registered q_ann_ivf's stored
-    * model, keyed by `table`'s file identity (name + length +
-    * mtime): regenerated test data gets a fresh key, so a stale
-    * cached codebook can never shadow retrained truth. The registered
-    * query's (session, dir) signature has nowhere to thread an
-    * explicit model path through — production callers use
-    * [[buildIvfModel]]/[[loadIvfModel]] with a real artifact
-    * location; this cache is the same lifecycle with a derived one. */
-  /** Content key over `dir` + the named input tables' file identity
-    * (name + length + mtime, recursive) — shared by every derived
-    * cache in the library ([[annCachePath]] here, the spatial
-    * association stores in [[graft.queries.Spatial]]), so the key
-    * format cannot drift between modules. */
-  private[graft] def annCacheKey(dir: String, tables: Seq[String]): String = {
-    def sig(f: java.io.File): String =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName).map(sig).mkString("[", ",", "]")
-      else s"${f.getName}:${f.length}:${f.lastModified}"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest((dir + tables.map(t =>
-        "|" + sig(new java.io.File(dir, t))).mkString).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
-
+  /** Per-corpus cache location of a registered query's derived store
+    * ([[graft.sources.Store.derivedPath]]), keyed by `table`'s file
+    * identity: regenerated test data gets a fresh key, so a stale
+    * cached codebook can never shadow retrained truth. */
   private[graft] def annCachePath(dir: String, kind: String,
     table: String = "embeddings.parquet"): String =
-    sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-      System.getProperty("java.io.tmpdir")) +
-      s"/graft_${kind}_${annCacheKey(dir, Seq(table))}"
+    Store.derivedPath(dir, kind, Seq(table))
 
   private[graft] def ivfModelCachePath(dir: String): String =
     annCachePath(dir, "ivf_model")
@@ -1105,7 +1084,7 @@ object Ann {
     *     collected codebook is model parameters, not data-plane.
     *  2. [[buildPqIndex]]: encode (per subspace, argmin integer L2
     *     over the literal codebook — one scan, zero shuffle) and store
-    *     `[vec_id, codes]` via [[graft.sources.Catalog.createIfAbsent]]
+    *     `[vec_id, codes]` via [[graft.sources.Store.create]]
     *     — the 64× compression lands AT REST.
     *  3. [[pqSearchStored]]: per query, the M×K distance LUT is
     *     computed driver-side (8×8 longs — search-request parameters)
@@ -1492,7 +1471,7 @@ object Ann {
 
   /** Bucket count for the stored PQ codes table: codes are
     * partitioned by `bk = vec_id mod PqBuckets`, so appends land as
-    * bounded per-bucket files, [[graft.sources.Catalog.compactPartitions]]
+    * bounded per-bucket files, [[graft.sources.Store.compact]]
     * compacts in place, and a point lookup by vec_id prunes to one
     * bucket. Raise with corpus size (buckets ≈ corpus / executor-sized
     * chunk); the value only shapes file layout, never results. */
@@ -1500,6 +1479,22 @@ object Ann {
 
   private def withBucket(df: DataFrame): DataFrame =
     df.withColumn("bk", pmod(col("vec_id"), lit(PqBuckets.toLong)))
+
+  private val CodesCols = Seq(StructField("vec_id", LongType),
+    StructField("codes", ArrayType(IntegerType))) // PqEncode's type
+
+  /** Flat PQ codes, partitioned by the vec_id bucket `bk`. */
+  private[graft] val PqCodesStore = Store(
+    StructType(CodesCols :+ StructField("bk", LongType)), Seq("bk"))
+
+  /** IVFADC residual codes, partitioned by IVF list `acid`. */
+  private[graft] val IvfPqCodesStore = Store(
+    StructType(CodesCols :+ StructField("acid", LongType)), Seq("acid"))
+
+  /** The bucketed vector store ([[buildVectorStore]]). */
+  private[graft] val VectorStore = Store(StructType(Seq(
+    StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
+    StructField("bk", LongType))), Seq("bk"))
 
   // ---------------------------------------------------------------
   // Stored model: the codebook(s) are PART of the index — a codes
@@ -1517,6 +1512,17 @@ object Ann {
   /** Model rows: (kind, a, k, d, v) — kind="pq" rows carry subspace
     * codebooks (a = subspace, k = centroid, d = dim); kind="ivf" rows
     * carry coarse centroids (a = cid, k unused, d = dim). */
+  private[graft] val ModelStore = Store(StructType(Seq(
+    StructField("kind", StringType), StructField("a", LongType),
+    StructField("k", IntegerType), StructField("d", IntegerType),
+    StructField("v", LongType))))
+
+  private def modelRowsAt(s: SparkSession, path: String)
+    : Seq[(String, Long, Int, Int, Long)] =
+    ModelStore.read(s, path).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(4)))
+      .toSeq
+
   private def pqModelRows(s: SparkSession, cent: Seq[Seq[Seq[Long]]]): DataFrame = {
     import s.implicits._
     (for (m <- cent.indices; k <- cent(m).indices; d <- cent(m)(k).indices)
@@ -1537,9 +1543,7 @@ object Ann {
       s"codes table at $codesPath is complete but its model at " +
         s"${modelPath(codesPath)} is missing — the index is unusable; " +
         "dropIfExists both and rebuild")
-    s.read.parquet(modelPath(codesPath)).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(4)))
-      .toSeq
+    modelRowsAt(s, modelPath(codesPath))
   }
 
   private def pqModelOf(rows: Seq[(String, Long, Int, Int, Long)]): Seq[Seq[Seq[Long]]] = {
@@ -1597,7 +1601,7 @@ object Ann {
   /** FAILFAST on an unmarked partial codes dir BEFORE any builder
     * drops the stored model: a rebuild over a crashed build would
     * otherwise delete the old model first and then throw on
-    * createPartitionedIfAbsent — leaving a freshly retrained model
+    * the codes create — leaving a freshly retrained model
     * beside stale partial codes, and an operator who "repairs" the
     * codes dir by hand would pair mismatched model+codes. Resolving
     * the partial dir (drop it, or restore its marker) is an explicit
@@ -1618,11 +1622,11 @@ object Ann {
     graft.sources.Catalog.dropIfExists(s, modelPath(codesPath))
     val e = intEmbOf(raw)
     val cent = pqTrain(e)
-    graft.sources.Catalog.createIfAbsent(s, pqModelRows(s, cent), modelPath(codesPath))
-    graft.sources.Catalog.createPartitionedIfAbsent(s,
+    ModelStore.create(s, pqModelRows(s, cent), modelPath(codesPath))
+    PqCodesStore.create(s,
       withBucket(withCodes(e.select($"vec_id", $"iv"), cent)
         .select($"vec_id", $"codes")),
-      codesPath, Seq("bk"))
+      codesPath)
     cent
   }
 
@@ -1662,25 +1666,25 @@ object Ann {
     rawBatch.withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn")
   }
 
-  private def freshAgainst(s: SparkSession, path: String,
+  private def freshAgainst(s: SparkSession, store: Store, path: String,
     rawBatch: DataFrame): DataFrame = {
     import s.implicits._
     val batch = dedupBatchDet(rawBatch)
     val bks = batch.select(pmod($"vec_id", lit(PqBuckets.toLong)).as("bk"))
       .distinct().collect().map(_.getLong(0)).toSeq
     batch.join(
-      s.read.parquet(path).filter($"bk".isin(bks: _*)).select($"vec_id"),
+      store.read(s, path).filter($"bk".isin(bks: _*)).select($"vec_id"),
       Seq("vec_id"), "left_anti")
   }
 
   def appendPqVectors(s: SparkSession, codesPath: String,
     cent: Seq[Seq[Seq[Long]]], rawBatch: DataFrame): Unit = {
     import s.implicits._
-    val e = intEmbOf(freshAgainst(s, codesPath, rawBatch))
-    graft.sources.Catalog.appendPartitioned(s,
+    val e = intEmbOf(freshAgainst(s, PqCodesStore, codesPath, rawBatch))
+    PqCodesStore.append(s,
       withBucket(withCodes(e.select($"vec_id", $"iv"), cent)
         .select($"vec_id", $"codes")),
-      codesPath, Seq("bk"))
+      codesPath)
   }
 
   /** Driver-side per-query LUT: lut[m][k] = integer L2 between the
@@ -1768,8 +1772,8 @@ object Ann {
   /** Create the bucket-partitioned vector store (same crash-safe
     * lifecycle as the codes tables). */
   def buildVectorStore(s: SparkSession, raw: DataFrame, path: String): Boolean =
-    graft.sources.Catalog.createPartitionedIfAbsent(s,
-      withBucket(raw.select(col("vec_id"), col("embedding"))), path, Seq("bk"))
+    VectorStore.create(s,
+      withBucket(raw.select(col("vec_id"), col("embedding"))), path)
 
   /** Append new vectors to the store — the shared [[freshAgainst]]
     * dedup + replay guard, then the staged partitioned append. */
@@ -1788,9 +1792,8 @@ object Ann {
         rawBatch.withColumn("embedding", col("embedding").cast("array<float>"))
       case _ => rawBatch
     }
-    val fresh = freshAgainst(s, path, batch)
-    graft.sources.Catalog.appendPartitioned(s,
-      withBucket(fresh.select($"vec_id", $"embedding")), path, Seq("bk"))
+    val fresh = freshAgainst(s, VectorStore, path, batch)
+    VectorStore.append(s, withBucket(fresh.select($"vec_id", $"embedding")), path)
   }
 
   /** A partial store (crashed build, no _SUCCESS) would not fail a
@@ -1808,7 +1811,7 @@ object Ann {
     ids: Seq[Long]): DataFrame = {
     import s.implicits._
     val bks = ids.map(i => Math.floorMod(i, PqBuckets).toLong).distinct
-    intEmbOf(s.read.parquet(vecStorePath)
+    intEmbOf(VectorStore.read(s, vecStorePath)
       .filter($"bk".isin(bks: _*) && $"vec_id".isin(ids: _*))
       .select($"vec_id", $"embedding"))
   }
@@ -1837,7 +1840,7 @@ object Ann {
     val cent = loadPqIndex(s, codesPath)
     val qdf = pqQueryFrame(s,
       fetchVectors(s, vecStorePath, 0L until NQueries), cent)
-    val codes = s.read.parquet(codesPath).select($"vec_id", $"codes")
+    val codes = PqCodesStore.read(s, codesPath).select($"vec_id", $"codes")
     indexedRerank(s, vecStorePath, pqAdcCandidates(codes, qdf), qdf)
   }
 
@@ -1851,7 +1854,7 @@ object Ann {
     val (lists, pq) = loadIvfPqIndex(s, codesPath)
     val qe = fetchVectors(s, vecStorePath, 0L until NQueries)
     val (qdf, probeDf, allProbed) = ivfPqQueryFrames(s, qe, lists, pq)
-    val codes = s.read.parquet(codesPath).select($"vec_id", $"codes", $"acid")
+    val codes = IvfPqCodesStore.read(s, codesPath).select($"vec_id", $"codes", $"acid")
     indexedRerank(s, vecStorePath,
       ivfPqCandidates(codes, probeDf, allProbed), qdf)
   }
@@ -1881,7 +1884,7 @@ object Ann {
       s"$codesPath is not a complete codes table (crashed build?)")
     val e = intEmb(s, dir)
     val qdf = pqQueryFrame(s, e, cent)
-    val codes = s.read.parquet(codesPath).select($"vec_id", $"codes")
+    val codes = PqCodesStore.read(s, codesPath).select($"vec_id", $"codes")
     pqRerank(e, pqAdcCandidates(codes, qdf), qdf)
   }
 
@@ -1989,9 +1992,9 @@ object Ann {
       val pq = pqTrain(res.select($"vec_id", $"iv"), seedBase = IvfPqSeedBase)
       val coded = withCodes(res, pq)
         .select($"vec_id", $"codes", $"acid")
-      graft.sources.Catalog.createIfAbsent(s,
+      ModelStore.create(s,
         ivfModelRows(s, lists).union(pqModelRows(s, pq)), modelPath(codesPath))
-      graft.sources.Catalog.createPartitionedIfAbsent(s, coded, codesPath, Seq("acid"))
+      IvfPqCodesStore.create(s, coded, codesPath)
       (lists, pq)
     } finally { e.unpersist(false); () }
   }
@@ -2017,9 +2020,9 @@ object Ann {
     try {
       val acids = res.select($"acid").distinct().collect().map(_.getLong(0)).toSeq
       val fresh = withCodes(res, pq).select($"vec_id", $"codes", $"acid")
-        .join(s.read.parquet(codesPath).filter($"acid".isin(acids: _*))
+        .join(IvfPqCodesStore.read(s, codesPath).filter($"acid".isin(acids: _*))
           .select($"vec_id"), Seq("vec_id"), "left_anti")
-      graft.sources.Catalog.appendPartitioned(s, fresh, codesPath, Seq("acid"))
+      IvfPqCodesStore.append(s, fresh, codesPath)
     } finally { res.unpersist(false); () }
   }
 
@@ -2050,10 +2053,10 @@ object Ann {
     * streaming ingest.
     *
     * File accretion (one file per touched partition per batch) is
-    * folded OUT-OF-BAND with [[graft.sources.Catalog
-    * .compactPartitions]] while the stream is stopped — unlike
+    * folded OUT-OF-BAND with [[graft.sources.Store.compact]] while
+    * the stream is stopped — unlike
     * [[graft.sources.ObjectIndex]]'s manifest-guarded in-loop fold,
-    * compactPartitions' dynamic-overwrite rewrite is not crash-
+    * that dynamic-overwrite rewrite is not crash-
     * atomic, so it stays a maintenance-window operation under the
     * single-writer discipline rather than running inside the loop. */
   def ingestVectorStream(vecs: DataFrame, codesPath: String,
@@ -2162,7 +2165,8 @@ object Ann {
     require(graft.sources.Catalog.tableComplete(s, codesPath),
       s"$codesPath is not a complete codes table (crashed build?)")
     ivfPqSearch(s, intEmb(s, dir),
-      s.read.parquet(codesPath).select($"vec_id", $"codes", $"acid"), lists, pq)
+      IvfPqCodesStore.read(s, codesPath).select($"vec_id", $"codes", $"acid"),
+      lists, pq)
   }
 
   def qAnnIvfPq(s: SparkSession, dir: String): DataFrame = {

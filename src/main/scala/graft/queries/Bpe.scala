@@ -76,7 +76,7 @@ object Bpe {
   }
 
   /** Per-process memo of inducted merge tables, keyed by the corpus
-    * files' identity (as [[Ann.annCachePath]]): induction is the
+    * files' identity ([[graft.sources.Store.derivedPath]]): induction is the
     * BUILD step — a frozen vocabulary artifact — so later executions
     * (and [[qBpeTokens]], which consumes it) load rather than
     * re-induce. Deterministic induction makes memo ≡ fresh. */
@@ -89,7 +89,7 @@ object Bpe {
       // keying on the default (embeddings) would serve a stale merge
       // table after the corpus is regenerated under an untouched
       // embeddings file
-      Ann.annCachePath(dir, "bpe", table = "documents.parquet"),
+      graft.sources.Store.derivedPath(dir, "bpe", Seq("documents.parquet")),
       _ => induceMerges(Tables.documents(s, dir)))
 
   /** The inducted merge table: (rnk, lft, rgt, cnt), rank order. */

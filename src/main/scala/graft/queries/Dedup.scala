@@ -5,8 +5,10 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import graft.Tables
 import graft.functions.{TextFunctions, VectorOps}
+import graft.sources.Store
 
 /** Deduplication suite over `documents` / `embeddings` — the core of a
   * training-data pipeline at 100 TB.
@@ -828,12 +830,20 @@ object Dedup {
     val df = g.groupBy($"gram").agg(count(lit(1)).as("df"))
     val gf = g.join(df.filter($"df" <= GramDfCap).select($"gram"), "gram")
       .select($"doc_id", $"gram")
-    graft.sources.Catalog.createIfAbsent(s, gf, s"$indexPath/grams")
-    graft.sources.Catalog.createIfAbsent(s,
+    GramsStore.create(s, gf, s"$indexPath/grams")
+    NgramsStore.create(s,
       gf.groupBy($"doc_id").agg(count(lit(1)).as("ng")), s"$indexPath/ngrams")
-    graft.sources.Catalog.createIfAbsent(s,
+    StopgramsStore.create(s,
       df.filter($"df" > GramDfCap).select($"gram"), s"$indexPath/stopgrams")
   }
+
+  /** The containment index's three tables ([[buildContainIndex]]). */
+  private[graft] val GramsStore = Store(StructType(Seq(
+    StructField("doc_id", LongType), StructField("gram", LongType))))
+  private[graft] val NgramsStore = Store(StructType(Seq(
+    StructField("doc_id", LongType), StructField("ng", LongType))))
+  private[graft] val StopgramsStore = Store(StructType(Seq(
+    StructField("gram", LongType))))
 
   /** Match a NEW batch of docs against the stored corpus index:
     * directed (new_id → corpus doc_id) pairs where ≥
@@ -843,12 +853,12 @@ object Dedup {
   def containNewDocs(s: SparkSession, indexPath: String,
     newDocs: DataFrame): DataFrame = {
     import s.implicits._
-    val stop = s.read.parquet(s"$indexPath/stopgrams")
+    val stop = StopgramsStore.read(s, s"$indexPath/stopgrams")
     val gNew = charGramRowsOf(newDocs.select($"doc_id", $"text"))
       .join(broadcast(stop), Seq("gram"), "left_anti")
     val counts = gNew.groupBy($"doc_id").agg(count(lit(1)).as("ng"))
     val pairs = gNew.select($"doc_id".as("new_id"), $"gram")
-      .join(s.read.parquet(s"$indexPath/grams"), "gram")
+      .join(GramsStore.read(s, s"$indexPath/grams"), "gram")
       .filter($"new_id" =!= $"doc_id")
       .groupBy($"new_id", $"doc_id").agg(count(lit(1)).as("inter"))
     pairs
@@ -1723,10 +1733,15 @@ object Dedup {
     import s.implicits._
     val bg = benchGrams(charGramRowsOf(docs))
     val bgN = bg.groupBy($"bench_id").agg(count(lit(1)).as("nbg"))
-    graft.sources.Catalog.createIfAbsent(s,
+    BenchIndexStore.create(s,
       bg.join(bgN, "bench_id").select($"gram", $"bench_id", $"nbg"),
       indexPath)
   }
+
+  /** The stored benchmark gram index ([[buildBenchIndex]]). */
+  private[graft] val BenchIndexStore = Store(StructType(Seq(
+    StructField("gram", LongType), StructField("bench_id", LongType),
+    StructField("nbg", LongType))))
 
   /** (doc, bench) contamination pairs of a batch against the stored
     * index — the shared probe stage: gram the BATCH only, broadcast
@@ -1741,7 +1756,7 @@ object Dedup {
     require(graft.sources.Catalog.tableComplete(s, indexPath),
       s"$indexPath is not a complete bench index — build it first")
     charGramRowsOf(docs.select($"doc_id", $"text"))
-      .join(broadcast(s.read.parquet(indexPath)), "gram")
+      .join(broadcast(BenchIndexStore.read(s, indexPath)), "gram")
       .groupBy($"doc_id", $"bench_id", $"nbg")
       .agg(count(lit(1)).as("hits"))
       .filter($"hits" >= ContamMinHits &&
@@ -1915,8 +1930,12 @@ object Dedup {
     * failure, as every builder in this file). */
   def buildLineDfIndex(s: SparkSession, docs: DataFrame,
     path: String): Boolean =
-    graft.sources.Catalog.createPartitionedIfAbsent(s, segCounts(docs),
-      path, Seq("bk"))
+    LineDfStore.create(s, segCounts(docs), path)
+
+  /** The segment-df index ([[segCounts]]), partitioned by `bk`. */
+  private[graft] val LineDfStore = Store(StructType(Seq(
+    StructField("seg_fp", StringType), StructField("n_docs", LongType),
+    StructField("bk", LongType))), Seq("bk"))
 
   /** Fold markers kept per index root — far beyond any replay
     * horizon (a streaming checkpoint re-delivers at most the last
@@ -2001,7 +2020,7 @@ object Dedup {
     val bc = segCounts(batch)
     val bks = bc.select($"bk").distinct().collect().map(_.getLong(0))
     if (bks.nonEmpty) {
-      val stored = s.read.parquet(path).filter($"bk".isin(bks.toSeq: _*))
+      val stored = LineDfStore.read(s, path).filter($"bk".isin(bks.toSeq: _*))
         .select($"seg_fp", $"n_docs".as("n_stored"))
       val summed = bc.join(stored, Seq("seg_fp"), "left")
         .select($"seg_fp",
@@ -2025,7 +2044,7 @@ object Dedup {
     import s.implicits._
     require(graft.sources.Catalog.tableComplete(s, path),
       s"$path is not a complete segment-df index — build it first")
-    val boiler = s.read.parquet(path)
+    val boiler = LineDfStore.read(s, path)
       .filter($"n_docs" >= LineDupDocs)
       .select($"seg_fp", lit(true).as("boiler"))
     val segs = segmentsOf(docs)
@@ -2223,25 +2242,17 @@ object Dedup {
   private def spanBk(fp: Column): Column =
     pmod(conv(substring(fp, 1, 15), 16, 10).cast("long"), lit(SpanBuckets))
 
-  /** Declared index schema — reads go through it so a LEGITIMATELY
-    * empty index (a corpus whose docs are all shorter than one
-    * window writes zero data files, only the `_SUCCESS` marker) is an
-    * empty frame, not an unreadable table: schema inference over a
-    * file-less root throws, and since the fold probe reads before it
-    * appends, an empty index could otherwise never grow out of its
-    * emptiness. */
-  private val SpanIndexSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("fp",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("first_doc",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("first_pos",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("bk",
-      org.apache.spark.sql.types.LongType)))
+  /** The span index ([[spanFirsts]]), partitioned by `bk`. A corpus
+    * whose docs are all shorter than one window writes an empty index
+    * (only `_SUCCESS`), which reads as an empty frame and grows by
+    * append. */
+  private[graft] val SpanIndexStore = Store(StructType(Seq(
+    StructField("fp", StringType), StructField("first_doc", LongType),
+    StructField("first_pos", IntegerType), StructField("bk", LongType))),
+    Seq("bk"))
 
   private def readSpanIndex(s: SparkSession, path: String): DataFrame =
-    s.read.schema(SpanIndexSchema).parquet(path)
+    SpanIndexStore.read(s, path)
 
   /** Per-batch first occurrence of every window fingerprint. */
   private def spanFirsts(docs: DataFrame): DataFrame = {
@@ -2257,8 +2268,7 @@ object Dedup {
     * (complete table → no-op, unmarked partial → loud failure). */
   def buildSpanIndex(s: SparkSession, docs: DataFrame,
     path: String): Boolean =
-    graft.sources.Catalog.createPartitionedIfAbsent(s, spanFirsts(docs),
-      path, Seq("bk"))
+    SpanIndexStore.create(s, spanFirsts(docs), path)
 
   /** [[spanDedup]] for a NEW batch against the stored index: a batch
     * window is duplicated if its fingerprint is already AT REST (any
@@ -2319,10 +2329,7 @@ object Dedup {
       val stored = readSpanIndex(s, path).filter($"bk".isin(bks.toSeq: _*))
         .select($"fp")
       val fresh = firsts.join(stored, Seq("fp"), "left_anti")
-      // declared schema: appending to a legitimately EMPTY index must
-      // not trip over schema inference on a file-less table root
-      graft.sources.Catalog.appendPartitioned(s, fresh, path, Seq("bk"),
-        tableSchema = Some(SpanIndexSchema))
+      SpanIndexStore.append(s, fresh, path)
     }
     f.create(marker, true).close()
     gcFoldMarkers(f, root, "_span_fold_")

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.Store
 
 /** Multimodal-column plumbing: image/audio/video payloads are opaque
   * `binary` columns with typed metadata alongside. The harness tables
@@ -760,13 +761,12 @@ object Multimodal {
   private def phashBk(pi: Column, pv: Column): Column =
     pmod(hash(pi, pv), lit(PhashIndexBuckets)).cast("long")
 
-  /** Declared index schema (reads of a legitimately empty or pruned
-    * index must not re-infer; `bk` is the partition key). */
-  private[graft] val PhashIndexSchema: StructType = StructType(Seq(
+  /** The piece index ([[phashPieceRows]]), partitioned by `bk`. */
+  private[graft] val PhashIndexStore = Store(StructType(Seq(
     StructField("doc_id", LongType), StructField("pi", IntegerType),
     StructField("pv", IntegerType), StructField("p0", IntegerType),
     StructField("p1", IntegerType), StructField("p2", IntegerType),
-    StructField("p3", IntegerType), StructField("bk", LongType)))
+    StructField("p3", IntegerType), StructField("bk", LongType))), Seq("bk"))
 
   /** Signature frame (doc_id, p0..p3) → its 4-rows-per-doc piece-index
     * image: the (pi, pv) blocking key, the full signature carried
@@ -779,7 +779,7 @@ object Multimodal {
   }
 
   def readPhashIndex(s: SparkSession, path: String): DataFrame =
-    s.read.schema(PhashIndexSchema).parquet(path)
+    PhashIndexStore.read(s, path)
 
   // --- doc_id membership sidecar -------------------------------
   // The fold's first-write-wins anti-join needs "is this doc_id
@@ -808,15 +808,15 @@ object Multimodal {
   private[graft] def phashMembersPath(indexPath: String): String =
     indexPath + "_members"
 
-  private[graft] val PhashMembersSchema: StructType = StructType(Seq(
+  private[graft] val PhashMembersStore = Store(StructType(Seq(
     StructField("doc_id", LongType), StructField("batch_id", LongType),
-    StructField("mb", LongType)))
+    StructField("mb", LongType))), Seq("mb"))
 
   private def phashMb(docId: Column): Column =
     pmod(docId, lit(PhashMemberBuckets.toLong))
 
   def readPhashMembers(s: SparkSession, indexPath: String): DataFrame =
-    s.read.schema(PhashMembersSchema).parquet(phashMembersPath(indexPath))
+    PhashMembersStore.read(s, phashMembersPath(indexPath))
 
   /** Heal-or-rebuild the membership sidecar for a COMPLETE index at
     * `indexPath`: crashed sidecar appends roll forward/back, and an
@@ -834,7 +834,7 @@ object Multimodal {
       val m = readPhashIndex(s, indexPath).select($"doc_id").distinct()
         .withColumn("batch_id", lit(PhashMemberBaseGen))
         .withColumn("mb", phashMb($"doc_id"))
-      Catalog.createPartitionedIfAbsent(s, m, mp, Seq("mb"))
+      PhashMembersStore.create(s, m, mp)
     }
   }
 
@@ -854,8 +854,7 @@ object Multimodal {
     * discipline). The membership sidecar is (re)built alongside. */
   def buildPhashIndex(s: SparkSession, sigs: DataFrame,
     path: String): Boolean = {
-    val created = graft.sources.Catalog.createPartitionedIfAbsent(s,
-      phashPieceRows(sigs), path, Seq("bk"))
+    val created = PhashIndexStore.create(s, phashPieceRows(sigs), path)
     ensurePhashMembers(s, path)
     created
   }
@@ -877,7 +876,7 @@ object Multimodal {
     import s.implicits._
     // heal crashed folds before reading: a died-mid-commit append
     // would otherwise be silently read as a subset of its piece rows
-    // (missed pairs, no error) — the healOwnedStore-on-entry
+    // (missed pairs, no error) — the heal-on-entry
     // discipline every other store in the module follows
     graft.sources.Catalog.recoverAppends(s, path)
     require(graft.sources.Catalog.tableComplete(s, path),
@@ -958,35 +957,16 @@ object Multimodal {
     // "build it first" that has no build entry point (r14 review)
     if (Catalog.tableComplete(s, indexPath))
       ensurePhashMembers(s, indexPath)
-    val stores = Seq(indexPath -> "bk", phashMembersPath(indexPath) -> "mb") ++
-      pairsPath.map(_ -> "batch_id")
+    val stores = Seq(indexPath -> PhashIndexStore,
+      phashMembersPath(indexPath) -> PhashMembersStore) ++
+      pairsPath.map(_ -> PhashPairsStore)
     for ((path, _) <- stores) {
       require(Catalog.tableComplete(s, path),
         s"$path is not a complete store — build it first")
       require(!Catalog.appendPending(s, path),
         s"$path has unresolved crashed appends — recoverAppends first")
     }
-    for ((path, partCol) <- stores)
-      // a grow-from-empty store can be legitimately file-less (only
-      // partition dirs / _SUCCESS); nothing to compact there, and a
-      // schema-less read of a file-less root would throw
-      if (hasDataFiles(s, path))
-        Catalog.compactPartitions(s, path, partCol, parallelism)
-  }
-
-  private def hasDataFiles(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) return false
-    val it = f.listFiles(p, true)
-    var found = false
-    while (!found && it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      found = st.isFile && name.endsWith(".parquet") &&
-        !name.startsWith("_") && !name.startsWith(".")
-    }
-    found
+    for ((path, store) <- stores) store.compact(s, path, parallelism)
   }
 
   /** The fold's membership probe: which of the batch's doc_ids are
@@ -1074,12 +1054,9 @@ object Multimodal {
         val newMembers = freshDocs.join(own, Seq("doc_id"), "left_anti")
           .withColumn("batch_id", lit(batchId))
           .select($"doc_id", $"batch_id", $"mb")
-        if (!newMembers.isEmpty)
-          Catalog.appendPartitioned(s, newMembers, mp, Seq("mb"),
-            tableSchema = Some(PhashMembersSchema))
+        if (!newMembers.isEmpty) PhashMembersStore.append(s, newMembers, mp)
         val fresh = bp.join(freshDocs.select($"doc_id"), Seq("doc_id"), "left_semi")
-        Catalog.appendPartitioned(s, fresh, path, Seq("bk"),
-          tableSchema = Some(PhashIndexSchema))
+        PhashIndexStore.append(s, fresh, path)
       }
     }
     f.create(marker, true).close()
@@ -1099,17 +1076,15 @@ object Multimodal {
       .toDF()
   }
 
-  /** Declared schema of the streamed near-dup PAIRS store —
-    * `batch_id` is the partition key; an all-unique batch appends
-    * zero rows and a file-less partitioned root cannot infer its
-    * schema (the [[graft.queries.Spatial.MatchSchema]] rule). */
-  private[graft] val PhashPairsSchema: StructType = StructType(Seq(
+  /** The streamed near-dup PAIRS store, partitioned by arrival
+    * `batch_id` (an all-unique batch commits zero rows). */
+  private[graft] val PhashPairsStore = Store(StructType(Seq(
     StructField("d1", LongType), StructField("d2", LongType),
-    StructField("hamming", IntegerType), StructField("batch_id", LongType)))
+    StructField("hamming", IntegerType), StructField("batch_id", LongType))),
+    Seq("batch_id"))
 
-  /** Read the streamed pairs store (declared schema — see above). */
   def readPhashPairs(s: SparkSession, path: String): DataFrame =
-    s.read.schema(PhashPairsSchema).parquet(path)
+    PhashPairsStore.read(s, path)
 
   /** One full blob micro-batch — the perceptual-index twin of
     * [[graft.queries.Spatial.associateBatch]]: sign the delivered
@@ -1121,40 +1096,24 @@ object Multimodal {
     * then fold the batch into the index ([[updatePhashIndex]], same
     * batch id). Pairs land BEFORE the fold, so a replayed
     * crash-window batch probes the same pre-fold index and the two
-    * halves stay independently replay-guarded: the pairs append skips
-    * when its partition exists, the fold skips on its marker, and a
-    * crash inside either heals on entry ([[
-    * graft.queries.Spatial.healOwnedStore]] / the fold's index-wide
-    * anti-join). Returns pairs appended (0 on replay).
+    * halves stay independently replay-guarded: the pairs commit skips
+    * when its partition exists ([[graft.sources.Store.commitBatch]]),
+    * the fold skips on its marker, and a crash inside either heals on
+    * entry (the commit's heal / the fold's index-wide anti-join).
+    * Returns pairs appended (0 on replay).
     *
     * 100 TB shape: per-batch cost tracks the batch — the probe reads
     * only the bucket partitions the batch's piece keys hash into, and
     * the fold appends inside its own partitions. */
   def blobBatch(s: SparkSession, batch: DataFrame, indexPath: String,
     pairsPath: String, batchId: Long): Long = {
-    import graft.sources.Catalog
-    Spatial.healOwnedStore(s, pairsPath)
     val sigs = sigsOfBlobs(batch).localCheckpoint() // pairs AND fold
-    val partDir = new org.apache.hadoop.fs.Path(pairsPath, s"batch_id=$batchId")
-    val fsys = partDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    var n = 0L
-    if (!(Catalog.tableComplete(s, pairsPath) && fsys.exists(partDir))) {
-      val pairs = phashNewBlobs(s, indexPath, sigs)
-        .withColumn("batch_id", lit(batchId))
-        .localCheckpoint() // one probe feeds count AND append
-      n = pairs.count()
-      if (!Catalog.tableComplete(s, pairsPath))
-        Catalog.createPartitionedIfAbsent(s, pairs, pairsPath, Seq("batch_id"))
-      else
-        Catalog.appendPartitioned(s, pairs, pairsPath, Seq("batch_id"),
-          Some(PhashPairsSchema))
-      // an all-unique batch appends no files — record its completion
-      // durably as its (empty) partition directory, so the replay
-      // guard and [[ensurePhashStream]]'s frontier detection can tell
-      // "ran, zero pairs" from "never ran" (without this the batch
-      // replays forever, and a replay AFTER later batches fold would
-      // mis-attribute their cross pairs to this batch)
-      if (!fsys.exists(partDir)) fsys.mkdirs(partDir)
+    // an all-unique batch still leaves its (empty) partition
+    // directory, so [[ensurePhashStream]]'s frontier detection can
+    // tell "ran, zero pairs" from "never ran" (a replay AFTER later
+    // batches fold would mis-attribute their cross pairs to it)
+    val n = PhashPairsStore.commitBatch(s, pairsPath, batchId) {
+      phashNewBlobs(s, indexPath, sigs)
     }
     updatePhashIndex(s, indexPath, sigs, batchId)
     n
@@ -1164,21 +1123,16 @@ object Multimodal {
     * cache pattern — regenerated test data can never read a stale
     * index). */
   private def phashIndexPath(dir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-      System.getProperty("java.io.tmpdir")) +
-      s"/graft_phash_idx_${Ann.annCacheKey(dir, Seq("documents.parquet"))}"
+    Store.derivedPath(dir, "phash_idx", Seq("documents.parquet"))
 
   /** Micro-batches the registered streamed-lifecycle corpus is split
     * into (batch = doc_id mod this — deterministic, so the oracle
     * reproduces both the assignment and each pair's ARRIVAL batch). */
   private[graft] val PhashStreamBatches = 3
 
-  private def phashStreamPaths(dir: String): (String, String) = {
-    val key = Ann.annCacheKey(dir, Seq("documents.parquet"))
-    val root = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-      System.getProperty("java.io.tmpdir"))
-    (s"$root/graft_phash_sidx_$key", s"$root/graft_phash_pairs_$key")
-  }
+  private def phashStreamPaths(dir: String): (String, String) =
+    (Store.derivedPath(dir, "phash_sidx", Seq("documents.parquet")),
+      Store.derivedPath(dir, "phash_pairs", Seq("documents.parquet")))
 
   /** Build (or heal) the registered STREAMED perceptual lifecycle for
     * `dir`: a cold-start empty index, then the corpus through
@@ -1224,7 +1178,7 @@ object Multimodal {
         dropPhashIndex(s, idxPath)
         Catalog.dropIfExists(s, pairsPath)
       }
-      Spatial.healOwnedStore(s, idxPath)
+      Store.heal(s, idxPath)
       if (!Catalog.tableComplete(s, idxPath))
         buildPhashIndex(s, s.emptyDataset[BlobSig].toDF(), idxPath)
       // each (re)played batch re-derives its slice of the corpus —

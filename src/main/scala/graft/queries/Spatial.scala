@@ -2,7 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import graft.Tables
+import graft.sources.Store
 
 /** Spatial / astronomy workload — the Qserv-emulating side of the
   * reference: cone and box searches on (ra, dec), a density map, and
@@ -1083,7 +1085,16 @@ object Spatial {
     * distance tie goes to the smallest k2 exactly as the oracle's
     * MIN(k2) at the minimum distance; no join back, so the pair list
     * is consumed once. Points with no neighbor within 1° drop out,
-    * matching the oracle. */
+    * matching the oracle.
+    *
+    * Bench watch: the argmin plans as a SortAggregate, partial and
+    * final (Spark 4.1.2, `graft.Explain`, initial and final AQE
+    * plan): a struct buffer is not fixed-width, so `min(struct(…))`
+    * cannot take the hash path, and `min_by(k2, struct(dist_r6, k2))`
+    * plans the same. `min_by(k2, dist_r6)` gets a HashAggregate but
+    * its tie-break is input-order dependent, so it would not return
+    * the smallest k2 on a rounded-distance tie. Regresses if the pair
+    * set grows enough for the per-partition sort to dominate. */
   def qNearestNbr(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     orderedPairs(s, dir, 1.0)
@@ -1152,6 +1163,18 @@ object Spatial {
        |ORDER BY k1, rnk""".stripMargin
 
   // ---------------------------------------------------------------
+  private val PointCols = Seq(StructField("k", LongType),
+    StructField("ra", DoubleType), StructField("decl", DoubleType))
+
+  /** [[writeZonePartitioned]]'s layout: [[points]] + its int `zone`. */
+  private[graft] val ZoneStore = Store(
+    StructType(PointCols :+ StructField("zone", IntegerType)), Seq("zone"))
+
+  /** [[writeZoneRaPartitioned]]'s layout: + the int ra cell `rb`. */
+  private[graft] val ZoneRaStore = Store(StructType(PointCols ++ Seq(
+    StructField("zone", IntegerType), StructField("rb", IntegerType))),
+    Seq("zone", "rb"))
+
   /** Materialize the point catalog zone-partitioned: the dec stripe
     * (5° zones by default) is the PHYSICAL partition key, so spatial
     * scans prune at the source — the SURVEY §5 claim that the zone key
@@ -1219,7 +1242,7 @@ object Spatial {
         }
       $"zone" === z && $"rb".isin(rbs: _*)
     }.reduce(_ || _)
-    s.read.parquet(path)
+    ZoneRaStore.read(s, path)
       .filter(pred)
       .withColumn("dist_r6",
         round(distDeg($"ra", $"decl", lit(raC), lit(decC)), 6))
@@ -1239,7 +1262,7 @@ object Spatial {
     import s.implicits._
     val zLo = math.floor((decC - radius + 90.0) / zoneHeight).toInt
     val zHi = math.floor((decC + radius + 90.0) / zoneHeight).toInt
-    s.read.parquet(path)
+    ZoneStore.read(s, path)
       .filter($"zone" >= zLo && $"zone" <= zHi)
       .withColumn("dist_r6",
         round(distDeg($"ra", $"decl", lit(raC), lit(decC)), 6))
@@ -1474,68 +1497,25 @@ object Spatial {
   // bounded by the batch (the dedup-index lifecycle discipline
   // applied to the spatial association).
 
-  import org.apache.spark.sql.types.{StructType, StructField, LongType, DoubleType}
-
-  /** Declared schema of the stored match table — required because a
-    * legitimate all-quiet night appends ZERO rows and a file-less
-    * partitioned root cannot infer its schema. `batch_id` is the
-    * partition key, declared LONG so reads never re-infer it as INT. */
-  private[graft] val MatchSchema: StructType = StructType(Seq(
+  /** The stored match table, partitioned by the LONG `batch_id`. */
+  private[graft] val MatchStore = Store(StructType(Seq(
     StructField("det_k", LongType), StructField("obj_k", LongType),
-    StructField("dist_r6", DoubleType), StructField("batch_id", LongType)))
+    StructField("dist_r6", DoubleType), StructField("batch_id", LongType))),
+    Seq("batch_id"))
 
-  /** Read the stored match table (declared schema — see above). */
   def readMatchTable(s: SparkSession, matchPath: String): DataFrame =
-    s.read.schema(MatchSchema).parquet(matchPath)
-
-  /** Heal an association store at `path` before writing: resolve
-    * crashed appends, and roll back a CREATE that died before its
-    * `_SUCCESS` committed — without this, one crash during the very
-    * first create would wedge every later batch behind the
-    * guardedCreate throw, breaking the replay-heals contract. The
-    * rollback only fires when the directory carries the committer's
-    * own evidence of a died-mid-write job (a `_temporary` staging
-    * dir, or nothing at all); a marker-less directory WITH data files
-    * still fails loudly — it could be a foreign table at a mistyped
-    * path, and [[graft.sources.Catalog]]'s never-delete rule applies
-    * to anything this module cannot prove it was writing. */
-  private[graft] def healOwnedStore(s: SparkSession, path: String): Unit = {
-    import graft.sources.Catalog
-    Catalog.recoverAppends(s, path)
-    if (Catalog.tableExists(s, path) && !Catalog.tableComplete(s, path)) {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val entries = f.listStatus(p)
-      val crashedWrite = entries.isEmpty || entries.exists(st =>
-        st.isDirectory && st.getPath.getName == "_temporary")
-      if (crashedWrite) {
-        // an empty dir carries no committer evidence either way; it is
-        // reclaimed as a crashed create, but LOUDLY, so an operator's
-        // pre-created (mkdir'ed) store location isn't removed silently
-        if (entries.isEmpty) System.err.println(
-          s"[graft] reclaiming EMPTY directory $path as a crashed " +
-            "create (no data files, no _SUCCESS; pre-created empty " +
-            "store locations are reclaimed and rewritten)")
-        Catalog.dropIfExists(s, path)
-      } else throw new IllegalStateException(
-        s"$path has data files but no _SUCCESS marker and no _temporary " +
-          "staging dir — not recognizably a crashed create of this " +
-          "lifecycle. Refusing to clear it; call Catalog.dropIfExists " +
-          "first if it should be replaced.")
-    }
-  }
+    MatchStore.read(s, matchPath)
 
   /** Associate one batch of fresh detections (`k`, `ra`, `decl`)
     * against the stored object halo table and append the matches —
     * (det_k, obj_k, dist_r6) — to the match table at `matchPath`,
     * partitioned by `batch_id`.
     *
-    * Lifecycle: crashed creates/appends are healed first
-    * ([[healOwnedStore]] — every staged-append path runs recovery on
-    * ITS path), and a batch whose partition already exists is a
-    * REPLAY and appends nothing, so re-running a nightly job after a
-    * crash can never double-associate. Returns the number of match
-    * rows appended (0 on replay).
+    * Lifecycle: [[graft.sources.Store.commitBatch]] — crashed
+    * creates/appends are healed first, and a batch whose partition
+    * already exists is a REPLAY and appends nothing, so re-running a
+    * nightly job after a crash can never double-associate. Returns
+    * the number of match rows appended (0 on replay).
     *
     * Scale shape: the batch takes [[withHomeCell]] + ONE exchange
     * into the halo table's bucketing; the object side — the 100 TB
@@ -1544,35 +1524,21 @@ object Spatial {
     * by night. */
   def associateNewDetections(s: SparkSession, batch: DataFrame,
     objHalo: DataFrame, matchPath: String, batchId: Long,
-    radius: Double, zoneHeight: Double = 5.0): Long = {
-    import graft.sources.Catalog
-    healOwnedStore(s, matchPath)
-    val partDir = new org.apache.hadoop.fs.Path(matchPath, s"batch_id=$batchId")
-    val fsys = partDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (Catalog.tableComplete(s, matchPath) && fsys.exists(partDir)) return 0L
-    val matches = xmatchStored(withHomeCell(batch, zoneHeight), objHalo, radius)
-      .select(col("k1").as("det_k"), col("k2").as("obj_k"), col("dist_r6"))
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint() // one association pass feeds count AND append
-    val n = matches.count()
-    if (!Catalog.tableComplete(s, matchPath))
-      Catalog.createPartitionedIfAbsent(s, matches, matchPath, Seq("batch_id"))
-    else
-      Catalog.appendPartitioned(s, matches, matchPath, Seq("batch_id"),
-        Some(MatchSchema))
-    n
-  }
+    radius: Double, zoneHeight: Double = 5.0): Long =
+    MatchStore.commitBatch(s, matchPath, batchId) {
+      xmatchStored(withHomeCell(batch, zoneHeight), objHalo, radius)
+        .select(col("k1").as("det_k"), col("k2").as("obj_k"), col("dist_r6"))
+    }
 
-  /** Declared transient-table schema — an all-matched batch appends
-    * ZERO rows and a file-less partitioned root cannot infer its
-    * schema; `batch_id` declared LONG like [[MatchSchema]]'s. */
-  private[graft] val TransientSchema: StructType = StructType(Seq(
+  /** The stored transient table — the unmatched detections per batch
+    * (an all-matched batch commits zero rows). */
+  private[graft] val TransientStore = Store(StructType(Seq(
     StructField("det_k", LongType), StructField("ra", DoubleType),
-    StructField("decl", DoubleType), StructField("batch_id", LongType)))
+    StructField("decl", DoubleType), StructField("batch_id", LongType))),
+    Seq("batch_id"))
 
-  /** Read the stored transient table (declared schema — see above). */
   def readTransients(s: SparkSession, path: String): DataFrame =
-    s.read.schema(TransientSchema).parquet(path)
+    TransientStore.read(s, path)
 
   /** One full nightly batch: associate against the stored halo table
     * and append the matches ([[associateNewDetections]]), then append
@@ -1590,68 +1556,40 @@ object Spatial {
   def associateBatch(s: SparkSession, batch: DataFrame, objHalo: DataFrame,
     matchPath: String, transientPath: String, batchId: Long,
     radius: Double, zoneHeight: Double = 5.0): (Long, Long) = {
-    import graft.sources.Catalog
     // FULL-replay fast path (r20: the warm ensure() probes must cost
     // O(metadata), not a data pass): when BOTH stores already hold
-    // this batch's committed partition, the batch frame is never
-    // touched — previously the pre-guard localCheckpoint below
-    // materialized a fresh scan of the batch slice on EVERY replayed
-    // ensure(), 3 batches × every store-backed query sample. The
-    // guards below re-check after healing, so a crashed append still
-    // heals exactly as before; only the nothing-to-do path changed.
-    //
-    // Invariant: a `batch_id=` dir implies a COMPLETE batch only once
-    // `Catalog.recoverAppends` has run on the store. An append stages
-    // its files and moves them into place after its manifest is
-    // written; a crash mid-move leaves a partial `batch_id=` dir that
-    // recovery rolls forward from that manifest. Both
-    // `healOwnedStore` calls (which run `recoverAppends`) must
-    // therefore stay BEFORE this check.
-    def committed(path: String): Boolean = {
-      val pd = new org.apache.hadoop.fs.Path(path, s"batch_id=$batchId")
-      Catalog.tableComplete(s, path) &&
-        pd.getFileSystem(s.sparkContext.hadoopConfiguration).exists(pd)
-    }
-    healOwnedStore(s, matchPath)
-    healOwnedStore(s, transientPath)
-    if (committed(matchPath) && committed(transientPath)) return (0L, 0L)
+    // this batch, the batch frame is never touched. `committed` heals
+    // each store before its check, as every commitBatch does.
+    if (MatchStore.committed(s, matchPath, batchId) &&
+      TransientStore.committed(s, transientPath, batchId)) return (0L, 0L)
     // the batch feeds the association AND the anti-join — pin it once
     val b = batch.select(col("det_k").as("k"), col("ra"), col("decl"))
       .localCheckpoint(true)
     val nMatch = associateNewDetections(s, b, objHalo, matchPath,
       batchId, radius, zoneHeight)
-    val partDir = new org.apache.hadoop.fs.Path(transientPath,
-      s"batch_id=$batchId")
-    val fsys = partDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (Catalog.tableComplete(s, transientPath) && fsys.exists(partDir))
-      return (nMatch, 0L)
-    val matched = readMatchTable(s, matchPath)
-      .filter(col("batch_id") === batchId)
-      .select(col("det_k").as("k")).distinct()
-    val tr = b.join(matched, Seq("k"), "left_anti")
-      .select(col("k").as("det_k"), col("ra"), col("decl"))
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint(true) // one pass feeds count AND append
-    val nTrans = tr.count()
-    if (!Catalog.tableComplete(s, transientPath))
-      Catalog.createPartitionedIfAbsent(s, tr, transientPath, Seq("batch_id"))
-    else
-      Catalog.appendPartitioned(s, tr, transientPath, Seq("batch_id"),
-        Some(TransientSchema))
+    val nTrans = TransientStore.commitBatch(s, transientPath, batchId) {
+      val matched = readMatchTable(s, matchPath)
+        .filter(col("batch_id") === batchId)
+        .select(col("det_k").as("k")).distinct()
+      b.join(matched, Seq("k"), "left_anti")
+        .select(col("k").as("det_k"), col("ra"), col("decl"))
+    }
     (nMatch, nTrans)
   }
 
-  /** Declared schema of the new-object DELTA store — halo-layout rows
-    * ([[withHaloCells]] columns) plus the creating batch. */
-  private[graft] val ObjDeltaSchema: StructType = StructType(Seq(
-    StructField("k", LongType), StructField("ra", DoubleType),
-    StructField("decl", DoubleType),
-    StructField("is_core", org.apache.spark.sql.types.IntegerType),
-    StructField("cell", LongType), StructField("batch_id", LongType)))
+  /** The halo layout's columns ([[withHaloCells]]); its files are
+    * read directly only in the fresh-JVM recovery of [[readHaloBase]]. */
+  private val HaloCols = PointCols ++ Seq(
+    StructField("is_core", IntegerType), StructField("cell", LongType))
+  private[graft] val HaloStore = Store(StructType(HaloCols))
 
-  /** Read the new-object delta store (declared schema). */
+  /** The new-object DELTA store — halo-layout rows plus the creating
+    * batch. */
+  private[graft] val ObjDeltaStore = Store(
+    StructType(HaloCols :+ StructField("batch_id", LongType)), Seq("batch_id"))
+
   def deltaObjects(s: SparkSession, path: String): DataFrame =
-    s.read.schema(ObjDeltaSchema).parquet(path)
+    ObjDeltaStore.read(s, path)
 
   /** Object creation — the step that closes the nightly cycle: one
     * batch's TRANSIENTS (stored by [[associateBatch]]) become new
@@ -1673,28 +1611,15 @@ object Spatial {
     * replay). */
   def createObjectsFromTransients(s: SparkSession, transientPath: String,
     batchId: Long, deltaPath: String, idOffset: Long, radius: Double,
-    zoneHeight: Double = 5.0): Long = {
-    import graft.sources.Catalog
-    healOwnedStore(s, deltaPath)
-    val partDir = new org.apache.hadoop.fs.Path(deltaPath,
-      s"batch_id=$batchId")
-    val fsys = partDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (Catalog.tableComplete(s, deltaPath) && fsys.exists(partDir)) return 0L
-    val newObjs = withHaloCells(
-      readTransients(s, transientPath)
-        .filter(col("batch_id") === batchId)
-        .select((col("det_k") + idOffset).as("k"), col("ra"), col("decl")),
-      radius, zoneHeight)
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint(true) // one pass feeds count AND append
-    val n = newObjs.filter(col("is_core") === 1).count()
-    if (!Catalog.tableComplete(s, deltaPath))
-      Catalog.createPartitionedIfAbsent(s, newObjs, deltaPath, Seq("batch_id"))
-    else
-      Catalog.appendPartitioned(s, newObjs, deltaPath, Seq("batch_id"),
-        Some(ObjDeltaSchema))
-    n
-  }
+    zoneHeight: Double = 5.0): Long =
+    ObjDeltaStore.commitBatch(s, deltaPath, batchId,
+      count = _.filter(col("is_core") === 1).count()) {
+      withHaloCells(
+        readTransients(s, transientPath)
+          .filter(col("batch_id") === batchId)
+          .select((col("det_k") + idOffset).as("k"), col("ra"), col("decl")),
+        radius, zoneHeight)
+    }
 
   /** The periodic maintenance rebuild that folds the accumulated
     * new-object delta back into the base halo layout — the LSM
@@ -1719,7 +1644,7 @@ object Spatial {
     * still matches (quiesced op: nothing appends mid-compact), so the
     * stage — not the mid-overwrite table — is the source of truth;
     * died between the final drops → the distinct collapses
-    * already-folded delta objects. Like `Catalog.compactPartitions`,
+    * already-folded delta objects. Like `Store.compact`,
     * this is a maintenance op for a quiesced pipeline — a reader
     * probing base ∪ delta INSIDE the rebuild window would see delta
     * objects twice. Returns the compacted object count. */
@@ -1727,7 +1652,7 @@ object Spatial {
     deltaPath: String, radius: Double, zoneHeight: Double = 5.0,
     numBuckets: Int = 16): Long = {
     import graft.sources.Catalog
-    healOwnedStore(s, deltaPath) // crashed delta appends/creates first
+    Store.heal(s, deltaPath) // crashed delta appends/creates first
     val stagePath = deltaPath + "_compact_stage"
     val fsys = new org.apache.hadoop.fs.Path(stagePath)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1777,7 +1702,7 @@ object Spatial {
     }
     // the valid stage is the durable pin — the base table may be
     // mid-overwrite from a crashed predecessor, so read the stage
-    val pinned = s.read.parquet(stagePath)
+    val pinned = Store(StructType(PointCols)).read(s, stagePath) // baseCore's columns
     val n = pinned.count()
     // the rebuild may be a RECOVERY in a fresh JVM: the crashed
     // table's managed location can survive without a catalog entry,
@@ -1827,7 +1752,7 @@ object Spatial {
       require(haloBaseReadable(s, table),
         s"base halo table $table is neither registered in this session " +
           s"nor a complete layout at $loc — cannot compact")
-      s.read.parquet(loc.toString)
+      HaloStore.read(s, loc.toString)
     }
 
   /** Ownership marker every graft table writer drops into the
@@ -1853,8 +1778,8 @@ object Spatial {
     * requires OWNERSHIP EVIDENCE: the module's own `graft_` name
     * prefix (advice r12), the [[OwnedMarker]] a graft writer dropped
     * after commit, or the committer's own died-mid-write residue (a
-    * `_temporary` staging dir / an empty dir — the [[healOwnedStore]]
-    * rule). A marker-less directory WITH data fails LOUDLY (not a
+    * `_temporary` staging dir / an empty dir — the
+    * [[graft.sources.Store.heal]] rule). A marker-less directory WITH data fails LOUDLY (not a
     * silent no-op — r13 review: the silent path re-introduced the
     * fresh-JVM recovery wedge for caller-named tables, surfacing only
     * as a confusing saveAsTable failure later): it could be a foreign
@@ -1889,12 +1814,10 @@ object Spatial {
     * [[writeXmatchHalo]] / [[associateNewDetections]] directly; the
     * registered (session, dir) signature has nowhere to thread one
     * through. */
-  private def assocKey(dir: String): String =
-    Ann.annCacheKey(dir, Seq("customer.parquet", "orders.parquet"))
+  private val AssocTables = Seq("customer.parquet", "orders.parquet")
 
   private def assocStorePath(dir: String, kind: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
-      System.getProperty("java.io.tmpdir")) + s"/graft_assoc_${kind}_${assocKey(dir)}"
+    Store.derivedPath(dir, s"assoc_$kind", AssocTables)
 
   /** Nights the detection stream is split into for the registered
     * lifecycle (batch = det_k mod this — deterministic, so the oracle
@@ -1910,7 +1833,7 @@ object Spatial {
     * ([[clearOrphanedTableLocation]]). Returns the catalog table
     * name. */
   private[graft] def ensureHaloTable(s: SparkSession, dir: String): String = {
-    val haloTable = s"graft_assoc_halo_${assocKey(dir)}"
+    val haloTable = s"graft_assoc_halo_${Store.contentKey(dir, AssocTables)}"
     if (!s.catalog.tableExists(haloTable)) {
       clearOrphanedTableLocation(s, haloTable)
       writeXmatchHalo(points(s, dir), haloTable, radius = 1.0,
@@ -1930,7 +1853,7 @@ object Spatial {
     val haloTable = ensureHaloTable(s, dir)
     val matchPath = assocStorePath(dir, "match")
     val transientPath = assocStorePath(dir, "trans")
-    // crashed partial creates heal inside associateBatch (healOwnedStore)
+    // crashed partial creates heal inside associateBatch (Store.committed)
     val dets = detections(s, dir)
     // probe home cells MUST be computed under the halo table's own
     // zone grid — derive it from the stored geometry rather than
@@ -2047,7 +1970,7 @@ object Spatial {
     * the catalog wholesale; with both sides at rest in one bucketing
     * the join carries zero exchange on EITHER side. */
   private def ensureProbeTable(s: SparkSession, dir: String): String = {
-    val t = s"graft_assoc_probe_${assocKey(dir)}"
+    val t = s"graft_assoc_probe_${Store.contentKey(dir, AssocTables)}"
     if (!s.catalog.tableExists(t)) {
       // the archive shares the halo table's cell grid and bucket
       // count BY DERIVATION (not by repeating its literals), so a
@@ -2305,7 +2228,7 @@ object Spatial {
     val decHi = PolyVerts.map(_._2).max
     val zLo = math.floor((decLo + 90.0) / zoneHeight).toInt
     val zHi = math.floor((decHi + 90.0) / zoneHeight).toInt
-    s.read.parquet(path)
+    ZoneStore.read(s, path)
       .filter($"zone" >= zLo && $"zone" <= zHi)
       .filter(inPoly($"ra", $"decl"))
       .select($"k", $"ra", $"decl")
@@ -2375,7 +2298,7 @@ object Spatial {
       EllB * EllCosPA * EllB * EllCosPA)
     val zLo = math.floor((EllDecC - decHalf + 90.0) / zoneHeight).toInt
     val zHi = math.floor((EllDecC + decHalf + 90.0) / zoneHeight).toInt
-    s.read.parquet(path)
+    ZoneStore.read(s, path)
       .filter($"zone" >= zLo && $"zone" <= zHi)
       .withColumn("m", ellipseM)
       .filter($"m" < 1.0)

@@ -2464,7 +2464,7 @@ object TimeSeries {
     * model cache pattern — regenerated test data can never read a
     * stale index). */
   private def objectIndexPath(dir: String): String =
-    Ann.annCachePath(dir, "obj_idx", "events.parquet")
+    graft.sources.Store.derivedPath(dir, "obj_idx", Seq("events.parquet"))
 
   /** Build (or reuse) the registered [[graft.sources.ObjectIndex]]
     * for `dir`; returns its path. A partial build (no _SUCCESS)
@@ -2595,7 +2595,7 @@ object TimeSeries {
   private[graft] def ensureLcStatsStore(s: SparkSession, dir: String): String = {
     import org.apache.hadoop.fs.Path
     import s.implicits._
-    val path = Ann.annCachePath(dir, "lc_stats", "events.parquet")
+    val path = graft.sources.Store.derivedPath(dir, "lc_stats", Seq("events.parquet"))
     val done = new Path(path, "_build_done")
     val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(done)) {
@@ -2695,8 +2695,7 @@ object TimeSeries {
     import s.implicits._
     val horizon = graft.streaming.LightcurveStream.foldedHorizon(s, path)
     val ids = (Seq(-1L) ++ (0L until nBatches.toLong)).toDF("ibatch")
-    s.read.parquet(path)
-      .withColumn("ibatch", $"ibatch".cast("long"))
+    graft.streaming.LightcurveStream.StatsStore.read(s, path)
       .groupBy($"ibatch")
       .agg(count(lit(1)).as("n_keys"),
         countDistinct($"user_id").as("n_objects"),

@@ -327,7 +327,9 @@ object Catalog {
   def readEvolved(s: SparkSession, path: String): DataFrame =
     s.read.option("mergeSchema", "true").parquet(path)
 
-  private def stagedAppend(s: SparkSession, df: DataFrame, path: String,
+  /** The staging commit under [[append]], [[appendEvolve]] and
+    * [[Store.append]] (`partitionCols` partition the batch on write). */
+  private[sources] def stagedAppend(s: SparkSession, df: DataFrame, path: String,
     partitionCols: Seq[String] = Seq.empty): Unit = {
     require(!appendPending(s, path),
       s"$path has leftover _tmp_append_* staging dirs from a crashed append; " +
@@ -372,34 +374,6 @@ object Catalog {
         throw new java.io.IOException(s"append commit failed moving $src -> $dst")
     }
     f.delete(tmp, true)
-  }
-
-  /** Staged append to a PARTITIONED table — the [[append]] protocol
-    * (hidden staging dir + manifest + rename commit; crashes resolve
-    * through [[recoverAppends]]) with the batch partitioned on write,
-    * so each appended file lands inside its partition directory and
-    * stays prunable. Schema drift on the DATA columns (everything but
-    * the partition keys) fails loudly against the existing table's
-    * file schema before any data is written. */
-  def appendPartitioned(s: SparkSession, df: DataFrame, path: String,
-    partitionCols: Seq[String], tableSchema: Option[StructType] = None): Unit = {
-    require(tableComplete(s, path),
-      s"$path is not a complete table — build it before appending")
-    val want = tableSchema.getOrElse(s.read.parquet(path).schema)
-      .filterNot(f => partitionCols.contains(f.name))
-      .map(f => (f.name, f.dataType))
-    val got = df.schema.filterNot(f => partitionCols.contains(f.name))
-      .map(f => (f.name, f.dataType))
-    // drift is judged by NAME+type, not position: a caller's select
-    // order is not a drift. The batch is re-ordered to the table's
-    // column order before writing so every file stays uniform.
-    require(got.sortBy(_._1) == want.sortBy(_._1),
-      s"schema drift appending to $path: got $got, table has $want")
-    require(partitionCols.forall(df.columns.contains),
-      s"batch is missing partition columns $partitionCols")
-    stagedAppend(s,
-      df.select((want.map(_._1) ++ partitionCols).map(org.apache.spark.sql.functions.col): _*),
-      path, partitionCols)
   }
 
   // ---------------------------------------------------------------
@@ -487,7 +461,8 @@ object Catalog {
     val partVals = updates.select(partCol).distinct().collect().map(_.get(0))
     require(partVals.nonEmpty, "empty update batch")
     import org.apache.spark.sql.functions.col
-    val current = s.read.parquet(path)
+    // the caller's columns: declared from the frame in hand
+    val current = Store(updates.schema, Seq(partCol)).read(s, path)
       .filter(col(partCol).isin(partVals.toSeq: _*))
     val merged = current.join(updates, keyCols, "left_anti")
       .unionByName(updates)
@@ -496,7 +471,7 @@ object Catalog {
       s"_tmp_upsert_${java.util.UUID.randomUUID().toString.take(8)}")
     try {
       merged.write.mode("errorifexists").parquet(tmp.toString)
-      s.read.parquet(tmp.toString)
+      Store(merged.schema).read(s, tmp.toString)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partCol).parquet(path)
@@ -516,34 +491,6 @@ object Catalog {
     df.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(path)
-
-  /** Compact a partitioned table's small files: rewrite each named
-    * partition (default: all) into ONE file per partition (rows are
-    * hash-clustered on the partition value; `parallelism` bounds the
-    * number of concurrent write tasks). Streaming ingest and repeated
-    * appends accrete part-files; at scale a 10,000-file partition
-    * costs a task per file on every scan, so periodic compaction is
-    * part of the catalog lifecycle. Same staging + dynamic-overwrite
-    * protocol as [[upsertPartitioned]] — untouched partitions are
-    * never read or written. */
-  def compactPartitions(s: SparkSession, path: String, partCol: String,
-    parallelism: Int, partVals: Seq[Any] = Seq.empty): Unit = {
-    import org.apache.spark.sql.functions.col
-    val base = s.read.parquet(path)
-    val chosen = if (partVals.isEmpty) base
-      else base.filter(col(partCol).isin(partVals: _*))
-    val (f, p) = fs(s, path)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      s"_tmp_compact_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      chosen.repartition(parallelism, col(partCol))
-        .write.mode("errorifexists").parquet(tmp.toString)
-      s.read.parquet(tmp.toString)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCol).parquet(path)
-    } finally f.delete(tmp, true)
-  }
 
   /** Name of the root-level retention marker [[dropPartitionsBelow]]
     * maintains: its content is the highest aging horizon ever applied
@@ -582,7 +529,7 @@ object Catalog {
     * retirement) from a legitimately-empty partition.
     *
     * Discipline: REFUSES on an incomplete store and while a crashed
-    * append is pending (the [[compactPartitions]] contract) —
+    * append is pending (the [[Store.compact]] contract) —
     * resolving those is a recovery decision that must precede any
     * file removal. Ten survey-years of nightly batches is ~3,650
     * partitions per store; this is the entry point that keeps the

@@ -55,7 +55,7 @@ object BlobStream {
         val s = batch.sparkSession
         Multimodal.blobBatch(s, batch, indexPath, pairsPath, batchId)
         val horizon = batchId - retainBatches + 1
-        // blobBatch's healOwnedStore has already cleared any crashed
+        // blobBatch's commit heal has already cleared any crashed
         // append by this point, but retention must never be the thing
         // that kills the stream: if a pending append somehow survives
         // (future reordering, a heal path change), SKIP aging this

@@ -4,16 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.functions.TextFunctions
 import graft.queries.Text
-import graft.sources.Catalog
+import graft.sources.{Catalog, Store}
 
 /** Streaming corpus ingest — the documents twin of the stored-ANN
   * ingest ([[graft.queries.Ann.ingestVectorStream]]): each micro-batch
   * passes the shared quality + repetition gates, is exact-deduped by
   * content fingerprint within the batch AND against the corpus at
   * rest, and lands through the crash-safe staged-append lifecycle
-  * ([[Catalog.appendPartitioned]]; a predecessor's crash is resolved
+  * ([[graft.sources.Store.append]]; a predecessor's crash is resolved
   * by [[Catalog.recoverAppends]] at the top of each batch — same
   * single-writer discipline as the ANN ingest).
   *
@@ -70,11 +71,17 @@ object DocStream {
     docs.withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn")
   }
 
+  /** The clean corpus: the caller's document columns plus the md5
+    * `fp` and its `bk` partition. A corpus written under the pre-md5
+    * scheme (BIGINT `fp`) fails at read time against this declaration
+    * — rebuild it (dropIfExists + buildCleanCorpus + replay). */
+  def corpusStore(docColumns: StructType): Store =
+    Store(docColumns.add("fp", StringType).add("bk", LongType), Seq("bk"))
+
   /** Build the clean corpus table from an existing documents frame —
     * create-if-absent lifecycle, no-op when already complete. */
   def buildCleanCorpus(s: SparkSession, docs: DataFrame, path: String): Boolean =
-    Catalog.createPartitionedIfAbsent(s, dedupBatch(withFp(gate(docs))),
-      path, Seq("bk"))
+    corpusStore(docs.schema).create(s, dedupBatch(withFp(gate(docs))), path)
 
   // The segment-df fold over the batch's FRESH docs (the survivors
   // of content dedup and the at-rest anti-join) is replay-guarded
@@ -111,19 +118,8 @@ object DocStream {
     lineIndexPath: Option[String] = None,
     spanIndexPath: Option[String] = None): Unit = {
     import s.implicits._
-    val stored = s.read.parquet(path)
-    // the fingerprint scheme changed once (64-bit xxhash64 long →
-    // 128-bit md5 hex string, with the bucket re-derived from hex
-    // chars): a corpus built under the old scheme must be rebuilt,
-    // not appended to — the anti-join would silently coerce across
-    // the type mismatch and identical text would probe the wrong
-    // bucket. Fail with the migration path instead of an obscure
-    // schema-drift error downstream.
-    require(stored.schema("fp").dataType ==
-      org.apache.spark.sql.types.StringType,
-      s"$path stores ${stored.schema("fp").dataType.simpleString} " +
-        "fingerprints (the pre-md5 64-bit scheme) — rebuild the corpus " +
-        "(dropIfExists + buildCleanCorpus + replay) before ingesting")
+    val corpus = corpusStore(rawBatch.schema)
+    val stored = corpus.read(s, path)
     val gated = gate(rawBatch)
     // probe contamination on the RAW batch: its ids are a superset of
     // the gated ones, so the anti-join result is identical, and the
@@ -191,8 +187,7 @@ object DocStream {
           stored.filter($"bk".isin(bks: _*)).select($"fp"),
           Seq("fp"), "left_anti")
       lineIndexPath.foreach(graft.queries.Dedup.updateLineDfIndex(s, _, fresh))
-      Catalog.appendPartitioned(s, fresh, path, Seq("bk"),
-        tableSchema = Some(stored.schema))
+      corpus.append(s, fresh, path)
       // span fold AFTER the append commits — the opposite order from
       // the line-df fold, because the residual windows point opposite
       // ways: an over-folded segment-df only tightens a ≥-threshold
@@ -244,19 +239,20 @@ object DocStream {
     * micro-batch — back to one file per fp bucket, completing the
     * corpus lifecycle the ANN codes tables and ObjectIndex already
     * have. A maintenance-window operation under the single-writer
-    * discipline (compactPartitions' dynamic-overwrite rewrite is not
+    * discipline (`Store.compact`'s dynamic-overwrite rewrite is not
     * crash-atomic, so it runs while the stream is STOPPED, like the
     * ANN tables' fold); refuses on an incomplete table and on
     * unresolved crashed appends — recovery is [[Catalog
     * .recoverAppends]]'s job and must happen first, or the fold
     * would silently bake a half-committed batch's visible subset
-    * into the rewritten partitions. */
+    * into the rewritten partitions. `docColumns` are the document
+    * columns the corpus was built with ([[corpusStore]]). */
   def compactCorpus(s: SparkSession, corpusPath: String,
-    parallelism: Int = 16): Unit = {
+    docColumns: StructType, parallelism: Int = 16): Unit = {
     require(Catalog.tableComplete(s, corpusPath),
       s"$corpusPath is not a complete corpus table")
     require(!Catalog.appendPending(s, corpusPath),
       s"$corpusPath has unresolved crashed appends — recoverAppends first")
-    Catalog.compactPartitions(s, corpusPath, "bk", parallelism)
+    corpusStore(docColumns).compact(s, corpusPath, parallelism)
   }
 }

@@ -76,8 +76,8 @@ object EventStream {
     *
     * 100 TB shape: per batch, write cost = the batch, refresh cost =
     * the touched days — never the table. The `ibatch` subpartitions
-    * are exactly the small files [[graft.sources.Catalog
-    * .compactPartitions]] periodically folds up. */
+    * are exactly the small files [[graft.sources.Store.compact]]
+    * periodically folds up. */
   def applyIngestBatch(batch: DataFrame, batchId: Long, basePath: String,
     rollupPath: String): Unit = if (!batch.isEmpty) {
     val b = batch.persist()

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import graft.sources.Store
 
 /** Streaming maintenance of the per-(object, band) light-curve
   * summary — the streamed twin of the batch `q_lightcurve_band`
@@ -63,6 +65,13 @@ object LightcurveStream {
   private val FoldedMarker = "_folded_upto"
 
   private def sbkt = pmod(col("user_id"), lit(NBuckets.toLong))
+
+  /** The partials store ([[partialsOf]] rows), partitioned by object
+    * bucket and batch. */
+  private[graft] val StatsStore = Store(StructType(
+    Seq(StructField("user_id", LongType), StructField("band", StringType)) ++
+      Seq("n", "sum_c100", "min_c100", "max_c100", "sxx", "sbkt", "ibatch")
+        .map(StructField(_, LongType))), Seq("sbkt", "ibatch"))
 
   private def markerPath(statsPath: String) =
     new org.apache.hadoop.fs.Path(statsPath, FoldedMarker)
@@ -190,7 +199,7 @@ object LightcurveStream {
     * double the bucket). */
   private def livePartials(s: SparkSession, statsPath: String): DataFrame = {
     import s.implicits._
-    val all = s.read.parquet(statsPath)
+    val all = StatsStore.read(s, statsPath)
     val staged = all.filter($"ibatch" === StageId)
       .select($"sbkt").distinct().withColumn("has_stage", lit(true))
     all.join(broadcast(staged), Seq("sbkt"), "left")
@@ -230,7 +239,7 @@ object LightcurveStream {
     val live = livePartials(s, statsPath)
     // the horizon the stage is about to capture: every non-negative
     // batch currently at rest (computed BEFORE the stage lands)
-    val maxBatch = s.read.parquet(statsPath)
+    val maxBatch = StatsStore.read(s, statsPath)
       .agg(coalesce(max($"ibatch"), lit(-1L))).head.getLong(0)
     // phase 1: stage the MERGED fold — one row per (object, band)
     // per bucket (reads through the precedence rule, so a previous

@@ -1162,7 +1162,7 @@ class DedupAnnSpec extends AnyFunSuite with RegistryRows {
     val nBefore = new java.io.File(pqPath).listFiles()
       .filter(_.getName.startsWith("bk=")).map(_.listFiles()
         .count(_.getName.endsWith(".parquet"))).sum
-    sources.Catalog.compactPartitions(spark, pqPath, "bk", 4)
+    queries.Ann.PqCodesStore.compact(spark, pqPath, 4)
     val nAfter = new java.io.File(pqPath).listFiles()
       .filter(_.getName.startsWith("bk=")).map(_.listFiles()
         .count(_.getName.endsWith(".parquet"))).sum
@@ -1301,7 +1301,7 @@ class DedupAnnSpec extends AnyFunSuite with RegistryRows {
     // and the shared compaction folds the store without changing it
     val before = spark.read.parquet(storePath)
       .select($"vec_id").collect().map(_.getLong(0)).sorted.toSeq
-    sources.Catalog.compactPartitions(spark, storePath, "bk", 4)
+    queries.Ann.VectorStore.compact(spark, storePath, 4)
     val after = spark.read.parquet(storePath)
       .select($"vec_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(after == before, "vector-store compaction changed table content")

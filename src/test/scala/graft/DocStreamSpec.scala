@@ -346,10 +346,13 @@ class DocStreamSpec extends AnyFunSuite {
     // a pending crashed append must block the fold (recovery first)
     val stale = java.nio.file.Paths.get(corpus, "_tmp_append_dead")
     java.nio.file.Files.createDirectory(stale)
-    intercept[IllegalArgumentException] { DocStream.compactCorpus(spark, corpus) }
+    val docColumns = input.toDF().toDF("doc_id", "text", "source").schema
+    intercept[IllegalArgumentException] {
+      DocStream.compactCorpus(spark, corpus, docColumns)
+    }
     java.nio.file.Files.delete(stale)
 
-    DocStream.compactCorpus(spark, corpus)
+    DocStream.compactCorpus(spark, corpus, docColumns)
     assert(filesPerBucket().values.forall(_ == 1),
       s"compaction left multi-file buckets: ${filesPerBucket()}")
     assert(spark.read.parquet(corpus)
@@ -368,5 +371,26 @@ class DocStreamSpec extends AnyFunSuite {
       assert(!ids.contains(1000L), "replayed content landed twice after compaction")
       assert(ids.contains(101L), "new content failed to land after compaction")
     } finally q2.stop()
+  }
+
+  test("appending to a pre-md5 corpus (BIGINT fp) fails loudly and lands nothing") {
+    val corpus = java.nio.file.Files.createTempDirectory("doc_premd5").toString + "/clean"
+    // one old-scheme row in every bucket, so the batch's probe meets one
+    graft.sources.Catalog.createPartitionedIfAbsent(spark,
+      (0L until DocStream.DocBuckets).map(b => (b, doc(s"a$b"), "s0", 42L + b, b))
+        .toDF("doc_id", "text", "source", "fp", "bk"),
+      corpus, Seq("bk"))
+    def visible() = new java.io.File(corpus).listFiles()
+      .filter(_.getName.startsWith("bk=")).flatMap(_.listFiles())
+      .map(_.getName).filter(_.endsWith(".parquet")).toSet
+    val before = visible()
+    val e = intercept[Exception] {
+      DocStream.appendDocs(spark, corpus,
+        Seq((2L, doc("b"), "s1")).toDF("doc_id", "text", "source"))
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(chain.contains("fp"), s"failure does not name the fp column: $chain")
+    assert(visible() == before, "a batch landed in a pre-md5 corpus")
   }
 }

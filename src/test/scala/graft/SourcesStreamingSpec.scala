@@ -460,8 +460,7 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
     val cSigs = newDocs.toDF("doc_id", "p0", "p1", "p2", "p3")
     val cMembers = cSigs.select(col("doc_id"), lit(3L).as("batch_id"),
       pmod(col("doc_id"), lit(PhashMemberBuckets.toLong)).as("mb"))
-    Catalog.appendPartitioned(spark, cMembers, phashMembersPath(path),
-      Seq("mb"), Some(PhashMembersSchema))
+    PhashMembersStore.append(spark, cMembers, phashMembersPath(path))
     updatePhashIndex(spark, path, cSigs, 3L)
     val idxC = readPhashIndex(spark, path)
       .filter(col("doc_id").isin(5000001L, 5000002L)).collect()
@@ -745,7 +744,7 @@ class CatalogSpec extends AnyFunSuite {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(f => (f.getName, f.lastModified())).toSet
     assert(nFiles("en") > 1, s"fixture should start multi-file, got ${nFiles("en")}")
-    Catalog.compactPartitions(spark, out, "lang", 8, Seq("en"))
+    sources.Store(a.schema, Seq("lang")).compact(spark, out, 8, Seq("en"))
     assert(nFiles("en") == 1, s"compaction left ${nFiles("en")} files")
     assert(new java.io.File(s"$out/lang=de").listFiles()
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
