@@ -591,16 +591,8 @@ object Ann {
     ivfModelOf(rows)
   }
 
-  /** Per-corpus cache location of a registered query's derived store
-    * ([[graft.sources.Store.derivedPath]]), keyed by `table`'s file
-    * identity: regenerated test data gets a fresh key, so a stale
-    * cached codebook can never shadow retrained truth. */
-  private[graft] def annCachePath(dir: String, kind: String,
-    table: String = "embeddings.parquet"): String =
-    Store.derivedPath(dir, kind, Seq(table))
-
   private[graft] def ivfModelCachePath(dir: String): String =
-    annCachePath(dir, "ivf_model")
+    Store.derivedPath(dir, "ivf_model", Seq("embeddings.parquet"))
 
   /** Per-process memo of loaded standalone models, keyed by (path,
     * commit-marker mtime): repeated executions skip even the tiny
@@ -2203,7 +2195,7 @@ object Ann {
 
   /** Resolve (build-once) the shared bucketed vector store for `dir`. */
   private def ensureVectorStore(s: SparkSession, dir: String): String = {
-    val path = annCachePath(dir, "vecstore")
+    val path = Store.derivedPath(dir, "vecstore", Seq("embeddings.parquet"))
     if (!graft.sources.Catalog.tableComplete(s, path))
       graft.sources.Catalog.dropIfExists(s, path) // our crashed cache build
     buildVectorStore(s, Tables.embeddings(s, dir), path)
@@ -2215,7 +2207,8 @@ object Ann {
     * build — resolved by dropping codes AND model before the builder
     * (whose partial-dir guard protects USER tables, not this cache). */
   private def ensureCodesIndex(s: SparkSession, dir: String, ivf: Boolean): String = {
-    val path = annCachePath(dir, if (ivf) "ivfpq_codes" else "pq_codes")
+    val path = Store.derivedPath(dir, if (ivf) "ivfpq_codes" else "pq_codes",
+      Seq("embeddings.parquet"))
     if (!graft.sources.Catalog.tableComplete(s, path)) {
       graft.sources.Catalog.dropIfExists(s, path)
       graft.sources.Catalog.dropIfExists(s, modelPath(path))

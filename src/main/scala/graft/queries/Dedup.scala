@@ -2251,9 +2251,6 @@ object Dedup {
     StructField("first_pos", IntegerType), StructField("bk", LongType))),
     Seq("bk"))
 
-  private def readSpanIndex(s: SparkSession, path: String): DataFrame =
-    SpanIndexStore.read(s, path)
-
   /** Per-batch first occurrence of every window fingerprint. */
   private def spanFirsts(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
@@ -2289,7 +2286,7 @@ object Dedup {
     val w = spanWindows(batch).withColumn("bk", spanBk($"fp"))
       .localCheckpoint()
     val bks = w.select($"bk").distinct().collect().map(_.getLong(0))
-    val stored = readSpanIndex(s, path)
+    val stored = SpanIndexStore.read(s, path)
       .filter($"bk".isin(bks.toSeq: _*))
       .select($"fp", $"first_doc".as("st_doc"))
     val win = Window.partitionBy($"fp").orderBy($"doc_id", $"pos")
@@ -2326,7 +2323,7 @@ object Dedup {
     val firsts = spanFirsts(batch).localCheckpoint()
     val bks = firsts.select($"bk").distinct().collect().map(_.getLong(0))
     if (bks.nonEmpty) {
-      val stored = readSpanIndex(s, path).filter($"bk".isin(bks.toSeq: _*))
+      val stored = SpanIndexStore.read(s, path).filter($"bk".isin(bks.toSeq: _*))
         .select($"fp")
       val fresh = firsts.join(stored, Seq("fp"), "left_anti")
       SpanIndexStore.append(s, fresh, path)

@@ -778,9 +778,6 @@ object Multimodal {
     p.withColumn("bk", phashBk(p("pi"), p("pv")))
   }
 
-  def readPhashIndex(s: SparkSession, path: String): DataFrame =
-    PhashIndexStore.read(s, path)
-
   // --- doc_id membership sidecar -------------------------------
   // The fold's first-write-wins anti-join needs "is this doc_id
   // already in the corpus" — asking the PIECE index that question
@@ -815,9 +812,6 @@ object Multimodal {
   private def phashMb(docId: Column): Column =
     pmod(docId, lit(PhashMemberBuckets.toLong))
 
-  def readPhashMembers(s: SparkSession, indexPath: String): DataFrame =
-    PhashMembersStore.read(s, phashMembersPath(indexPath))
-
   /** Heal-or-rebuild the membership sidecar for a COMPLETE index at
     * `indexPath`: crashed sidecar appends roll forward/back, and an
     * absent or incomplete sidecar is re-derived from the index (the
@@ -831,7 +825,7 @@ object Multimodal {
     Catalog.recoverAppends(s, mp)
     if (!Catalog.tableComplete(s, mp)) {
       Catalog.dropIfExists(s, mp)
-      val m = readPhashIndex(s, indexPath).select($"doc_id").distinct()
+      val m = PhashIndexStore.read(s, indexPath).select($"doc_id").distinct()
         .withColumn("batch_id", lit(PhashMemberBaseGen))
         .withColumn("mb", phashMb($"doc_id"))
       PhashMembersStore.create(s, m, mp)
@@ -885,7 +879,7 @@ object Multimodal {
     // self-join all consume the piece explode
     val bp = phashPieceRows(batchSigs).localCheckpoint()
     val bks = bp.select($"bk").distinct().collect().map(_.getLong(0))
-    val storedSlice = readPhashIndex(s, path).filter($"bk".isin(bks.toSeq: _*))
+    val storedSlice = PhashIndexStore.read(s, path).filter($"bk".isin(bks.toSeq: _*))
     // the block cap must be the CORPUS-WIDE block size, exactly as
     // [[qBlobPhash]] computes it (r13 review: capping each side
     // separately emitted pairs from blocks that are over-cap only in
@@ -940,9 +934,10 @@ object Multimodal {
     * in the store's `_age_horizon` marker.
     *
     * Discipline (the [[graft.streaming.DocStream.compactCorpus]] /
-    * ObjectIndex.compactIndex contract): REFUSES while a crashed
-    * append is pending on any store — rolling it forward or back is
-    * a recovery decision ([[graft.sources.Catalog.recoverAppends]])
+    * ObjectIndex.compactIndex contract): each store's compaction
+    * ([[graft.sources.Store.compact]]) REFUSES while a crashed append
+    * is pending on it — rolling it forward or back is a recovery
+    * decision ([[graft.sources.Catalog.recoverAppends]])
     * that must happen before a rewrite touches the files it would
     * recover. Fold markers and pairs partition dirs survive (dynamic
     * partition overwrite rewrites only data partitions), so replay
@@ -960,12 +955,6 @@ object Multimodal {
     val stores = Seq(indexPath -> PhashIndexStore,
       phashMembersPath(indexPath) -> PhashMembersStore) ++
       pairsPath.map(_ -> PhashPairsStore)
-    for ((path, _) <- stores) {
-      require(Catalog.tableComplete(s, path),
-        s"$path is not a complete store — build it first")
-      require(!Catalog.appendPending(s, path),
-        s"$path has unresolved crashed appends — recoverAppends first")
-    }
     for ((path, store) <- stores) store.compact(s, path, parallelism)
   }
 
@@ -1000,12 +989,12 @@ object Multimodal {
     val batchDocs = bp.select($"doc_id").distinct()
       .withColumn("mb", phashMb($"doc_id"))
     val mbs = batchDocs.select($"mb").distinct().collect().map(_.getLong(0))
-    val members = readPhashMembers(s, path)
+    val members = PhashMembersStore.read(s, phashMembersPath(path))
       .filter($"mb".isin(mbs.toSeq: _*))
       .filter($"batch_id" =!= lit(batchId))
       .select($"doc_id")
     val bks = bp.select($"bk").distinct().collect().map(_.getLong(0))
-    val idxDocs = readPhashIndex(s, path)
+    val idxDocs = PhashIndexStore.read(s, path)
       .filter($"bk".isin(bks.toSeq: _*)).select($"doc_id")
     batchDocs
       .join(members, Seq("doc_id"), "left_anti")
@@ -1047,7 +1036,7 @@ object Multimodal {
         // skip sidecar rows a crashed replay of THIS fold already
         // committed (they are excluded from the probe above, so they
         // would re-append forever otherwise)
-        val own = readPhashMembers(s, path)
+        val own = PhashMembersStore.read(s, phashMembersPath(path))
           .filter($"mb".isin(
             freshDocs.select($"mb").distinct().collect().map(_.getLong(0)).toSeq: _*))
           .filter($"batch_id" === lit(batchId)).select($"doc_id")
@@ -1082,9 +1071,6 @@ object Multimodal {
     StructField("d1", LongType), StructField("d2", LongType),
     StructField("hamming", IntegerType), StructField("batch_id", LongType))),
     Seq("batch_id"))
-
-  def readPhashPairs(s: SparkSession, path: String): DataFrame =
-    PhashPairsStore.read(s, path)
 
   /** One full blob micro-batch — the perceptual-index twin of
     * [[graft.queries.Spatial.associateBatch]]: sign the delivered
@@ -1198,7 +1184,7 @@ object Multimodal {
       // sizes are monotone ≤ corpus size), so guard the equivalence
       // at build time: the index holds every piece row uncapped, so
       // its largest (pi, pv) block IS the corpus-wide maximum.
-      val maxBlk = readPhashIndex(s, idxPath)
+      val maxBlk = PhashIndexStore.read(s, idxPath)
         .groupBy($"pi", $"pv").agg(count(lit(1)).as("c"))
         .agg(max($"c")).collect()(0)
       if (!maxBlk.isNullAt(0) && maxBlk.getLong(0) > PhashBlockCap) {
@@ -1240,7 +1226,7 @@ object Multimodal {
     import s.implicits._
     val (_, pairsPath) = ensurePhashStream(s, dir)
     val g = s.range(PhashStreamBatches.toLong).select($"id".as("batch_id"))
-    readPhashPairs(s, pairsPath)
+    PhashPairsStore.read(s, pairsPath)
       .groupBy($"batch_id")
       .agg(count(lit(1)).as("n_pairs"),
         sum(when($"hamming" === 0, 1L).otherwise(0L)).as("n_h0"))
@@ -1296,7 +1282,7 @@ object Multimodal {
       dropPhashIndex(s, path)
       buildPhashIndex(s, phashSigs(s, dir), path)
     }
-    val blocks = Dedup.capBlocks(readPhashIndex(s, path),
+    val blocks = Dedup.capBlocks(PhashIndexStore.read(s, path),
       Seq("pi", "pv"), PhashBlockCap)
     def side(tag: String): DataFrame =
       blocks.select($"pi", $"pv", $"doc_id".as(s"d$tag"),

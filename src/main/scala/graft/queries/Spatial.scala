@@ -1503,9 +1503,6 @@ object Spatial {
     StructField("dist_r6", DoubleType), StructField("batch_id", LongType))),
     Seq("batch_id"))
 
-  def readMatchTable(s: SparkSession, matchPath: String): DataFrame =
-    MatchStore.read(s, matchPath)
-
   /** Associate one batch of fresh detections (`k`, `ra`, `decl`)
     * against the stored object halo table and append the matches —
     * (det_k, obj_k, dist_r6) — to the match table at `matchPath`,
@@ -1537,9 +1534,6 @@ object Spatial {
     StructField("decl", DoubleType), StructField("batch_id", LongType))),
     Seq("batch_id"))
 
-  def readTransients(s: SparkSession, path: String): DataFrame =
-    TransientStore.read(s, path)
-
   /** One full nightly batch: associate against the stored halo table
     * and append the matches ([[associateNewDetections]]), then append
     * the UNMATCHED remainder — the new-transient feed an
@@ -1568,7 +1562,7 @@ object Spatial {
     val nMatch = associateNewDetections(s, b, objHalo, matchPath,
       batchId, radius, zoneHeight)
     val nTrans = TransientStore.commitBatch(s, transientPath, batchId) {
-      val matched = readMatchTable(s, matchPath)
+      val matched = MatchStore.read(s, matchPath)
         .filter(col("batch_id") === batchId)
         .select(col("det_k").as("k")).distinct()
       b.join(matched, Seq("k"), "left_anti")
@@ -1587,9 +1581,6 @@ object Spatial {
     * batch. */
   private[graft] val ObjDeltaStore = Store(
     StructType(HaloCols :+ StructField("batch_id", LongType)), Seq("batch_id"))
-
-  def deltaObjects(s: SparkSession, path: String): DataFrame =
-    ObjDeltaStore.read(s, path)
 
   /** Object creation — the step that closes the nightly cycle: one
     * batch's TRANSIENTS (stored by [[associateBatch]]) become new
@@ -1615,7 +1606,7 @@ object Spatial {
     ObjDeltaStore.commitBatch(s, deltaPath, batchId,
       count = _.filter(col("is_core") === 1).count()) {
       withHaloCells(
-        readTransients(s, transientPath)
+        TransientStore.read(s, transientPath)
           .filter(col("batch_id") === batchId)
           .select((col("det_k") + idOffset).as("k"), col("ra"), col("decl")),
         radius, zoneHeight)
@@ -1691,7 +1682,7 @@ object Spatial {
         .select(col("k"), col("ra"), col("decl"))
       val all =
         if (Catalog.tableComplete(s, deltaPath))
-          baseCore.unionByName(deltaObjects(s, deltaPath)
+          baseCore.unionByName(ObjDeltaStore.read(s, deltaPath)
             .filter(col("is_core") === 1)
             .select(col("k"), col("ra"), col("decl")))
             .distinct() // delta ⊆ base after a crashed previous compact
@@ -1888,7 +1879,7 @@ object Spatial {
   def qAssocHistory(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (matchPath, _) = ensureAssocStores(s, dir)
-    readMatchTable(s, matchPath)
+    MatchStore.read(s, matchPath)
       .groupBy($"batch_id")
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct($"det_k").as("n_matched_dets"),
@@ -1940,7 +1931,7 @@ object Spatial {
     val totals = detections(s, dir)
       .groupBy(pmod($"det_k", lit(AssocBatches)).cast("long").as("batch_id"))
       .agg(count(lit(1)).as("n_det"))
-    readTransients(s, transientPath)
+    TransientStore.read(s, transientPath)
       .groupBy($"batch_id").agg(count(lit(1)).as("n_transient"))
       // right join: an all-matched night still reports a zero row
       .join(totals, Seq("batch_id"), "right")
@@ -2089,7 +2080,7 @@ object Spatial {
       detections(s, dir).selectExpr("det_k AS k", "ra", "decl"),
       DeltaZoneHeight).repartition(col("cell"))
     val deltaPairs = xmatchStored(deltaProbe,
-      broadcast(deltaObjects(s, deltaPath)), 1.0)
+      broadcast(ObjDeltaStore.read(s, deltaPath)), 1.0)
       .withColumn("is_new", lit(1))
     basePairs.unionByName(deltaPairs)
       .groupBy(pmod($"k1", lit(AssocBatches)).cast("long").as("batch_id"))
@@ -2122,7 +2113,7 @@ object Spatial {
   def qForcedPhot(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (matchPath, _) = ensureAssocStores(s, dir)
-    readMatchTable(s, matchPath)
+    MatchStore.read(s, matchPath)
       .join(detections(s, dir).select($"det_k", $"flux_c100"), "det_k")
       .groupBy($"obj_k")
       .agg(count(lit(1)).as("n_epochs"),

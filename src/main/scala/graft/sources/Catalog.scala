@@ -461,8 +461,11 @@ object Catalog {
     val partVals = updates.select(partCol).distinct().collect().map(_.get(0))
     require(partVals.nonEmpty, "empty update batch")
     import org.apache.spark.sql.functions.col
-    // the caller's columns: declared from the frame in hand
-    val current = Store(updates.schema, Seq(partCol)).read(s, path)
+    // the caller's columns: declared from the frame in hand and held
+    // against the files, so an update cannot drop a stored column
+    val store = Store(updates.schema, Seq(partCol))
+    store.checkFiles(s, path)
+    val current = store.read(s, path)
       .filter(col(partCol).isin(partVals.toSeq: _*))
     val merged = current.join(updates, keyCols, "left_anti")
       .unionByName(updates)

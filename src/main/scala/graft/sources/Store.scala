@@ -1,9 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** A graft-written table: its declared schema and its partition
   * columns. A `Store` value is the one place that knows a derived
@@ -21,7 +25,10 @@ import org.apache.spark.sql.types.StructType
   * (name, type) set differs from the declaration before anything is
   * written (column order is not drift; nullability is not part of
   * the contract), and project it onto the declared order, so every
-  * file carries the same columns.
+  * file carries the same columns. [[append]] and [[compact]] also
+  * hold the declaration against the files at rest ([[checkFiles]]),
+  * so a declaration taken from a caller's frame cannot add, drop or
+  * retype a stored column.
   *
   * Commit protocol ([[commitBatch]], for stores partitioned by a
   * single batch column): heal the store, treat the batch as committed
@@ -35,21 +42,42 @@ final case class Store(columns: StructType, partitionCols: Seq[String] = Nil) {
   require(partitionCols.forall(columns.fieldNames.contains),
     s"partition columns $partitionCols not among ${columns.fieldNames.mkString(",")}")
 
+  /** The columns stored inside the data files. */
+  val dataColumns: StructType =
+    StructType(columns.filterNot(f => partitionCols.contains(f.name)))
+
   /** The declared schema: data columns in declared order, then the
     * partition columns (where a partitioned read puts them). */
-  val schema: StructType = StructType(
-    columns.filterNot(f => partitionCols.contains(f.name)) ++
-      partitionCols.map(columns(_)))
+  val schema: StructType =
+    StructType(dataColumns ++ partitionCols.map(columns(_)))
 
   def read(s: SparkSession, path: String): DataFrame =
     s.read.schema(schema).parquet(path)
 
   private def conform(df: DataFrame, path: String): DataFrame = {
-    def sig(st: StructType) = st.map(f => (f.name, f.dataType)).sortBy(_._1)
+    import Store.sig
     require(sig(df.schema) == sig(schema),
       s"schema drift writing $path: got ${sig(df.schema)}, declared ${sig(schema)}")
     df.select(schema.fieldNames.map(col).toSeq: _*)
   }
+
+  /** Reject a store whose files are not of this declaration: the
+    * footer of one visible data file, read on the driver (no Spark
+    * job), must hold exactly the declared data columns by (name,
+    * type), nullability aside. One file stands for the store because
+    * every write conforms to one declaration; a store with no data
+    * file passes. */
+  def checkFiles(s: SparkSession, path: String): Unit =
+    Store.firstDataFile(s, path).foreach { file =>
+      import Store.sig
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(file, s.sparkContext.hadoopConfiguration))
+      val onDisk = try new ParquetToSparkSchemaConverter(SQLConf.get)
+        .convert(r.getFooter.getFileMetaData.getSchema)
+        finally r.close()
+      require(sig(onDisk) == sig(dataColumns),
+        s"schema drift at $path: $file holds ${sig(onDisk)}, declared ${sig(dataColumns)}")
+    }
 
   /** Create the store from `df` unless a complete one exists
     * ([[Catalog.createPartitionedIfAbsent]]'s lifecycle); true when
@@ -63,6 +91,7 @@ final case class Store(columns: StructType, partitionCols: Seq[String] = Nil) {
   def append(s: SparkSession, df: DataFrame, path: String): Unit = {
     require(Catalog.tableComplete(s, path),
       s"$path is not a complete table — build it before appending")
+    checkFiles(s, path)
     Catalog.stagedAppend(s, conform(df, path), path, partitionCols)
   }
 
@@ -97,8 +126,7 @@ final case class Store(columns: StructType, partitionCols: Seq[String] = Nil) {
     if (Catalog.tableComplete(s, path)) append(s, pinned, path)
     else create(s, pinned, path)
     val dir = batchDir(path, batchId)
-    val f = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!f.exists(dir)) f.mkdirs(dir)
+    dir.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(dir)
     n
   }
 
@@ -111,11 +139,18 @@ final case class Store(columns: StructType, partitionCols: Seq[String] = Nil) {
     * scan, so periodic compaction is part of the lifecycle. Same
     * staging + dynamic-overwrite protocol as
     * [[Catalog.upsertPartitioned]] — untouched partitions are never
-    * read or written. */
+    * read or written. Refuses an incomplete store and one with
+    * unresolved crashed appends: recovery ([[Catalog.recoverAppends]])
+    * comes first, or the fold would bake a half-committed batch's
+    * visible subset into the rewritten partitions. */
   def compact(s: SparkSession, path: String, parallelism: Int,
     partVals: Seq[Any] = Seq.empty): Unit = {
     require(partitionCols.size == 1, s"compaction needs one partition column: $partitionCols")
+    require(Catalog.tableComplete(s, path), s"$path is not a complete store — build it first")
+    require(!Catalog.appendPending(s, path),
+      s"$path has unresolved crashed appends — recoverAppends first")
     val partCol = partitionCols.head
+    checkFiles(s, path)
     val base = read(s, path)
     val chosen = if (partVals.isEmpty) base
       else base.filter(col(partCol).isin(partVals: _*))
@@ -135,6 +170,24 @@ final case class Store(columns: StructType, partitionCols: Seq[String] = Nil) {
 }
 
 object Store {
+
+  /** A schema's (name, type) set, the unit of drift: column order and
+    * nullability (also of nested types) are not part of it. */
+  private def sig(fs: Seq[StructField]): Seq[(String, String)] =
+    fs.map(f => (f.name, f.dataType.catalogString)).sortBy(_._1)
+
+  /** The first visible data file under `path` (hidden and `_`-prefixed
+    * entries — markers, staging dirs — skipped), found by a
+    * depth-first listing that stops at the first file. */
+  private def firstDataFile(s: SparkSession, path: String): Option[Path] = {
+    val p = new Path(path)
+    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def walk(d: Path): Iterator[Path] =
+      f.listStatus(d).sortBy(_.getPath.getName).iterator
+        .filter(st => v2.BinRecord.visible(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) walk(st.getPath) else Iterator(st.getPath))
+    if (f.exists(p)) walk(p).nextOption() else None
+  }
 
   /** Heal a graft-owned store at `path` before writing: resolve
     * crashed appends, and roll back a CREATE that died before its

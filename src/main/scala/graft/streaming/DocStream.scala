@@ -73,8 +73,9 @@ object DocStream {
 
   /** The clean corpus: the caller's document columns plus the md5
     * `fp` and its `bk` partition. A corpus written under the pre-md5
-    * scheme (BIGINT `fp`) fails at read time against this declaration
-    * — rebuild it (dropIfExists + buildCleanCorpus + replay). */
+    * scheme (BIGINT `fp`), or with other document columns, fails
+    * [[Store.checkFiles]] — rebuild it (dropIfExists +
+    * buildCleanCorpus + replay). */
   def corpusStore(docColumns: StructType): Store =
     Store(docColumns.add("fp", StringType).add("bk", LongType), Seq("bk"))
 
@@ -119,6 +120,9 @@ object DocStream {
     spanIndexPath: Option[String] = None): Unit = {
     import s.implicits._
     val corpus = corpusStore(rawBatch.schema)
+    // the batch's columns against the corpus files, before the index
+    // folds below write anything (the append checks again)
+    corpus.checkFiles(s, path)
     val stored = corpus.read(s, path)
     val gated = gate(rawBatch)
     // probe contamination on the RAW batch: its ids are a superset of
@@ -241,18 +245,11 @@ object DocStream {
     * have. A maintenance-window operation under the single-writer
     * discipline (`Store.compact`'s dynamic-overwrite rewrite is not
     * crash-atomic, so it runs while the stream is STOPPED, like the
-    * ANN tables' fold); refuses on an incomplete table and on
-    * unresolved crashed appends — recovery is [[Catalog
-    * .recoverAppends]]'s job and must happen first, or the fold
-    * would silently bake a half-committed batch's visible subset
-    * into the rewritten partitions. `docColumns` are the document
-    * columns the corpus was built with ([[corpusStore]]). */
+    * ANN tables' fold); like every [[Store.compact]] it refuses on an
+    * incomplete table and on unresolved crashed appends.
+    * `docColumns` are the document columns the corpus was built with
+    * ([[corpusStore]]). */
   def compactCorpus(s: SparkSession, corpusPath: String,
-    docColumns: StructType, parallelism: Int = 16): Unit = {
-    require(Catalog.tableComplete(s, corpusPath),
-      s"$corpusPath is not a complete corpus table")
-    require(!Catalog.appendPending(s, corpusPath),
-      s"$corpusPath has unresolved crashed appends — recoverAppends first")
+    docColumns: StructType, parallelism: Int = 16): Unit =
     corpusStore(docColumns).compact(s, corpusPath, parallelism)
-  }
 }

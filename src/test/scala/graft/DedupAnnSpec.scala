@@ -1433,11 +1433,11 @@ class DedupAnnSpec extends AnyFunSuite with RegistryRows {
 
   test("registered stored ANN searches build the index once and REUSE it; parity with the in-plan twins") {
     val paths = Seq(
-      queries.Ann.annCachePath(sf, "pq_codes"),
-      queries.Ann.annCachePath(sf, "pq_codes") + ".model",
-      queries.Ann.annCachePath(sf, "ivfpq_codes"),
-      queries.Ann.annCachePath(sf, "ivfpq_codes") + ".model",
-      queries.Ann.annCachePath(sf, "vecstore"))
+      graft.sources.Store.derivedPath(sf, "pq_codes", Seq("embeddings.parquet")),
+      graft.sources.Store.derivedPath(sf, "pq_codes", Seq("embeddings.parquet")) + ".model",
+      graft.sources.Store.derivedPath(sf, "ivfpq_codes", Seq("embeddings.parquet")),
+      graft.sources.Store.derivedPath(sf, "ivfpq_codes", Seq("embeddings.parquet")) + ".model",
+      graft.sources.Store.derivedPath(sf, "vecstore", Seq("embeddings.parquet")))
     paths.foreach(p => sources.Catalog.dropIfExists(spark, p))
     val pq1 = queries.Ann.qAnnPqStored(spark, sf).collect().toSeq
     val ivf1 = queries.Ann.qAnnIvfPqStored(spark, sf).collect().toSeq

@@ -373,24 +373,48 @@ class DocStreamSpec extends AnyFunSuite {
     } finally q2.stop()
   }
 
+  /** The visible data files under the corpus's bucket directories. */
+  private def corpusFiles(corpus: String): Set[String] =
+    new java.io.File(corpus).listFiles()
+      .filter(_.getName.startsWith("bk=")).flatMap(_.listFiles())
+      .map(f => s"${f.getParentFile.getName}/${f.getName}")
+      .filter(_.endsWith(".parquet")).toSet
+
   test("appending to a pre-md5 corpus (BIGINT fp) fails loudly and lands nothing") {
     val corpus = java.nio.file.Files.createTempDirectory("doc_premd5").toString + "/clean"
-    // one old-scheme row in every bucket, so the batch's probe meets one
+    // the old-scheme row sits in a bucket the batch does not hash
+    // into, so the batch's at-rest probe never scans an old file
+    val batch = Seq((2L, doc("b"), "s1")).toDF("doc_id", "text", "source")
+    val batchBk = batch.selectExpr(
+      s"pmod(cast(conv(substring(md5(text), 1, 15), 16, 10) as long), ${DocStream.DocBuckets})")
+      .as[Long].head()
+    val oldBk = (batchBk + 1) % DocStream.DocBuckets
     graft.sources.Catalog.createPartitionedIfAbsent(spark,
-      (0L until DocStream.DocBuckets).map(b => (b, doc(s"a$b"), "s0", 42L + b, b))
-        .toDF("doc_id", "text", "source", "fp", "bk"),
+      Seq((1L, doc("a"), "s0", 42L, oldBk)).toDF("doc_id", "text", "source", "fp", "bk"),
       corpus, Seq("bk"))
-    def visible() = new java.io.File(corpus).listFiles()
-      .filter(_.getName.startsWith("bk=")).flatMap(_.listFiles())
-      .map(_.getName).filter(_.endsWith(".parquet")).toSet
-    val before = visible()
-    val e = intercept[Exception] {
-      DocStream.appendDocs(spark, corpus,
-        Seq((2L, doc("b"), "s1")).toDF("doc_id", "text", "source"))
+    val before = corpusFiles(corpus)
+    val e = intercept[IllegalArgumentException] {
+      DocStream.appendDocs(spark, corpus, batch)
     }
-    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .map(_.getMessage).mkString(" | ")
-    assert(chain.contains("fp"), s"failure does not name the fp column: $chain")
-    assert(visible() == before, "a batch landed in a pre-md5 corpus")
+    assert(e.getMessage.contains("fp"), s"failure does not name the fp column: ${e.getMessage}")
+    assert(corpusFiles(corpus) == before, "a batch landed in a pre-md5 corpus")
+    assert(!new java.io.File(s"$corpus/bk=$batchBk").exists())
+  }
+
+  test("a batch or compaction whose document columns are not the corpus's fails and writes nothing") {
+    val corpus = java.nio.file.Files.createTempDirectory("doc_drift").toString + "/clean"
+    assert(DocStream.buildCleanCorpus(spark,
+      Seq((0L, doc("a"), "s0")).toDF("doc_id", "text", "source"), corpus))
+    val before = corpusFiles(corpus)
+    val extra = Seq((1L, doc("b"), "s1", "en")).toDF("doc_id", "text", "source", "lang")
+    val missing = Seq((2L, doc("c"))).toDF("doc_id", "text")
+    for (b <- Seq(extra, missing)) {
+      intercept[IllegalArgumentException] { DocStream.appendDocs(spark, corpus, b) }
+      assert(corpusFiles(corpus) == before, s"a ${b.columns.mkString(",")} batch landed")
+    }
+    intercept[IllegalArgumentException] {
+      DocStream.compactCorpus(spark, corpus, missing.schema)
+    }
+    assert(corpusFiles(corpus) == before, "a mis-declared compaction rewrote the corpus")
   }
 }

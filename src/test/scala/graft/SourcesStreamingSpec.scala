@@ -314,17 +314,17 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
     assert(probed.nonEmpty)
     // fold B; replaying the same batch id must append nothing
     updatePhashIndex(spark, path, batchB, 1L)
-    val n1 = readPhashIndex(spark, path).count()
+    val n1 = PhashIndexStore.read(spark, path).count()
     updatePhashIndex(spark, path, batchB, 1L)
-    assert(readPhashIndex(spark, path).count() == n1)
+    assert(PhashIndexStore.read(spark, path).count() == n1)
     // a re-delivered doc under a NEW batch id is dropped by the
     // anti-join, not duplicated
     updatePhashIndex(spark, path, batchB.limit(5), 2L)
-    assert(readPhashIndex(spark, path).count() == n1)
+    assert(PhashIndexStore.read(spark, path).count() == n1)
     // folded index content == a fresh full build's
     val fullPath = Files.createTempDirectory("graft_phash_full").toString + "/idx"
     assert(buildPhashIndex(spark, sigs, fullPath))
-    def img(p: String) = readPhashIndex(spark, p)
+    def img(p: String) = PhashIndexStore.read(spark, p)
       .select("doc_id", "pi", "pv", "p0", "p1", "p2", "p3").collect()
       .map(_.toSeq).toSet
     assert(img(path) == img(fullPath))
@@ -342,7 +342,7 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
     val path = Files.createTempDirectory("graft_phash_reenc").toString + "/idx"
     val sigs = phashSigs(spark, sf).localCheckpoint()
     assert(buildPhashIndex(spark, sigs, path))
-    val before = readPhashIndex(spark, path)
+    val before = PhashIndexStore.read(spark, path)
       .select("doc_id", "pi", "pv", "p0", "p1", "p2", "p3").collect()
       .map(_.toSeq).toSet
     // five docs re-ingested with CHANGED bytes → a different
@@ -354,7 +354,7 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
       .withColumn("p0", pmod(col("p0") + 12345, lit(65536)).cast("int"))
       .withColumn("p2", pmod(col("p2") + 321, lit(65536)).cast("int"))
     updatePhashIndex(spark, path, mutated, 7L)
-    val after = readPhashIndex(spark, path)
+    val after = PhashIndexStore.read(spark, path)
       .select("doc_id", "pi", "pv", "p0", "p1", "p2", "p3").collect()
       .map(_.toSeq).toSet
     assert(after == before)
@@ -389,9 +389,9 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
     val sigs = phashSigs(spark, sf).localCheckpoint()
     assert(buildPhashIndex(spark, sigs, path))
     // the sidecar mirrors the index doc set exactly, one row per doc
-    val idxDocs = readPhashIndex(spark, path).select("doc_id")
+    val idxDocs = PhashIndexStore.read(spark, path).select("doc_id")
       .distinct().collect().map(_.getLong(0)).toSet
-    val mem = readPhashMembers(spark, path).collect()
+    val mem = PhashMembersStore.read(spark, phashMembersPath(path)).collect()
     assert(mem.map(_.getAs[Long]("doc_id")).toSet == idxDocs)
     assert(mem.length == idxDocs.size, "sidecar must hold ONE row per doc")
     assert(mem.forall(r =>
@@ -440,8 +440,8 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
     val batchB = sigs.filter("doc_id % 2 = 1").localCheckpoint()
     assert(buildPhashIndex(spark, batchA, path))
     updatePhashIndex(spark, path, batchB, 1L)
-    val nIdx = readPhashIndex(spark, path).count()
-    val nMem = readPhashMembers(spark, path).count()
+    val nIdx = PhashIndexStore.read(spark, path).count()
+    val nMem = PhashMembersStore.read(spark, phashMembersPath(path)).count()
     // window 1: fold fully committed but the MARKER write was lost —
     // the replay must find every row via the pruned anti-joins and
     // append nothing to either store
@@ -449,8 +449,9 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
     val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fsys.delete(new org.apache.hadoop.fs.Path(root, "_phash_fold_1"), false)
     updatePhashIndex(spark, path, batchB, 1L)
-    assert(readPhashIndex(spark, path).count() == nIdx, "index grew on replay")
-    assert(readPhashMembers(spark, path).count() == nMem, "sidecar grew on replay")
+    assert(PhashIndexStore.read(spark, path).count() == nIdx, "index grew on replay")
+    assert(PhashMembersStore.read(spark, phashMembersPath(path)).count() == nMem,
+      "sidecar grew on replay")
     // window 2: the SIDECAR append committed but the index append did
     // not (crash between the two) — the replay must ignore this batch
     // id's own sidecar rows, append the index rows, and not duplicate
@@ -462,10 +463,10 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
       pmod(col("doc_id"), lit(PhashMemberBuckets.toLong)).as("mb"))
     PhashMembersStore.append(spark, cMembers, phashMembersPath(path))
     updatePhashIndex(spark, path, cSigs, 3L)
-    val idxC = readPhashIndex(spark, path)
+    val idxC = PhashIndexStore.read(spark, path)
       .filter(col("doc_id").isin(5000001L, 5000002L)).collect()
     assert(idxC.length == 8, s"expected 4 piece rows per new doc, got ${idxC.length}")
-    val memC = readPhashMembers(spark, path)
+    val memC = PhashMembersStore.read(spark, phashMembersPath(path))
       .filter(col("doc_id").isin(5000001L, 5000002L)).collect()
     assert(memC.length == 2 && memC.forall(_.getAs[Long]("batch_id") == 3L),
       "sidecar rows duplicated or mis-batched on crash-window replay")
@@ -494,9 +495,10 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
         .toMap
     assert(filesPer(path, "bk=").values.exists(_ > 1),
       "fixture should accrete multi-file buckets before compaction")
-    val idxBefore = readPhashIndex(spark, path).collect().map(_.toSeq).toSet
-    val memBefore = readPhashMembers(spark, path).collect().map(_.toSeq).toSet
-    val pairsBefore = readPhashPairs(spark, pairs).collect().map(_.toSeq).toSet
+    val idxBefore = PhashIndexStore.read(spark, path).collect().map(_.toSeq).toSet
+    val memBefore = PhashMembersStore.read(spark, phashMembersPath(path))
+      .collect().map(_.toSeq).toSet
+    val pairsBefore = PhashPairsStore.read(spark, pairs).collect().map(_.toSeq).toSet
     val emptyPartsBefore = filesPer(pairs, "batch_id=").filter(_._2 == 0).keySet
     val probeBefore = phashNewBlobs(spark, path,
       sigs.filter("doc_id % 2 = 1")).collect().map(_.toSeq).toSet
@@ -517,15 +519,16 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
       assert(bad.isEmpty, s"$store still multi-file: $bad")
     }
     // content unchanged; zero-pair completion dirs survive
-    assert(readPhashIndex(spark, path).collect().map(_.toSeq).toSet == idxBefore)
-    assert(readPhashMembers(spark, path).collect().map(_.toSeq).toSet == memBefore)
-    assert(readPhashPairs(spark, pairs).collect().map(_.toSeq).toSet == pairsBefore)
+    assert(PhashIndexStore.read(spark, path).collect().map(_.toSeq).toSet == idxBefore)
+    assert(PhashMembersStore.read(spark, phashMembersPath(path))
+      .collect().map(_.toSeq).toSet == memBefore)
+    assert(PhashPairsStore.read(spark, pairs).collect().map(_.toSeq).toSet == pairsBefore)
     assert(emptyPartsBefore.forall(d => new java.io.File(s"$pairs/$d").isDirectory),
       "compaction destroyed a zero-pair batch's completion dir")
     // fold markers survive → replaying an old batch is still a no-op
-    val nIdx = readPhashIndex(spark, path).count()
+    val nIdx = PhashIndexStore.read(spark, path).count()
     blobBatch(spark, blobs.filter(pmod($"doc_id", lit(3)) === 0), path, pairs, 0L)
-    assert(readPhashIndex(spark, path).count() == nIdx,
+    assert(PhashIndexStore.read(spark, path).count() == nIdx,
       "compaction lost a fold marker: replayed batch re-appended")
     // probe over the compacted index equals the uncompacted answer
     val probeAfter = phashNewBlobs(spark, path,
@@ -535,17 +538,17 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
     // and a genuinely NEW batch still probes and folds
     val newSigs = Seq((7000001L, 1, 2, 3, 4)).toDF("doc_id", "p0", "p1", "p2", "p3")
     updatePhashIndex(spark, path, newSigs, 9L)
-    assert(readPhashIndex(spark, path)
+    assert(PhashIndexStore.read(spark, path)
       .filter($"doc_id" === 7000001L).count() == 4)
     // a pre-sidecar index (sidecar dropped/never derived) HEALS on
     // compaction instead of refusing — the sidecar is a derived-
     // rebuildable cache, and ensurePhashMembers re-derives it exactly
     // as the fold path does on entry (r14 review)
-    val memAfterFold = readPhashMembers(spark, path)
+    val memAfterFold = PhashMembersStore.read(spark, phashMembersPath(path))
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     graft.sources.Catalog.dropIfExists(spark, phashMembersPath(path))
     compactPhashIndex(spark, path, Some(pairs))
-    assert(readPhashMembers(spark, path)
+    assert(PhashMembersStore.read(spark, phashMembersPath(path))
       .select($"doc_id").collect().map(_.getLong(0)).toSet == memAfterFold,
       "healed sidecar lost or invented membership")
   }
@@ -564,7 +567,7 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
       blobBatch(spark, blobs.filter(pmod($"doc_id", lit(3)) === b),
         path, pairs, b.toLong)
     }
-    def telemetry(): Map[Long, (Long, Long)] = readPhashPairs(spark, pairs)
+    def telemetry(): Map[Long, (Long, Long)] = PhashPairsStore.read(spark, pairs)
       .groupBy($"batch_id")
       .agg(count(lit(1)).as("n"), sum(when($"hamming" === 0, 1L).otherwise(0L)).as("h0"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -600,13 +603,13 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
     assert(after == before.filter(_._1 >= 2L), "retained batches changed")
     // replaying an aged batch appends nothing anywhere (pairs guard
     // short-circuits on the dir, fold guard on its surviving marker)
-    val nIdx = readPhashIndex(spark, path).count()
+    val nIdx = PhashIndexStore.read(spark, path).count()
     (0 to 1).foreach { b =>
       assert(blobBatch(spark, blobs.filter(pmod($"doc_id", lit(3)) === b),
         path, pairs, b.toLong) == 0L)
     }
     assert(telemetry() == after, "aged batch replay re-appended pairs")
-    assert(readPhashIndex(spark, path).count() == nIdx,
+    assert(PhashIndexStore.read(spark, path).count() == nIdx,
       "aged batch replay re-folded into the index")
     // a genuinely NEW batch still probes and folds normally
     val newBlobs = Seq((9000001L, Array.fill(64)(7.toByte)))
@@ -614,7 +617,7 @@ class MultimodalSpec extends AnyFunSuite with RegistryRows {
     blobBatch(spark, newBlobs, path, pairs, 9L)
     assert(new java.io.File(s"$pairs/batch_id=9").isDirectory,
       "post-aging batch did not run")
-    assert(readPhashIndex(spark, path).filter($"doc_id" === 9000001L)
+    assert(PhashIndexStore.read(spark, path).filter($"doc_id" === 9000001L)
       .count() == 4, "post-aging batch did not fold")
     // the horizon is monotone: a lower re-request never rewinds it
     Catalog.dropPartitionsBelow(spark, pairs, "batch_id", 0L)
@@ -726,6 +729,25 @@ class CatalogSpec extends AnyFunSuite {
     val again = spark.read.parquet(out).select($"id", $"v")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(again == got, "replayed upsert must be a no-op on contents")
+  }
+
+  test("upsert whose batch lacks or adds a stored column fails and rewrites nothing") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_upsert_drift").toString + "/t"
+    Catalog.writePartitioned(
+      Seq((1L, "en", 10L, "x"), (2L, "de", 20L, "y")).toDF("id", "lang", "v", "note"),
+      out, Seq("lang"))
+    def files() = new java.io.File(out).listFiles().filter(_.isDirectory)
+      .flatMap(d => d.listFiles().map(f => (d.getName, f.getName, f.lastModified()))).toSet
+    val before = files()
+    val lacking = Seq((1L, "en", 11L)).toDF("id", "lang", "v")
+    val adding = Seq((1L, "en", 11L, "x", 0)).toDF("id", "lang", "v", "note", "extra")
+    for (u <- Seq(lacking, adding)) {
+      intercept[IllegalArgumentException] {
+        Catalog.upsertPartitioned(spark, u, out, "lang", Seq("id"))
+      }
+      assert(files() == before, s"a ${u.columns.mkString(",")} upsert rewrote the table")
+    }
   }
 
   test("compactPartitions collapses a partition's files; others untouched") {
@@ -1693,12 +1715,12 @@ class DetectionStreamSpec extends AnyFunSuite {
     } finally q.stop()
 
     // the accumulated match table IS the flat two-catalog association
-    val stored = queries.Spatial.readMatchTable(spark, matchPath)
+    val stored = queries.Spatial.MatchStore.read(spark, matchPath)
     assert(pairSet(stored.select("det_k", "obj_k", "dist_r6")) ==
       pairSet(queries.Spatial.qXmatch2cat(spark, sf)))
     // the transient table IS the unmatched half, and together they
     // partition the detections exactly
-    val trans = queries.Spatial.readTransients(spark, transientPath)
+    val trans = queries.Spatial.TransientStore.read(spark, transientPath)
     val wantTrans = queries.Spatial.qXmatchUnmatched(spark, sf)
       .select("det_k").collect().map(_.getLong(0)).toSet
     assert(trans.select("det_k").collect().map(_.getLong(0)).toSet == wantTrans)
@@ -1709,9 +1731,9 @@ class DetectionStreamSpec extends AnyFunSuite {
     val firstDf = first.toSeq.toDF("det_k", "ra", "decl")
     assert(queries.Spatial.associateBatch(spark, firstDf, objHalo,
       matchPath, transientPath, 0L, 1.0) == (0L, 0L))
-    assert(queries.Spatial.readMatchTable(spark, matchPath).count() ==
+    assert(queries.Spatial.MatchStore.read(spark, matchPath).count() ==
       stored.count())
-    assert(queries.Spatial.readTransients(spark, transientPath).count() ==
+    assert(queries.Spatial.TransientStore.read(spark, transientPath).count() ==
       trans.count())
 
     // crash window: matches committed, transients lost — replay heals
@@ -1725,7 +1747,7 @@ class DetectionStreamSpec extends AnyFunSuite {
       matchPath, transientPath, 1L, 1.0)
     assert(m1 == 0L, "match append must replay as a no-op")
     assert(t1 == before, "healed transient partition must restore its rows")
-    assert(queries.Spatial.readTransients(spark, transientPath)
+    assert(queries.Spatial.TransientStore.read(spark, transientPath)
       .select("det_k").collect().map(_.getLong(0)).toSet == wantTrans)
 
     // retention applies to the MATCH/TRANSIENT stores identically to
@@ -1734,9 +1756,9 @@ class DetectionStreamSpec extends AnyFunSuite {
     // completion markers, the retained window is untouched, and the
     // aged batch replays as a no-op through its partition guard
     import graft.sources.Catalog
-    val keepM = queries.Spatial.readMatchTable(spark, matchPath)
+    val keepM = queries.Spatial.MatchStore.read(spark, matchPath)
       .filter("batch_id = 1").count()
-    val keepT = queries.Spatial.readTransients(spark, transientPath)
+    val keepT = queries.Spatial.TransientStore.read(spark, transientPath)
       .filter("batch_id = 1").count()
     assert(Catalog.dropPartitionsBelow(spark, matchPath, "batch_id", 1L) == 1)
     assert(Catalog.dropPartitionsBelow(spark, transientPath, "batch_id", 1L) == 1)
@@ -1745,8 +1767,8 @@ class DetectionStreamSpec extends AnyFunSuite {
       assert(new java.io.File(s"$p/batch_id=0").isDirectory,
         s"$p lost its aged completion dir")
     }
-    assert(queries.Spatial.readMatchTable(spark, matchPath).count() == keepM)
-    assert(queries.Spatial.readTransients(spark, transientPath).count() == keepT)
+    assert(queries.Spatial.MatchStore.read(spark, matchPath).count() == keepM)
+    assert(queries.Spatial.TransientStore.read(spark, transientPath).count() == keepT)
     assert(queries.Spatial.associateBatch(spark, firstDf, objHalo,
       matchPath, transientPath, 0L, 1.0) == (0L, 0L),
       "aged association batch must replay as a no-op")
@@ -1793,7 +1815,7 @@ class BlobStreamSpec extends AnyFunSuite {
       .forall(f => f.getName.startsWith("_") || f.getName.startsWith(".")))
     // retained batches carry exactly the brute-force attribution
     val n = 3L
-    val got = readPhashPairs(spark, pairsPath).collect()
+    val got = PhashPairsStore.read(spark, pairsPath).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
     val want = qBlobPhash(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1),
@@ -1804,14 +1826,14 @@ class BlobStreamSpec extends AnyFunSuite {
     // the index is NEVER aged: it still equals a fresh full build
     val fullPath = base.resolve("full").toString
     assert(buildPhashIndex(spark, phashSigs(spark, sf), fullPath))
-    def img(p: String) = readPhashIndex(spark, p)
+    def img(p: String) = PhashIndexStore.read(spark, p)
       .select("doc_id", "pi", "pv", "p0", "p1", "p2", "p3").collect()
       .map(_.toSeq).toSet
     assert(img(indexPath) == img(fullPath), "retention touched the index")
     // an aged batch replays as a no-op through both guards
     assert(blobBatch(spark, slices(0).toSeq.toDF("doc_id", "blob"),
       indexPath, pairsPath, 0L) == 0L)
-    assert(readPhashPairs(spark, pairsPath).collect()
+    assert(PhashPairsStore.read(spark, pairsPath).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet == got)
   }
 
@@ -1863,7 +1885,7 @@ class BlobStreamSpec extends AnyFunSuite {
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("d1", "d2", "hamming").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val streamed = readPhashPairs(spark, pairsPath)
+    val streamed = PhashPairsStore.read(spark, pairsPath)
     val want = pairSet(qBlobPhash(spark, sf))
     assert(pairSet(streamed) == want)
     assert(streamed.count() == want.size.toLong, "no pair may arrive twice")
@@ -1871,7 +1893,7 @@ class BlobStreamSpec extends AnyFunSuite {
     // the folded index equals a fresh full build over the corpus
     val fullPath = base.resolve("full").toString
     assert(buildPhashIndex(spark, phashSigs(spark, sf), fullPath))
-    def img(p: String) = readPhashIndex(spark, p)
+    def img(p: String) = PhashIndexStore.read(spark, p)
       .select("doc_id", "pi", "pv", "p0", "p1", "p2", "p3").collect()
       .map(_.toSeq).toSet
     assert(img(indexPath) == img(fullPath))
@@ -1879,10 +1901,10 @@ class BlobStreamSpec extends AnyFunSuite {
     // a replayed micro-batch (same batch_id) appends to NEITHER store
     val firstDf = first.toSeq.toDF("doc_id", "blob")
     val nPairs = streamed.count()
-    val nIdx = readPhashIndex(spark, indexPath).count()
+    val nIdx = PhashIndexStore.read(spark, indexPath).count()
     assert(blobBatch(spark, firstDf, indexPath, pairsPath, 0L) == 0L)
-    assert(readPhashPairs(spark, pairsPath).count() == nPairs)
-    assert(readPhashIndex(spark, indexPath).count() == nIdx)
+    assert(PhashPairsStore.read(spark, pairsPath).count() == nPairs)
+    assert(PhashIndexStore.read(spark, indexPath).count() == nIdx)
 
     // crash window: pairs partition lost after the fold committed —
     // replay restores the partition; the re-probe against the
@@ -1896,8 +1918,8 @@ class BlobStreamSpec extends AnyFunSuite {
     val restored = blobBatch(spark, second.toSeq.toDF("doc_id", "blob"),
       indexPath, pairsPath, 1L)
     assert(restored == before, "healed pairs partition must restore its rows")
-    assert(pairSet(readPhashPairs(spark, pairsPath)) == want)
-    assert(readPhashIndex(spark, indexPath).count() == nIdx,
+    assert(pairSet(PhashPairsStore.read(spark, pairsPath)) == want)
+    assert(PhashIndexStore.read(spark, indexPath).count() == nIdx,
       "the fold half must replay as a no-op")
   }
 
@@ -1946,11 +1968,11 @@ class BlobStreamSpec extends AnyFunSuite {
     val fsys = new org.apache.hadoop.fs.Path(idxPath).getFileSystem(hconf)
     val lastFold = new org.apache.hadoop.fs.Path(idxPath, s"_phash_fold_${n - 1}")
     assert(fsys.delete(lastFold, false))
-    val idxCount = readPhashIndex(spark, idxPath).count()
+    val idxCount = PhashIndexStore.read(spark, idxPath).count()
     val pairsStamp = newest(pairsPath)
     assert(run() == got)
     assert(fsys.exists(lastFold), "the fold marker must be restored")
-    assert(readPhashIndex(spark, idxPath).count() == idxCount,
+    assert(PhashIndexStore.read(spark, idxPath).count() == idxCount,
       "the fold replay must append nothing")
     assert(newest(pairsPath) == pairsStamp,
       "the pairs half must skip on its partition guard")
@@ -2175,7 +2197,7 @@ class LightcurveStreamSpec extends AnyFunSuite {
     // the at-rest layout the read had to merge is the STEADY state:
     // a canonical fold (the mid-build compaction of batches 0-1) PLUS
     // uncompacted tail batches — not a conveniently fresh store
-    val path = queries.Ann.annCachePath(sf, "lc_stats", "events.parquet")
+    val path = graft.sources.Store.derivedPath(sf, "lc_stats", Seq("events.parquet"))
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val subs = fs.listStatus(root).filter(b => b.isDirectory &&

@@ -494,7 +494,7 @@ class SpatialSpec extends AnyFunSuite with RegistryRows {
     val n1 = queries.Spatial.associateNewDetections(spark,
       dets.filter("k % 2 = 1"), objHalo, matchPath, 1L, 1.0)
     assert(n0 + n1 > 0, "no matches at all — association vacuous")
-    val stored = queries.Spatial.readMatchTable(spark, matchPath)
+    val stored = queries.Spatial.MatchStore.read(spark, matchPath)
     assert(stored.count() == n0 + n1)
     // the union of the nightly appends IS the flat association
     assert(pairSet(stored.select("det_k", "obj_k", "dist_r6")) ==
@@ -504,12 +504,12 @@ class SpatialSpec extends AnyFunSuite with RegistryRows {
     // replaying a committed batch is a no-op, not a double-association
     assert(queries.Spatial.associateNewDetections(spark,
       dets.filter("k % 2 = 1"), objHalo, matchPath, 1L, 1.0) == 0L)
-    assert(queries.Spatial.readMatchTable(spark, matchPath).count() == n0 + n1)
+    assert(queries.Spatial.MatchStore.read(spark, matchPath).count() == n0 + n1)
     // an all-quiet night (zero detections) appends nothing and leaves
     // the table readable
     assert(queries.Spatial.associateNewDetections(spark,
       dets.filter("k < 0"), objHalo, matchPath, 2L, 1.0) == 0L)
-    assert(queries.Spatial.readMatchTable(spark, matchPath).count() == n0 + n1)
+    assert(queries.Spatial.MatchStore.read(spark, matchPath).count() == n0 + n1)
   }
 
   test("object creation closes the nightly cycle: transients become matchable; replay creates nothing") {
@@ -533,7 +533,7 @@ class SpatialSpec extends AnyFunSuite with RegistryRows {
     // replay creates nothing (staged-append replay guard on batch_id)
     assert(queries.Spatial.createObjectsFromTransients(spark,
       transientPath, 0L, deltaPath, IdOffset, 1.0) == 0L)
-    assert(queries.Spatial.deltaObjects(spark, deltaPath)
+    assert(queries.Spatial.ObjDeltaStore.read(spark, deltaPath)
       .filter("is_core = 1").count() == nTrans)
     // re-probing the SAME detections against base ∪ delta leaves
     // nothing unmatched: the delta closed the catalog
@@ -541,7 +541,7 @@ class SpatialSpec extends AnyFunSuite with RegistryRows {
       dets.selectExpr("det_k AS k", "ra", "decl"), 5.0)
     val mBase = queries.Spatial.xmatchStored(probe, objHalo, 1.0)
     val mDelta = queries.Spatial.xmatchStored(probe,
-      queries.Spatial.deltaObjects(spark, deltaPath), 1.0)
+      queries.Spatial.ObjDeltaStore.read(spark, deltaPath), 1.0)
     val matched = mBase.select("k1").union(mDelta.select("k1"))
       .distinct().count()
     assert(matched == dets.count(),

@@ -62,12 +62,12 @@ class StoreSpec extends AnyFunSuite {
       "zone" -> s"$root/zone", "zone_ra" -> s"$root/zone_ra",
       "match" -> matchPath, "transient" -> transPath,
       "obj_delta" -> s"$root/obj_delta", "halo" -> haloFile,
-      "ann_model" -> (Ann.annCachePath(sf, "pq_codes") + ".model"),
-      "ann_model" -> (Ann.annCachePath(sf, "ivfpq_codes") + ".model"),
+      "ann_model" -> (Store.derivedPath(sf, "pq_codes", Seq("embeddings.parquet")) + ".model"),
+      "ann_model" -> (Store.derivedPath(sf, "ivfpq_codes", Seq("embeddings.parquet")) + ".model"),
       "ann_model" -> Ann.ivfModelCachePath(sf),
-      "pq_codes" -> Ann.annCachePath(sf, "pq_codes"),
-      "ivfpq_codes" -> Ann.annCachePath(sf, "ivfpq_codes"),
-      "vecstore" -> Ann.annCachePath(sf, "vecstore"),
+      "pq_codes" -> Store.derivedPath(sf, "pq_codes", Seq("embeddings.parquet")),
+      "ivfpq_codes" -> Store.derivedPath(sf, "ivfpq_codes", Seq("embeddings.parquet")),
+      "vecstore" -> Store.derivedPath(sf, "vecstore", Seq("embeddings.parquet")),
       "grams" -> s"$root/contain/grams", "ngrams" -> s"$root/contain/ngrams",
       "stopgrams" -> s"$root/contain/stopgrams",
       "bench_idx" -> s"$root/bench_idx", "linedf" -> s"$root/linedf",
@@ -161,7 +161,7 @@ class StoreSpec extends AnyFunSuite {
     assert(nMatch > 0 && nTrans == 0)
     assert(new java.io.File(s"$tPath/batch_id=0").isDirectory,
       "the empty transient batch left no partition directory")
-    assert(Spatial.readTransients(spark, tPath).isEmpty)
+    assert(Spatial.TransientStore.read(spark, tPath).isEmpty)
     val replay = JobProbe(spark.sparkContext) { assert(run() == ((0L, 0L))) }
     assert(replay.isEmpty, s"replay of a committed batch started jobs: $replay")
   }
