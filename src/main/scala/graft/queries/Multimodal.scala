@@ -933,8 +933,8 @@ object Multimodal {
     * resume still see the batch as complete, and records the horizon
     * in the store's `_age_horizon` marker.
     *
-    * Discipline (the [[graft.streaming.DocStream.compactCorpus]] /
-    * ObjectIndex.compactIndex contract): each store's compaction
+    * Discipline (the [[graft.streaming.DocStream.compactCorpus]]
+    * contract): each store's compaction
     * ([[graft.sources.Store.compact]]) REFUSES while a crashed append
     * is pending on it — rolling it forward or back is a recovery
     * decision ([[graft.sources.Catalog.recoverAppends]])

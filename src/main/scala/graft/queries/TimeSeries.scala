@@ -2582,7 +2582,7 @@ object TimeSeries {
     * stats store — [[graft.streaming.LightcurveStream]]'s LSM of
     * mergeable partials — by driving the REAL maintenance loop:
     * every deterministic micro-batch through `applyStatsBatch`, with
-    * one mid-build `compactStats`, so the at-rest layout a read must
+    * one mid-build fold, so the at-rest layout a read must
     * merge is the steady state's (a canonical fold PLUS uncompacted
     * tail batches), not a conveniently fresh store. The path is a
     * content-keyed derived cache (the ANN stored-model discipline);
@@ -2608,7 +2608,7 @@ object TimeSeries {
         // fold mid-build: the finished store holds a compacted base
         // plus the later batches as its uncompacted tail
         if (b == LcStoreBatches / 2 - 1)
-          graft.streaming.LightcurveStream.compactStats(s, path)
+          graft.streaming.LightcurveStream.StatsStore.fold(s, path)
       }
       fs.create(done, true).close()
     }
@@ -2693,7 +2693,7 @@ object TimeSeries {
   private[graft] def lcStreamBatchesOver(s: SparkSession, path: String,
     nBatches: Int): DataFrame = {
     import s.implicits._
-    val horizon = graft.streaming.LightcurveStream.foldedHorizon(s, path)
+    val horizon = graft.streaming.LightcurveStream.StatsStore.foldedHorizon(s, path)
     val ids = (Seq(-1L) ++ (0L until nBatches.toLong)).toDF("ibatch")
     graft.streaming.LightcurveStream.StatsStore.read(s, path)
       .groupBy($"ibatch")

@@ -144,7 +144,7 @@ object Catalog {
   // are schema-checked so drifting input files fail loudly instead
   // of corrupting the table.
 
-  private def fs(s: SparkSession, path: String) = {
+  private[sources] def fs(s: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
     (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
   }
@@ -503,16 +503,35 @@ object Catalog {
   /** The store's recorded aging horizon (0 when never aged):
     * partitions with key < this value have had their data aged out,
     * so a zero-row read there means "retired", not "never happened". */
-  def ageHorizon(s: SparkSession, path: String): Long = {
+  def ageHorizon(s: SparkSession, path: String): Long =
+    readMarker(s, path, AgeHorizonMarker).getOrElse(0L)
+
+  /** The Long held by the marker file `name` at the root of `path`. */
+  private[graft] def readMarker(s: SparkSession, path: String, name: String): Option[Long] = {
     val (f, p) = fs(s, path)
-    val m = new org.apache.hadoop.fs.Path(p, AgeHorizonMarker)
-    if (!f.exists(m)) 0L
+    val m = new org.apache.hadoop.fs.Path(p, name)
+    if (!f.exists(m)) None
     else {
       val in = f.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
       finally in.close()
     }
   }
+
+  /** Raise the marker `name` at the root of `path` to `v`; a lower or
+    * equal `v` leaves it as it is. The value is written beside the
+    * marker and renamed over it in one step (`FileContext`
+    * `Rename.OVERWRITE`), so a crash leaves the old value or the new
+    * one: never a partial marker, and never none. */
+  private[graft] def advanceMarker(s: SparkSession, path: String, name: String, v: Long): Unit =
+    if (readMarker(s, path, name).forall(_ < v)) {
+      val (f, p) = fs(s, path)
+      val tmp = new org.apache.hadoop.fs.Path(p, s".$name.tmp")
+      val out = f.create(tmp, true)
+      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+      org.apache.hadoop.fs.FileContext.getFileContext(f.getUri, s.sparkContext.hadoopConfiguration)
+        .rename(tmp, new org.apache.hadoop.fs.Path(p, name), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
 
   /** Retention/aging for batch-partitioned lifecycle stores: delete
     * the DATA FILES of every `partCol=<v>` partition with v <
@@ -575,21 +594,7 @@ object Catalog {
         }
       }
     }
-    // Record the advanced horizon via the staging+rename commit the
-    // other Catalog markers use: a crash can never leave a PARTIAL
-    // marker (ageHorizon would throw on it forever) — worst case is
-    // the old/no marker, which only means the next pass re-lists a
-    // few already-empty dirs. No-op calls (horizon not advancing)
-    // skip the write entirely.
-    if (horizon > prevH) {
-      val m = new org.apache.hadoop.fs.Path(p, AgeHorizonMarker)
-      val tmp = new org.apache.hadoop.fs.Path(p, AgeHorizonMarker + ".tmp")
-      val out = f.create(tmp, true)
-      try out.write(horizon.toString.getBytes("UTF-8")) finally out.close()
-      f.delete(m, false)
-      if (!f.rename(tmp, m))
-        throw new java.io.IOException(s"failed committing $tmp -> $m")
-    }
+    advanceMarker(s, path, AgeHorizonMarker, horizon)
     aged
   }
 

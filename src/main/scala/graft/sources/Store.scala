@@ -1,9 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.internal.SQLConf
@@ -37,10 +37,46 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * create the partition directory if the batch wrote no rows. The
   * empty-batch rule makes the directory the durable "this batch ran"
   * marker for every batch, so an empty batch replays in zero Spark
-  * jobs like any other committed one. */
-final case class Store(columns: StructType, partitionCols: Seq[String] = Nil) {
+  * jobs like any other committed one.
+  *
+  * Fold protocol (stores declared with `foldRows`, partitioned by a
+  * bucket column, then a batch column — the director index and the
+  * light-curve stats store). Batches accrete under `<bkt>=b/<batch>=i`
+  * (i ≥ 0); [[fold]] merges each bucket's partitions into one
+  * `<batch>=-1` ([[Store.FoldId]]) partition through the store's fold
+  * row rule:
+  *  - read rule ([[readBuckets]], [[readLive]]): a bucket holding a
+  *    stage `<batch>=-2` ([[Store.StageId]]) is read through the stage
+  *    alone, every other bucket through `<bkt>=b`, with `basePath` =
+  *    the store root. The stage already holds everything its bucket
+  *    held when it was staged, so every read is exact at every
+  *    instant of a fold, and after a crash in one;
+  *  - fold: phase 1 writes the folded rows of every bucket as its
+  *    stage (dynamic overwrite of the stage partitions only). Then
+  *    the horizon — the highest batch id the fold captured, from the
+  *    driver's listing taken before phase 1 — is recorded, monotone,
+  *    in the root's `_folded_upto` marker ([[Store.FoldedMarker]]).
+  *    Phase 2, per bucket, deletes the sources and renames the stage
+  *    to the fold partition. A re-run from any crash point folds a
+  *    stage to itself, so re-running the fold heals it;
+  *  - landing a batch ([[landBatch]]): a batch at or below the
+  *    horizon is a replay of content a fold holds and is skipped (its
+  *    partitions may be gone, so the dynamic overwrite could not
+  *    dedup it); an orphaned stage is healed first (a batch landed
+  *    beside it would be shadowed by the read rule, then deleted as
+  *    a source); then the batch is written with a dynamic overwrite
+  *    of `<batch>=<id>`, so a replay overwrites its own partitions.
+  *
+  * Precondition: folds run inside the store's ingest loop (between
+  * batches, on the driver) or on a quiesced store, and every writer
+  * heals an orphaned stage before it writes ([[healFold]]); a batch
+  * landing mid-fold would be deleted as a source. */
+final case class Store(columns: StructType, partitionCols: Seq[String] = Nil,
+  foldRows: Option[DataFrame => DataFrame] = None) {
   require(partitionCols.forall(columns.fieldNames.contains),
     s"partition columns $partitionCols not among ${columns.fieldNames.mkString(",")}")
+  require(foldRows.isEmpty || partitionCols.size == 2,
+    s"a fold store is partitioned by a bucket and a batch column: $partitionCols")
 
   /** The columns stored inside the data files. */
   val dataColumns: StructType =
@@ -52,7 +88,7 @@ final case class Store(columns: StructType, partitionCols: Seq[String] = Nil) {
     StructType(dataColumns ++ partitionCols.map(columns(_)))
 
   def read(s: SparkSession, path: String): DataFrame =
-    s.read.schema(schema).parquet(path)
+    Store.atCaller(s)(s.read.schema(schema).parquet(path))
 
   private def conform(df: DataFrame, path: String): DataFrame = {
     import Store.sig
@@ -167,9 +203,110 @@ final case class Store(columns: StructType, partitionCols: Seq[String] = Nil) {
         .partitionBy(partCol).parquet(path)
     } finally f.delete(tmp, true)
   }
+
+  // ---------------------------------------------------------------
+  // The fold protocol (see the class doc).
+
+  private def bucketDirs(f: FileSystem, root: Path): Seq[Path] =
+    f.listStatus(root).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(partitionCols.head + "="))
+      .map(_.getPath)
+
+  private def part(bucket: Path, id: Long) = new Path(bucket, s"${partitionCols(1)}=$id")
+
+  /** The read rule over the named buckets: a bucket with no directory
+    * contributes no rows; a store root that does not exist fails. */
+  def readBuckets(s: SparkSession, path: String, buckets: Seq[Any]): DataFrame =
+    readRule(s, path, buckets.map(b => new Path(path, s"${partitionCols.head}=$b")))
+
+  /** The read rule over every bucket: the store's exact content. */
+  def readLive(s: SparkSession, path: String): DataFrame = {
+    val (f, root) = Catalog.fs(s, path)
+    require(f.exists(root), s"no store at $path")
+    readRule(s, path, bucketDirs(f, root))
+  }
+
+  private def readRule(s: SparkSession, path: String, buckets: Seq[Path]): DataFrame = {
+    val (f, root) = Catalog.fs(s, path)
+    val dirs = buckets.filter(f.exists).map { b =>
+      val stage = part(b, Store.StageId)
+      if (f.exists(stage)) stage else b
+    }
+    if (dirs.nonEmpty) Store.atCaller(s) {
+      s.read.schema(schema).option("basePath", path).parquet(dirs.map(_.toString): _*)
+    } else {
+      require(f.exists(root), s"no store at $path")
+      s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    }
+  }
+
+  /** The highest batch id a fold has captured (−1 before any fold). */
+  def foldedHorizon(s: SparkSession, path: String): Long =
+    Catalog.readMarker(s, path, Store.FoldedMarker).getOrElse(-1L)
+
+  /** Land batch `batchId` (≥ 0): `rows` are its rows without the batch
+    * column, evaluated only when the batch is written. */
+  def landBatch(s: SparkSession, path: String, batchId: Long)(rows: => DataFrame): Unit = {
+    require(batchId >= 0, s"batch ids are non-negative (got $batchId): negative ids are the fold's")
+    if (batchId > foldedHorizon(s, path)) {
+      healFold(s, path)
+      if (batchId > foldedHorizon(s, path)) overwriteBatch(rows, batchId, path)
+    }
+  }
+
+  /** Finish an orphaned fold (a stage at rest) by re-running it. */
+  def healFold(s: SparkSession, path: String): Unit = {
+    val (f, root) = Catalog.fs(s, path)
+    if (f.exists(root) && bucketDirs(f, root).exists(b => f.exists(part(b, Store.StageId))))
+      fold(s, path)
+  }
+
+  private def overwriteBatch(rows: DataFrame, batchId: Long, path: String): Unit =
+    conform(rows.withColumn(partitionCols(1), lit(batchId)), path)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*).parquet(path)
+
+  /** Fold every bucket's partitions into its fold partition. */
+  def fold(s: SparkSession, path: String): Unit = {
+    val (f, root) = Catalog.fs(s, path)
+    if (!f.exists(root)) return
+    val prefix = partitionCols(1) + "="
+    val horizon = bucketDirs(f, root).flatMap(b => f.listStatus(b).toSeq.map(_.getPath.getName))
+      .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix).toLong).filter(_ >= 0).maxOption
+    overwriteBatch(foldRows.get(readLive(s, path)), Store.StageId, path)
+    horizon.foreach(Catalog.advanceMarker(s, path, Store.FoldedMarker, _))
+    for (b <- bucketDirs(f, root); stage = part(b, Store.StageId) if f.exists(stage)) {
+      f.listStatus(b).filter(st => st.isDirectory && st.getPath.getName != stage.getName)
+        .foreach(st => f.delete(st.getPath, true))
+      if (!f.rename(stage, part(b, Store.FoldId)))
+        throw new java.io.IOException(s"could not rename $stage to the fold partition")
+    }
+  }
 }
 
 object Store {
+
+  /** The fold partition and a fold's stage, as batch-column values. */
+  val FoldId = -1L
+  val StageId = -2L
+
+  /** The root marker holding a fold store's horizon. */
+  val FoldedMarker = "_folded_upto"
+
+  /** Run `body`, a store read, with the Spark call site set to the
+    * read's caller (the first frame past `Store` and the Scala
+    * library), so an eager job it starts is named after that line
+    * rather than after this file. */
+  private def atCaller[T](s: SparkSession)(body: => T): T = {
+    val sc = s.sparkContext
+    val at = Thread.currentThread.getStackTrace.iterator
+      .dropWhile(!_.getClassName.startsWith("graft.sources.Store"))
+      .dropWhile(f => f.getClassName.startsWith("graft.sources.Store") ||
+        f.getClassName.startsWith("scala.")).nextOption()
+    val prev = sc.getLocalProperty("callSite.short")
+    at.foreach(f => sc.setCallSite(s"parquet at ${f.getFileName}:${f.getLineNumber}"))
+    try body finally if (prev == null) sc.clearCallSite() else sc.setCallSite(prev)
+  }
 
   /** A schema's (name, type) set, the unit of drift: column order and
     * nullability (also of nested types) are not part of it. */

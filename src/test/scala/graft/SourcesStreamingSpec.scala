@@ -1417,38 +1417,45 @@ class EventStreamSpec extends AnyFunSuite {
     val events = Tables.events(spark, sf)
     val nb = 16
     val id = queries.TimeSeries.LookupId
+    val store = graft.sources.ObjectIndex.IndexStore
     def wantUnder(bound: Long) = queries.TimeSeries.qObjectLookup(spark, sf)
       .filter($"event_id" < bound).collect().map(_.toSeq).toSeq
     def want = wantUnder(Long.MaxValue)
     def got = graft.sources.ObjectIndex.lookup(spark, idx, id, nb)
       .collect().map(_.toSeq).toSeq
+    val ids = Seq(id, 3L, 11L, 5L, 14L)
+    def wantManyUnder(bound: Long) = events
+      .filter($"user_id".isin(ids: _*) && $"event_id" < bound)
+      .selectExpr("user_id", "event_id", "ts DIV 1000 AS tus")
+      .orderBy("user_id", "tus", "event_id").collect().map(_.toSeq).toSeq
+    def gotMany = graft.sources.ObjectIndex.lookupMany(spark, idx, ids, nb)
+      .select("user_id", "event_id", "tus").collect().map(_.toSeq).toSeq
     def gensPerBucket: Seq[Int] = new java.io.File(idx).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("obkt="))
       .map(_.listFiles().count(f => f.isDirectory && f.getName.startsWith("ibatch=")))
       .toSeq
+    def batch(b: Int) = events.filter(s"event_id < 600 AND event_id % 6 = $b")
 
-    // replay N disjoint micro-batches: generations (and files) accrete
-    // per bucket; the tail of the table arrives later as batch 100
-    val n = 6
-    for (b <- 0 until n)
-      graft.sources.ObjectIndex.applyIndexBatch(
-        events.filter(s"event_id < 600 AND event_id % $n = $b"), b.toLong, idx, nb)
+    // replay N disjoint micro-batches: batch partitions (and files)
+    // accrete per bucket; the tail of the table arrives later
+    for (b <- 0 until 6)
+      graft.sources.ObjectIndex.applyIndexBatch(batch(b), b.toLong, idx, nb)
     assert(gensPerBucket.max > 1, "expected multi-generation buckets before compaction")
     assert(got == wantUnder(600), "pre-compaction lookup broken")
 
-    // fold: all but the NEWEST streaming generation collapse (batch 5
-    // may still replay, so it is left for the next cycle) — at most
-    // 2 generations per bucket afterwards
-    val gen = graft.sources.ObjectIndex.compactIndex(spark, idx, nb)
-    assert(gen == -1L, s"first compaction generation should be -1, got $gen")
-    assert(gensPerBucket.forall(_ <= 2),
-      s"buckets exceed compacted+newest generations: $gensPerBucket")
+    // fold: every batch, the newest included, collapses into the fold
+    // partition, and the horizon records batch 5
+    store.fold(spark, idx)
+    assert(gensPerBucket.forall(_ == 1), s"buckets not fully folded: $gensPerBucket")
+    assert(store.foldedHorizon(spark, idx) == 5L)
     assert(got == wantUnder(600), "compaction lost or duplicated rows")
-    // the replay hazard itself: re-applying the newest batch AFTER the
-    // fold must stay idempotent (its generation was not folded away)
-    graft.sources.ObjectIndex.applyIndexBatch(
-      events.filter(s"event_id < 600 AND event_id % $n = ${n - 1}"), (n - 1).toLong, idx, nb)
-    assert(got == wantUnder(600), "newest-batch replay after compaction duplicated rows")
+    // replaying a folded batch after the fold, the newest or an older
+    // one, is skipped by the horizon
+    for (b <- Seq(5, 2)) {
+      graft.sources.ObjectIndex.applyIndexBatch(batch(b), b.toLong, idx, nb)
+      assert(got == wantUnder(600) && gensPerBucket.forall(_ == 1),
+        s"replay of folded batch $b after compaction duplicated rows")
+    }
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -1458,8 +1465,8 @@ class EventStreamSpec extends AnyFunSuite {
       }
       scan.collect()
       assert(scans.head.partitionFilters.nonEmpty, "no partition filter post-compaction")
-      // the scan reads exactly this bucket's (compacted + newest-gen)
-      // files — one per generation dir — and nothing from other buckets
+      // the scan reads exactly this bucket's folded file, and nothing
+      // from other buckets
       val bucketFiles = {
         def walk(f: java.io.File): Long =
           if (f.isFile) { if (f.getName.endsWith(".parquet")) 1L else 0L }
@@ -1471,29 +1478,32 @@ class EventStreamSpec extends AnyFunSuite {
           s"files, bucket holds $bucketFiles")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
 
-    // a later batch + second compaction allocates the next generation
-    // down, folding the previous compacted gen AND the now-old batch 5
+    // a fold that crashed after its phase 1: every bucket holds a stage
+    // with its whole content beside the sources it was folded from;
+    // lookups read the stage alone, so they stay exact
     graft.sources.ObjectIndex.applyIndexBatch(
-      events.filter("event_id >= 600"), 100L, idx, nb)
-    val gen2 = graft.sources.ObjectIndex.compactIndex(spark, idx, nb)
-    assert(gen2 == -2L, s"second compaction generation should be -2, got $gen2")
-    assert(gensPerBucket.forall(_ <= 2) && got == want)
-
-    // recovery: no pending manifest -> no-op
-    assert(!graft.sources.ObjectIndex.recoverCompaction(spark, idx))
-    // crashed-before-commit manifest (its generation never materialized)
-    // -> per-bucket roll-forward deletes nothing, manifest cleared
-    val mf = new java.io.File(idx, "_COMPACT_MANIFEST")
-    val pre = gensPerBucket
-    java.nio.file.Files.write(mf.toPath,
-      s"-9\nobkt=${Math.floorMod(id, nb)}/ibatch=$gen2\n".getBytes("UTF-8"))
-    assert(graft.sources.ObjectIndex.compactPending(spark, idx))
-    intercept[IllegalArgumentException] {
-      graft.sources.ObjectIndex.compactIndex(spark, idx, nb)
-    }
-    assert(graft.sources.ObjectIndex.recoverCompaction(spark, idx))
-    assert(!mf.exists() && gensPerBucket == pre && got == want,
-      "rolled-back recovery must leave the index untouched")
+      events.filter("event_id >= 600 AND event_id < 800"), 100L, idx, nb)
+    store.read(spark, idx).withColumn("ibatch", org.apache.spark.sql.functions.lit(-2L))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("obkt", "ibatch").parquet(idx)
+    def staged = new java.io.File(idx).listFiles().filter(_.getName.startsWith("obkt="))
+      .map(b => new java.io.File(b, "ibatch=-2").isDirectory).toSeq
+    assert(staged.forall(identity), "fixture: a bucket holds no stage")
+    assert(got == wantUnder(800) && gotMany == wantManyUnder(800),
+      "lookups beside an orphaned stage double-counted")
+    // a batch landed beside the orphaned stage heals the stage first,
+    // then lands: the batch is kept and nothing is counted twice
+    graft.sources.ObjectIndex.applyIndexBatch(
+      events.filter("event_id >= 800"), 101L, idx, nb)
+    assert(store.foldedHorizon(spark, idx) == 100L)
+    assert(gensPerBucket.forall(_ <= 2) && !staged.exists(identity),
+      s"the orphaned stage was not healed: $gensPerBucket")
+    assert(got == want && gotMany == wantManyUnder(Long.MaxValue),
+      "a batch landed beside an orphaned stage was lost or double-counted")
+    // the heal folded batch 100: its replay is skipped
+    graft.sources.ObjectIndex.applyIndexBatch(
+      events.filter("event_id >= 600 AND event_id < 800"), 100L, idx, nb)
+    assert(got == want, "replay of a batch the heal folded duplicated rows")
   }
 
   test("compacting ingest loop bounds generations across a stream's lifetime") {
@@ -2049,7 +2059,7 @@ class LightcurveStreamSpec extends AnyFunSuite {
     // compaction (healing the simulated crash) preserves content,
     // MERGES to exactly one row per key, and leaves one canonical
     // fold partition per bucket
-    graft.streaming.LightcurveStream.compactStats(spark, path)
+    graft.streaming.LightcurveStream.StatsStore.fold(spark, path)
     assert(readKeyed() == expect, "compaction changed the summary")
     assert(spark.read.parquet(path).count() == expect.size.toLong,
       "fold did not merge to one row per (object, band)")
@@ -2089,7 +2099,7 @@ class LightcurveStreamSpec extends AnyFunSuite {
     for ((b, id) <- batches.zipWithIndex) {
       graft.streaming.LightcurveStream.applyStatsBatch(
         b.drop("event_id"), id.toLong, path)
-      if (id == 1) graft.streaming.LightcurveStream.compactStats(spark, path)
+      if (id == 1) graft.streaming.LightcurveStream.StatsStore.fold(spark, path)
     }
     def tele(): Map[Long, (Long, Long, Long, Int)] =
       queries.TimeSeries.lcStreamBatchesOver(spark, path, 4).collect()

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.{Ann, Dedup, Multimodal, Spatial, TimeSeries}
-import graft.sources.{Catalog, Store}
+import graft.sources.{Catalog, ObjectIndex, Store}
 import graft.streaming.{DocStream, LightcurveStream}
 
 class StoreSpec extends AnyFunSuite {
@@ -26,7 +26,7 @@ class StoreSpec extends AnyFunSuite {
     "phash_idx" -> Multimodal.PhashIndexStore,
     "phash_members" -> Multimodal.PhashMembersStore,
     "phash_pairs" -> Multimodal.PhashPairsStore,
-    "lc_stats" -> LightcurveStream.StatsStore,
+    "lc_stats" -> LightcurveStream.StatsStore, "obj_index" -> ObjectIndex.IndexStore,
     "corpus" -> DocStream.corpusStore(Catalog.schemas("documents")))
 
   /** A visible data file under `path`, and its partition directory
@@ -58,6 +58,7 @@ class StoreSpec extends AnyFunSuite {
     Dedup.buildSpanIndex(spark, docs, s"$root/span_idx")
     val (phashIdx, phashPairs) = Multimodal.ensurePhashStream(spark, sf)
     DocStream.buildCleanCorpus(spark, docs, s"$root/corpus")
+    ObjectIndex.build(spark, sf, s"$root/obj_index", 16)
     val written = Seq(
       "zone" -> s"$root/zone", "zone_ra" -> s"$root/zone_ra",
       "match" -> matchPath, "transient" -> transPath,
@@ -75,7 +76,7 @@ class StoreSpec extends AnyFunSuite {
       "phash_members" -> Multimodal.phashMembersPath(phashIdx),
       "phash_pairs" -> phashPairs,
       "lc_stats" -> TimeSeries.ensureLcStatsStore(spark, sf),
-      "corpus" -> s"$root/corpus")
+      "obj_index" -> s"$root/obj_index", "corpus" -> s"$root/corpus")
     assert(written.map(_._1).toSet == stores.map(_._1).toSet)
     val byName = stores.toMap
     for ((name, path) <- written) {
@@ -196,5 +197,28 @@ class StoreSpec extends AnyFunSuite {
     assert(!Catalog.appendPending(spark, path))
     assert(store.read(spark, path).filter(col("batch_id") === 1L).count() == 2L,
       "the half-moved batch was not rolled forward")
+  }
+
+  test("a Long marker advances monotonically by one rename and leaves no temporary file") {
+    val dir = Files.createTempDirectory("graft_marker").toString
+    assert(Catalog.readMarker(spark, dir, "_m").isEmpty)
+    for ((v, want) <- Seq(5L -> 5L, 3L -> 5L, 7L -> 7L)) {
+      Catalog.advanceMarker(spark, dir, "_m", v)
+      assert(Catalog.readMarker(spark, dir, "_m").contains(want), s"after $v")
+      val left = new java.io.File(dir).list().toSeq
+      assert(!left.exists(_.contains("tmp")), s"temporary marker files left: $left")
+    }
+  }
+
+  test("a job a store read starts is named after the read's caller") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft_store_site").toString + "/pairs"
+    // more partition directories than Spark lists on the driver, so
+    // the read lists them in a Spark job
+    (0 until 40).map(b => (1L, 2L, 3, b.toLong)).toDF("d1", "d2", "hamming", "batch_id")
+      .write.partitionBy("batch_id").parquet(path)
+    val jobs = JobProbe(spark.sparkContext) { Multimodal.PhashPairsStore.read(spark, path) }
+    assert(jobs.nonEmpty && jobs.flatten.forall(_.startsWith("parquet at StoreSpec.scala:")),
+      s"store read jobs not named after the caller: $jobs")
   }
 }

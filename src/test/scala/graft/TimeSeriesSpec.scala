@@ -706,7 +706,7 @@ class TimeSeriesSpec extends AnyFunSuite with RegistryRows {
     val half = ev.filter(col("event_id") < 500)
     half.filter(col("user_id").isNotNull)
       .withColumn("obkt", pmod(col("user_id"), lit(nb)).cast("int"))
-      .withColumn("ibatch", lit(sources.ObjectIndex.BaseGen))
+      .withColumn("ibatch", lit(sources.Store.FoldId))
       .repartition(nb, col("obkt"))
       .sortWithinPartitions("user_id", "ts", "event_id")
       .write.mode("overwrite").partitionBy("obkt", "ibatch").parquet(out)
@@ -757,7 +757,7 @@ class TimeSeriesSpec extends AnyFunSuite with RegistryRows {
       assert(oneRows > 0 && manyRows > 0, "the probes must return rows")
       assert(one.size == 1, s"lookup started ${one.size} jobs: $one")
       assert(many.size <= 2, s"lookupMany started ${many.size} jobs: $many")
-      val footer = (one ++ many).flatten.filter(_.startsWith("parquet at ObjectIndex.scala"))
+      val footer = (one ++ many).flatten.filter(_.startsWith("parquet at"))
       assert(footer.isEmpty, s"a lookup inferred the index schema: $footer")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
