@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, MutableProjection, Round, SpecificInternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import graft.functions.AreaSpec
 import graft.Tables
 import graft.sources.Store
 
@@ -292,12 +294,17 @@ object Spatial {
     val hi = (z + 1) * zoneHeight - 90.0
     val touchesPole = lo - radius <= -90.0 || hi + radius >= 90.0
     if (touchesPole) 360.0
-    else {
-      val maxAbs = math.max(math.abs(lo - radius), math.abs(hi + radius))
-      val sinHalf = math.sin(math.toRadians(radius) / 2) /
-        math.cos(math.toRadians(maxAbs))
-      if (sinHalf >= 1) 360.0 else math.toDegrees(2 * math.asin(sinHalf))
-    }
+    else raSpanDeg(math.max(math.abs(lo - radius), math.abs(hi + radius)), radius)
+  }
+
+  /** Worst-case Δra (deg) between two points ≤ `radius` apart whose
+    * |dec| are both ≤ `maxAbs` < 90: the inverse-haversine bound
+    * Δra ≤ 2·asin(sin(r/2)/cos(maxAbs)), or the whole ring when it
+    * exceeds one. */
+  private[graft] def raSpanDeg(maxAbs: Double, radius: Double): Double = {
+    val sinHalf = math.sin(math.toRadians(radius) / 2) /
+      math.cos(math.toRadians(maxAbs))
+    if (sinHalf >= 1) 360.0 else math.toDegrees(2 * math.asin(sinHalf))
   }
 
   private[graft] def zoneRaBuckets(radius: Double, zoneHeight: Double): Seq[(Int, Int)] = {
@@ -333,24 +340,17 @@ object Spatial {
     * are the caller's — Catalyst pushes them below the haversine
     * projection into the join. */
   private def gridCandidates(probe: DataFrame, build: DataFrame,
-    radius: Double, extraEquiKey: Boolean = false): DataFrame = {
+    radius: Double): DataFrame = {
     val s = probe.sparkSession
     import s.implicits._
     val zm = s.createDataFrame(zoneRaBuckets(radius, radius))
       .toDF("zm_zone", "nrb")
-    // r20 opt: callers with a cheap row-level equi predicate (the
-    // tracklet grid's night relation) pass extraEquiKey=true with an
-    // `ek` column on BOTH inputs; it joins as a third HASH KEY, so
-    // non-matching candidates are dropped during the join probe — the
-    // 6-trig haversine never sees them (guide §3.3: the residual's
-    // cheap predicate, promoted all the way into the key).
     val b = build
       .withColumn("zone", floor(($"decl" + 90.0) / radius).cast("int"))
       .join(broadcast(zm), $"zone" === $"zm_zone")
-      .select(Seq($"k".as("k2"), $"ra".as("ra2"), $"decl".as("decl2"),
+      .select($"k".as("k2"), $"ra".as("ra2"), $"decl".as("decl2"),
         $"zone".as("z2"),
-        floor($"ra" * $"nrb" / 360.0).cast("int").as("rb2")) ++
-        (if (extraEquiKey) Seq($"ek".as("ek2")) else Nil): _*)
+        floor($"ra" * $"nrb" / 360.0).cast("int").as("rb2"))
     val pr = probe
       .withColumn("zone", floor(($"decl" + 90.0) / radius).cast("int"))
       .withColumn("zp", explode(array($"zone" - 1, $"zone", $"zone" + 1)))
@@ -358,12 +358,9 @@ object Spatial {
       .withColumn("c", floor($"ra" * $"nrb" / 360.0).cast("int"))
       .withColumn("rp", explode(array_distinct(array(
         pmod($"c" - 1, $"nrb"), pmod($"c", $"nrb"), pmod($"c" + 1, $"nrb")))))
-      .select(Seq($"k".as("k1"), $"ra".as("ra1"), $"decl".as("decl1"),
-        $"zp", $"rp") ++
-        (if (extraEquiKey) Seq($"ek".as("ek1")) else Nil): _*)
-    val baseCond = pr("zp") === b("z2") && pr("rp") === b("rb2")
-    pr.join(b, if (extraEquiKey) baseCond && pr("ek1") === b("ek2")
-      else baseCond)
+      .select($"k".as("k1"), $"ra".as("ra1"), $"decl".as("decl1"),
+        $"zp", $"rp")
+    pr.join(b, pr("zp") === b("z2") && pr("rp") === b("rb2"))
       // cheap LOSSLESS prune ahead of the trig (the xmatchStored
       // discipline): great-circle separation ≥ |Δdecl|, so no
       // in-radius pair can fail it — the ±1-zone candidate window
@@ -467,18 +464,22 @@ object Spatial {
     * key, so no second spatial pass exists. Oracle: NOT EXISTS with
     * the identical haversine tree (the grid candidate set is a
     * lossless superset, so "no grid match" ⇔ "no match"). */
-  /** Detection keys associating to ≥1 catalog object within the 1°
-    * radius, from the lossless zone grid — the shared derivation of
-    * [[qXmatchUnmatched]], [[qCompleteness]] and [[trackletPairs]]
-    * (ONE copy, so the association radius and the anti-join
-    * discipline can never drift between the transient set the
-    * tracklet queries consume and the one q_xmatch_unmatched
-    * reports). */
+  /** Radius (degrees) of the detection→object association: a
+    * detection with no catalog point this close is a transient. One
+    * constant for [[matchedDetKeys]] and the motion linker's transient
+    * test ([[motionLinks]]), so the transient set the tracklet
+    * queries link and the one q_xmatch_unmatched reports cannot
+    * drift apart. */
+  private[graft] val AssocRadiusDeg = 1.0
+
+  /** Detection keys associating to ≥1 catalog object within
+    * [[AssocRadiusDeg]], from the lossless zone grid — the shared
+    * derivation of [[qXmatchUnmatched]] and [[qCompleteness]]. */
   private def matchedDetKeys(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     gridCandidates(
       detections(s, dir).select($"det_k".as("k"), $"ra", $"decl"),
-      points(s, dir), 1.0)
+      points(s, dir), AssocRadiusDeg)
       .select($"k1".as("det_k")).distinct()
   }
 
@@ -580,90 +581,290 @@ object Spatial {
     * span — the MOPS linking window. */
   private[graft] val TrackRateDeg = 2.0
 
+  /** Rate-consistency tolerance of the track chain step, in
+    * micro-degrees/night: consecutive tracklets of a real mover keep
+    * a near-constant apparent rate; 0.5°/night of drift rejects
+    * chance alignments. */
+  private[graft] val TrackChainTolU6 = 500000L
+
+  /** Zone height (degrees) of the motion linker's cells. Each zone's
+    * ra cells are as wide as [[zoneRaBuckets]] allows for this
+    * height, so a cell is about 10° × 10° away from the poles and a
+    * whole ring at them. The halos (≈ 2° of detections, ≈ 3° of
+    * catalog) then replicate a point about 2× and 2.6×. */
+  private val LinkCellDeg = 10.0
+
+  /** One linker input row: a replica of a detection (`kind` 1) or of
+    * a catalog point (`kind` 0) in cell `cell`, with the detection's
+    * ×10⁶ integer coordinates (the fit's inputs) and whether it may
+    * be a chain's middle (`mid_ok`, false on halo rows). */
+  private[graft] case class LinkRow(cell: Long, kind: Int, k: Long,
+    ra: Double, decl: Double, is_core: Int, ra_u6: Long, de_u6: Long,
+    mid_ok: Boolean)
+
+  /** A tracklet: consecutive-night transients k1 → k2 within
+    * [[TrackRateDeg]]. */
+  private[graft] case class Leg(night_from: Long, k1: Long, k2: Long,
+    dist_r6: Double)
+
+  /** A 3-night chain k1 → mid → k3 with its closed-form integer fit
+    * (see [[qTrackMotion]]) and the exact ×10⁶ rate drift dr_u6 =
+    * |r₁ − r₂| of its two legs. */
+  private[graft] case class Chain(k1: Long, mid: Long, k3: Long,
+    ra_rate_u6_x2: Long, de_rate_u6_x2: Long, ra_curv_u6: Long,
+    de_curv_u6: Long, dr_u6: Long)
+
+  /** THE motion linker — Qserv's chunk-plus-overlap near-neighbor
+    * join applied to moving objects (REPOSE-style partition-local
+    * search): every detection of `det` and catalog point of `cat`
+    * (both (k, ra, decl)) goes to its home cell plus halo cells
+    * ([[withHaloCells]] over [[LinkCellDeg]] zones), both inputs cross
+    * ONE exchange together, grouped by cell, and `emit` runs on each
+    * cell's rows ([[LinkCell]]: transient flags, consecutive-night
+    * legs, chains and their fit). Detection nights are
+    * `k mod AssocBatches`; `midOk` (over `k`) marks the detections a
+    * chain may pass through and is evaluated on core rows before the
+    * exchange, so a sampled readout searches legs only around the
+    * sampled mids.
+    *
+    * Rules the kernel keeps:
+    *  - One owner per row. A pair belongs to the home cell of `k1`, a
+    *    chain to the home cell of `mid`; only `is_core = 1` rows own
+    *    anything, so every pair and chain is emitted exactly once and
+    *    no dedup pass exists.
+    *  - The halo is complete after rounding. The filters are
+    *    `round(dist, 6) < r`, so a kept pair can lie up to 5e-7 beyond
+    *    r (the [[gridCandidates]] prune's slack). Detections carry a
+    *    halo of [[TrackRateDeg]] + 5e-7, so an owner's cell holds every
+    *    partner; catalog points carry [[TrackRateDeg]] +
+    *    [[AssocRadiusDeg]] + 1e-6, so by the triangle inequality every
+    *    catalog point within the association radius of such a partner
+    *    is in the cell too, and each partner's transient test is
+    *    exact where it is used.
+    *  - One haversine tree. dist_r6 is [[graft.functions.AreaSpec.distDegExpr]]
+    *    under Spark's round(·, 6), compiled as a projection over the
+    *    kernel's four coordinates ([[RoundedDist]]); the kernel holds
+    *    no copy of the formula, only the lossless |Δdecl| and Δra
+    *    prunes ahead of it.
+    *  - One association radius. The transient test is
+    *    [[matchedDetKeys]]'s: no catalog point within [[AssocRadiusDeg]].
+    *  - Streaming output. A cell's input rows are held while it is
+    *    linked (the cell with its halos); legs are searched per owner
+    *    and a mid's chains are the lazy product of its two leg lists,
+    *    emitted as they are formed.
+    *
+    * Skew bound: a task holds one cell at a time, i.e. the replicas
+    * of every point within a halo of the cell, plus one owner's leg
+    * lists. A dense field grows one cell's task, never a join
+    * partition: 60k legs into one mid are two arrays, and its 120k
+    * chains stream out of the product (SpatialSpec's dense-cell
+    * spec). */
+  private[graft] def motionLinks[T: Encoder](det: DataFrame, cat: DataFrame,
+    midOk: Column)(emit: LinkCell => Iterator[T]): Dataset[T] = {
+    val s = det.sparkSession
+    import s.implicits._
+    val d = withHaloCells(det, TrackRateDeg + 5e-7, LinkCellDeg)
+      .select($"cell", lit(1).as("kind"), $"k", $"ra", $"decl", $"is_core",
+        round($"ra" * 1000000).cast("long").as("ra_u6"),
+        round($"decl" * 1000000).cast("long").as("de_u6"),
+        ($"is_core" === 1 && midOk).as("mid_ok"))
+    val c = withHaloCells(cat, TrackRateDeg + AssocRadiusDeg + 1e-6, LinkCellDeg)
+      .select($"cell", lit(0).as("kind"), $"k", $"ra", $"decl", $"is_core",
+        lit(0L).as("ra_u6"), lit(0L).as("de_u6"), lit(false).as("mid_ok"))
+    // a fixed partition count keeps AQE from coalescing a small input
+    // into one task: the kernel is CPU-bound, not shuffle-bound
+    d.union(c)
+      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, $"cell")
+      .sortWithinPartitions($"cell", $"kind", $"decl")
+      .as[LinkRow]
+      .mapPartitions(rows => linkCells(rows, emit))
+  }
+
+  /** [[motionLinks]] over the corpus: the detection stream against
+    * the object catalog. */
+  private def corpusLinks[T: Encoder](s: SparkSession, dir: String,
+    midOk: Column = lit(true))(emit: LinkCell => Iterator[T]): Dataset[T] = {
+    import s.implicits._
+    motionLinks(detections(s, dir).select($"det_k".as("k"), $"ra", $"decl"),
+      points(s, dir), midOk)(emit)
+  }
+
+  /** The task side of [[motionLinks]]: compiles the distance
+    * projection, cuts the partition's (cell, kind, decl)-sorted rows
+    * into cells and runs `emit` on one cell at a time. A cell that
+    * reappears after another fails the task: its rows would be
+    * linked twice, each time without the other half. */
+  private def linkCells[T](rows: Iterator[LinkRow],
+    emit: LinkCell => Iterator[T]): Iterator[T] = {
+    val dist = new RoundedDist
+    val in = rows.buffered
+    var last = Long.MinValue
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val cell = in.head.cell
+      require(cell > last, s"linker input not sorted by cell: $cell after $last")
+      last = cell
+      val buf = Array.newBuilder[LinkRow]
+      while (in.hasNext && in.head.cell == cell) buf += in.next()
+      emit(new LinkCell(buf.result(), dist))
+    }
+  }
+
+  /** dist_r6 = round([[graft.functions.AreaSpec.distDegExpr]], 6), as a
+    * projection bound to the kernel's four doubles — the expression
+    * the grid plans evaluate per row, so every distance is bit-equal
+    * to theirs and to the oracle's. */
+  private final class RoundedDist {
+    private val in = new SpecificInternalRow(Seq.fill(4)(DoubleType))
+    private val d6 = {
+      val arg = (0 until 4).map(BoundReference(_, DoubleType, nullable = false))
+      MutableProjection.create(
+        Seq(Round(AreaSpec.distDegExpr(arg(0), arg(1), arg(2), arg(3)), Literal(6))))
+    }
+
+    /** Rounded distance from (ra1, de1) to (ra2, de2). */
+    def apply(ra1: Double, de1: Double, ra2: Double, de2: Double): Double = {
+      in.setDouble(0, ra1); in.setDouble(1, de1)
+      in.setDouble(2, ra2); in.setDouble(3, de2)
+      d6(in).getDouble(0)
+    }
+  }
+
+  /** round(d · 10⁶) of a rounded distance d, as the oracle's
+    * CAST(ROUND(d*1000000) AS BIGINT): a rounded d ≤ 180 is the double
+    * nearest some m/10⁶, so d·10⁶ lies within 1e-7 of the integer m
+    * and every rounding mode returns m. */
+  private def micro(d: Double): Long = math.round(d * 1000000)
+
+  /** One linker cell's rows, catalog replicas first, each kind by
+    * ascending decl (the sort in [[motionLinks]]). Transient flags are
+    * computed on first use and kept; legs are searched per owner.
+    * Legs run from the earlier night to the later, and their distance
+    * is taken in that orientation, as the oracle's pair join does. */
+  private[graft] final class LinkCell private[Spatial] (rows: Array[LinkRow],
+    dist: RoundedDist) {
+    private val nCat = rows.indexWhere(_.kind == 1) match {
+      case -1 => rows.length
+      case i => i
+    }
+    private val catDec = Array.tabulate(nCat)(rows(_).decl)
+    private val det = rows.drop(nCat)
+    require(det.forall(_.kind == 1) && sorted(catDec) && sorted(det.map(_.decl)),
+      s"linker cell ${rows.head.cell} not sorted by (kind, decl)")
+    private val night = det.map(r => Math.floorMod(r.k, AssocBatches.toLong).toInt)
+    private val byNight = Array.tabulate(AssocBatches)(n =>
+      det.indices.filter(night(_) == n).toArray)
+    private val byNightDec = byNight.map(_.map(det(_).decl))
+    private val flag = new Array[Byte](det.length) // 0 unknown, 1 transient, 2 matched
+
+    private def sorted(xs: Array[Double]): Boolean =
+      xs.indices.forall(i => i == 0 || xs(i - 1) <= xs(i))
+
+    /** Positions of `dec` (ascending) that can hold a point whose
+      * rounded distance to `a` is below `radius`: the lossless |Δdecl|
+      * and wrapped-Δra bounds ([[raSpanDeg]]) at radius + 5e-7. */
+    private def window(dec: Array[Double], raAt: Int => Double, a: LinkRow,
+      radius: Double): Iterator[Int] = {
+      val r = radius + 5e-7
+      val maxAbs = math.abs(a.decl) + r
+      val dra = if (maxAbs >= 90.0) 360.0 else raSpanDeg(maxAbs, r) + 1e-9
+      var p = java.util.Arrays.binarySearch(dec, a.decl - r)
+      p = if (p < 0) -p - 1 else { while (p > 0 && dec(p - 1) == dec(p)) p -= 1; p }
+      Iterator.range(p, dec.length).takeWhile(dec(_) <= a.decl + r).filter { q =>
+        val g = math.abs(a.ra - raAt(q))
+        math.min(g, 360.0 - g) <= dra
+      }
+    }
+
+    /** No catalog point within [[AssocRadiusDeg]]. */
+    private def isTransient(i: Int): Boolean = {
+      if (flag(i) == 0) {
+        val a = det(i)
+        val matched = window(catDec, rows(_).ra, a, AssocRadiusDeg).exists { p =>
+          dist(a.ra, a.decl, rows(p).ra, rows(p).decl) < AssocRadiusDeg
+        }
+        flag(i) = if (matched) 2 else 1
+      }
+      flag(i) == 1
+    }
+
+    /** The transient detections of night `n` linked to detection `i`,
+      * with their dist_r6. */
+    private def legs(i: Int, n: Int): Array[(Int, Double)] = {
+      val a = det(i)
+      val idx = byNight(n)
+      window(byNightDec(n), p => det(idx(p)).ra, a, TrackRateDeg).flatMap { p =>
+        val j = idx(p)
+        val b = det(j)
+        val d = if (n > night(i)) dist(a.ra, a.decl, b.ra, b.decl)
+          else dist(b.ra, b.decl, a.ra, a.decl)
+        if (d < TrackRateDeg && isTransient(j)) Some((j, d)) else None
+      }.toArray
+    }
+
+    /** Core transients of this cell passing `pred`. */
+    private def owned(pred: Int => Boolean): Iterator[Int] =
+      det.indices.iterator.filter(i => det(i).is_core == 1 && pred(i) && isTransient(i))
+
+    /** The transient detections this cell owns. */
+    def transients: Iterator[Long] = owned(_ => true).map(det(_).k)
+
+    /** The tracklets this cell owns: those whose k1 is core here. */
+    def pairs: Iterator[Leg] =
+      owned(night(_) < AssocBatches - 1).flatMap { i =>
+        legs(i, night(i) + 1).iterator.map { case (j, d) =>
+          Leg(night(i), det(i).k, det(j).k, d)
+        }
+      }
+
+    /** The chains this cell owns: those whose mid is core here and
+      * `mid_ok`, as the product of the mid's incoming and outgoing
+      * legs. */
+    def chains: Iterator[Chain] =
+      owned(i => det(i).mid_ok && night(i) > 0 && night(i) < AssocBatches - 1)
+        .flatMap { m =>
+          val in = legs(m, night(m) - 1)
+          val out = if (in.isEmpty) in else legs(m, night(m) + 1)
+          val inU6 = in.map(l => micro(l._2))
+          val outU6 = out.map(l => micro(l._2))
+          val c = det(m)
+          in.indices.iterator.flatMap { x =>
+            val a = det(in(x)._1)
+            out.indices.iterator.map { y =>
+              val b = det(out(y)._1)
+              Chain(a.k, c.k, b.k, b.ra_u6 - a.ra_u6, b.de_u6 - a.de_u6,
+                a.ra_u6 - 2L * c.ra_u6 + b.ra_u6,
+                a.de_u6 - 2L * c.de_u6 + b.de_u6,
+                math.abs(inU6(x) - outU6(y)))
+            }
+          }
+        }
+  }
+
   /** Moving-object TRACKLET census — the solar-system pipeline's
     * first step (LSST's MOPS: link next-night transient pairs into
     * tracklets before orbit fitting), and the query that composes the
     * two halves of the nightly cycle this module already owns: the
     * TRANSIENT set is [[qXmatchUnmatched]]'s (detections matching no
-    * object within 1°, the same lossless-grid anti join), nights are
-    * the lifecycle's `det_k mod AssocBatches` batches, and a tracklet
-    * candidate is a (night b, night b+1) transient pair within
-    * [[TrackRateDeg]] of sky motion (Δt = 1 night, so the separation
-    * IS the rate in deg/night). Per night-from: tracklet count,
-    * distinct from/to endpoints, min/max rate, and an order-free
-    * content pin — dist_r6 is already rounded to 10⁻⁶, so its
-    * ×10⁶ integer SUM is exact and reduction-order-proof (a raw
-    * double sum would drift by summation order). Nights with zero
-    * tracklets survive via the literal-nights LEFT join (the
-    * q_transient_rate zero-fill discipline).
+    * object within [[AssocRadiusDeg]]), nights are the lifecycle's
+    * `det_k mod AssocBatches` batches, and a tracklet candidate is a
+    * (night b, night b+1) transient pair within [[TrackRateDeg]] of
+    * sky motion (Δt = 1 night, so the separation IS the rate in
+    * deg/night). Per night-from: tracklet count, distinct from/to
+    * endpoints, min/max rate, and an order-free content pin — dist_r6
+    * is already rounded to 10⁻⁶, so its ×10⁶ integer SUM is exact and
+    * reduction-order-proof (a raw double sum would drift by summation
+    * order). Nights with zero tracklets survive via the literal-nights
+    * LEFT join (the q_transient_rate zero-fill discipline).
     *
-    * Scale shape: one spatial grid pass for the transient set (the
-    * association's own), ONE more for the pair candidates — the
-    * night predicate rides that same grid join as a post-filter
-    * (a per-night grid would re-scan the transient table per night;
-    * the discarded same/backward-night candidates are a bounded ≤3×
-    * of the kept ones). The distinct counts run on the tracklet
-    * sliver, the zero-fill on a |nights|-row literal. */
-  /** The pinned TRANSIENT set (k, ra, decl) — the unmatched sliver
-    * every tracklet query greps for movers in. Pinned because its
-    * consumers read it as BOTH probe and build side of a grid pass
-    * (two independent subplans — unpinned, the whole anti-join grid
-    * pass runs twice, Explain-confirmed); the frame is far smaller
-    * than the detection table. ONE copy shared by [[trackletPairs]]
-    * and the sampled mid grid ([[sampledMidCandidates]]), so the
-    * transient definition can never drift between the full and
-    * sampled motion readouts. */
-  private[graft] def transientFrame(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    detections(s, dir)
-      .join(matchedDetKeys(s, dir), Seq("det_k"), "left_anti")
-      .select($"det_k".as("k"), $"ra", $"decl")
-      .localCheckpoint()
-  }
-
-  /** The tracklet PAIR stream (night_from, k1, k2, dist_r6, plus both
-    * endpoints' exact ×10⁶ integer coordinates) — factored so
-    * [[qTrackChains]] can self-join it on the shared middle detection.
-    * The coordinates ride along from the grid join (r19 opt round):
-    * [[gridCandidates]] already carries both endpoints' (ra, decl) to
-    * every surviving pair, so rounding them here costs four per-row
-    * casts and ~32 bytes/pair through the checkpoint + chain join —
-    * and it lets [[motionFitOver]] read the per-track fit inputs
-    * directly off the chain row instead of re-deriving them through
-    * the old 3·|tracks| member melt + detection-table equi-join +
-    * |tracks|-group conditional pivot (an entire corpus-scale join +
-    * wide aggregate, deleted). The rounding expression is the
-    * IDENTICAL round(x·10⁶)→long the fit used against the detection
-    * table, over the same exact-rational values, so every downstream
-    * integer is bit-equal. Consumers that need no coordinates
-    * ([[qTracklets]], [[qTrackChains]]) lose nothing: Catalyst prunes
-    * the four columns below their aggregates. */
-  private[graft] def trackletPairs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tr = transientFrame(s, dir)
-    // r20 opt: the consecutive-night predicate rides the grid join as
-    // an EQUI KEY (probe contributes night+1, build its own night) —
-    // ek1 = night(k1)+1 = night(k2) = ek2 is exactly the old
-    // post-haversine filter, but evaluated as a hash key it drops
-    // ~2/3 of the grid's candidate pairs before the 6-trig haversine
-    // runs (guide §3.3). Identical surviving row set.
-    val prb = tr.withColumn("ek", pmod($"k", lit(AssocBatches)) + 1)
-    val bld = tr.withColumn("ek", pmod($"k", lit(AssocBatches)))
-    gridCandidates(prb, bld, TrackRateDeg, extraEquiKey = true)
-      .withColumn("night_from", pmod($"k1", lit(AssocBatches)).cast("long"))
-      .select($"night_from", $"k1", $"k2", $"dist_r6",
-        round($"ra1" * 1000000).cast("long").as("ra1_u6"),
-        round($"decl1" * 1000000).cast("long").as("de1_u6"),
-        round($"ra2" * 1000000).cast("long").as("ra2_u6"),
-        round($"decl2" * 1000000).cast("long").as("de2_u6"))
-  }
-
-  /** Bench watch: regresses if the pair stage stops riding the zone
-    * grid. */
+    * Scale shape: the pairs come out of [[motionLinks]] (one exchange
+    * of both inputs by cell); the census aggregates them.
+    *
+    * Bench watch: regresses if the linker's input ever crosses a
+    * second exchange, or the census stops reading the linker's
+    * stream directly. */
   def qTracklets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cand = trackletPairs(s, dir)
-    val agg = cand.groupBy($"night_from")
+    val agg = corpusLinks(s, dir)(_.pairs).groupBy($"night_from")
       .agg(count(lit(1)).as("n_tracklets"),
         countDistinct($"k1").as("n_from"),
         countDistinct($"k2").as("n_to"),
@@ -708,40 +909,27 @@ object Spatial {
        |ORDER BY night_from""".stripMargin
 
   // ---------------------------------------------------------------
-  /** Rate-consistency tolerance of the track chain step, in
-    * micro-degrees/night: consecutive tracklets of a real mover keep
-    * a near-constant apparent rate; 0.5°/night of drift rejects
-    * chance alignments. */
-  private[graft] val TrackChainTolU6 = 500000L
-
   /** Tracklet→TRACK chaining (the MOPS step after [[qTracklets]]:
     * two consecutive-night tracklets sharing their middle detection
     * form a 3-night track candidate, kept when the apparent rate is
-    * consistent across the two legs): the (night 0→1) pair stream
-    * self-joins the (night 1→2) stream on the shared middle id —
-    * the wedge/2-path motif with a physics cut — and the rate test
-    * |r₁ − r₂| ≤ [[TrackChainTolU6]] runs on EXACT ×10⁶ integers
-    * (dist_r6 is 6-decimal by construction, so the scaling is
-    * lossless). One-row census: chains, consistent tracks, distinct
-    * middle detections among tracks, and the exact integer drift sum
-    * (order-free — a raw double sum would drift by reduction order).
+    * consistent across the two legs) — the wedge/2-path motif with a
+    * physics cut: the rate test |r₁ − r₂| ≤ [[TrackChainTolU6]] runs on
+    * EXACT ×10⁶ integers (dist_r6 is 6-decimal by construction, so
+    * the scaling is lossless). One-row census: chains, consistent
+    * tracks, distinct middle detections among tracks, and the exact
+    * integer drift sum (order-free — a raw double sum would drift by
+    * reduction order).
     *
-    * Scale shape: the spatial work is [[trackletPairs]]' one grid
-    * pass, PAID ONCE and localCheckpoint-pinned (both join sides
-    * read the pinned frame, not two grid re-derivations); the chain
-    * join shuffles the pair sliver on the middle key (dense-field
-    * skew → AQE), everything after is one combinable one-row
-    * aggregate. */
+    * Scale shape: the chains come out of [[motionLinks]] (one
+    * exchange of both inputs by cell, each chain formed in its mid's
+    * home cell); everything after is one combinable one-row
+    * aggregate.
+    *
+    * Bench watch: regresses if a chain ever needs a join on its
+    * middle key again. */
   def qTrackChains(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // r20: the census never reads coordinates — the pinned frame is
-    // projected to the three fit-free columns BEFORE materialization
-    // (a checkpoint pins every column it is handed, whatever the
-    // consumers prune), halving the pinned bytes and the chain join's
-    // shuffle width.
-    chainFrame(trackletPairs(s, dir)
-      .select($"k1", $"k2", $"dist_r6").localCheckpoint(true),
-      coords = false)
+    corpusLinks(s, dir)(_.chains)
       .agg(count(lit(1)).as("n_chains"),
         coalesce(sum(when($"dr_u6" <= TrackChainTolU6, 1L).otherwise(0L)),
           lit(0L)).as("n_tracks"),
@@ -749,51 +937,6 @@ object Spatial {
           .as("n_mids"),
         coalesce(sum(when($"dr_u6" <= TrackChainTolU6, $"dr_u6")
           .otherwise(0L)), lit(0L)).as("sum_dr_u6"))
-  }
-
-  /** The chain JOIN body over any tracklet-pair frame (night_from,
-    * k1, k2, dist_r6) → one row per (k1, mid, k3) chain with its
-    * exact ×10⁶ rate drift — the ONE copy [[qTrackChains]]'s census
-    * and [[trackMotionOver]]'s fit both reduce, factored so the
-    * dense-field spec can drive a deliberately skewed middle key
-    * through the real join and assert the AQE skew split engages. No
-    * night filters: a pair's night is a function of its ids
-    * (night(k2) = night_from + 1 always), so a shared middle
-    * detection ALREADY implies two consecutive legs — the join
-    * covers every (b, b+1, b+2) chain at ANY AssocBatches, where
-    * hard-coded 0/1 literals would silently undercount if the
-    * lifecycle's batching ever widened. */
-  private[graft] def chainFrame(p: DataFrame, coords: Boolean = true): DataFrame = {
-    val s = p.sparkSession
-    import s.implicits._
-    // r19 opt round: the pair frame carries both endpoints' ×10⁶
-    // coordinates (see [[trackletPairs]]); leg 1 contributes k1's and
-    // the mid's, leg 2 contributes k3's — so the chain row hands
-    // [[motionFitOver]] all three member coordinates with ZERO further
-    // joins. r20: consumers without a fit ([[qTrackChains]]) pass
-    // coords=false over a pair frame WITHOUT the coordinate columns —
-    // Catalyst pruning cannot shrink a localCheckpoint's materialized
-    // blocks, so the narrow path must start at the checkpoint itself.
-    if (coords) {
-      val p1 = p.select($"k1", $"k2".as("mid"), $"dist_r6".as("r1"),
-        $"ra1_u6".as("k1_ra_u6"), $"de1_u6".as("k1_de_u6"),
-        $"ra2_u6".as("mid_ra_u6"), $"de2_u6".as("mid_de_u6"))
-      val p2 = p.select($"k1".as("mid"), $"k2".as("k3"), $"dist_r6".as("r2"),
-        $"ra2_u6".as("k3_ra_u6"), $"de2_u6".as("k3_de_u6"))
-      p1.join(p2, Seq("mid"))
-        .withColumn("dr_u6", abs(round($"r1" * 1000000).cast("long") -
-          round($"r2" * 1000000).cast("long")))
-        .select($"k1", $"mid", $"k3", $"dr_u6",
-          $"k1_ra_u6", $"k1_de_u6", $"mid_ra_u6", $"mid_de_u6",
-          $"k3_ra_u6", $"k3_de_u6")
-    } else {
-      val p1 = p.select($"k1", $"k2".as("mid"), $"dist_r6".as("r1"))
-      val p2 = p.select($"k1".as("mid"), $"k2".as("k3"), $"dist_r6".as("r2"))
-      p1.join(p2, Seq("mid"))
-        .withColumn("dr_u6", abs(round($"r1" * 1000000).cast("long") -
-          round($"r2" * 1000000).cast("long")))
-        .select($"k1", $"mid", $"k3", $"dr_u6")
-    }
   }
 
   /** The tracklet-pair→chain CTE chain through `ch` (the
@@ -848,158 +991,45 @@ object Spatial {
     * ids, ordered: rate numerators (u6 per 2 nights), both curvature
     * terms, and the rate-drift dr_u6 the chain gate already measured.
     *
-    * Scale shape (r19 opt round): the spatial work is
-    * [[trackletPairs]]' one grid pass (pinned, shared with the chain
-    * join); the fit inputs — the three members' ×10⁶ coordinates —
-    * now RIDE THE PAIR STREAM from that grid pass through the chain
-    * join (see [[trackletPairs]]), so the readout after the chain
-    * join is pure per-row integer arithmetic: the previous shape's
-    * 3·|tracks| member melt, its detection-table equi-join and the
-    * |tracks|-group conditional pivot are gone. Wall-clock at sf0.1
-    * is FLAT (~10 s in-suite — the bill is the pair grid, the pinned
-    * checkpoint, the 28.4M-combination chain join and the output
-    * sort, none of which the fit stage touched), but the plan drops
-    * a corpus-scale join + wide aggregate — the part that grows at
-    * 100 TB.
+    * Scale shape: [[motionLinks]] forms each chain and its fit in the
+    * mid's home cell, from the ×10⁶ coordinates its input rows carry;
+    * the rate gate is a filter on the linker's stream and the only
+    * other exchange is the presentation sort's.
     *
-    * Bench watch: regresses if the melt lookup ever becomes three
-    * scans. */
-  def qTrackMotion(s: SparkSession, dir: String): DataFrame =
-    trackMotionOver(trackletPairs(s, dir).localCheckpoint(true))
-
-  /** Fit body over any tracklet-pair frame (night_from, k1, k2,
-    * dist_r6, ra/de ×10⁶ of both endpoints — [[trackletPairs]]'
-    * schema) — factored so the spec can drive a planted constant-rate
-    * mover (and a rate-drifting interloper) through the real plan. */
-  private[graft] def trackMotionOver(p: DataFrame): DataFrame =
-    motionFitOver(chainFrame(p))
-
-  /** The per-track FIT over any chain frame carrying the three member
-    * coordinates ([[chainFrame]]'s schema) — the rate gate and the
-    * closed-form integer fit as per-row expressions, shared verbatim
-    * by the full ([[qTrackMotion]]) and sampled
-    * ([[qTrackMotionSampled]]) readouts so the fit arithmetic can
-    * never diverge between them. No join, no aggregate: every fit
-    * input is already on the chain row. */
-  private[graft] def motionFitOver(chains: DataFrame): DataFrame = {
-    val s = chains.sparkSession
+    * Bench watch: regresses if the presentation sort's range sampling
+    * ever costs more than the linker it re-reads (the kernel runs for
+    * the sample and again for the sort's shuffle; a pin would make
+    * that one run and one build-time job). */
+  def qTrackMotion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    chains.filter($"dr_u6" <= TrackChainTolU6)
-      .select($"k1", $"mid", $"k3",
-        ($"k3_ra_u6" - $"k1_ra_u6").as("ra_rate_u6_x2"),
-        ($"k3_de_u6" - $"k1_de_u6").as("de_rate_u6_x2"),
-        ($"k1_ra_u6" - lit(2L) * $"mid_ra_u6" + $"k3_ra_u6")
-          .as("ra_curv_u6"),
-        ($"k1_de_u6" - lit(2L) * $"mid_de_u6" + $"k3_de_u6")
-          .as("de_curv_u6"),
-        $"dr_u6")
-      // r20: pin the reduced fit sliver before the presentation sort —
-      // orderBy's RangePartitioner samples its child with a SEPARATE
-      // job, so unpinned the 28M-row chain-join probe ran TWICE per
-      // action (the r19 driver-regression mechanism). The pin bounds
-      // the resample to the sliver. r19 measured this same pin
-      // 10.3 → 24.8 s and reverted, but that was the bench's own
-      // within-query checkpoint accumulation (3 samples × fresh pinned
-      // frames, none released — judge-diagnosed); with the bench now
-      // unpersisting per sample the A/B is 6.58 s pinned vs 6.37 s
-      // unpinned (5-iter medians, sf0.1 — a wash locally, and the
-      // double probe is gone). A repartition(1)+sortWithinPartitions
-      // variant was also A/B-measured: 16.0 s — the one-task sort
-      // serializes; rejected.
-      .localCheckpoint(true)
-      .orderBy($"k1", $"mid", $"k3")
+    motionReadout(corpusLinks(s, dir)(_.chains))
   }
 
-  /** The sampled-mid CANDIDATE stream: ONE [[gridCandidates]] pass
-    * with the md5-sampled mids PROBING the full transient set — the
-    * sample predicate is applied to the probe INPUT, i.e. it sits
-    * below the grid join (and below the probe-side cell explode) by
-    * construction, so the tracklet search itself is pruned to the
-    * sampled mids, not just the chain join above it. Distance is
-    * symmetric, so the one directed (mid, x) pass carries BOTH legs
-    * of every chain through the sampled mid: `nx = nm − 1` rows are
-    * the INCOMING tracklets (x → mid, emitted swapped by
-    * [[sampledChainFrame]]) and `nx = nm + 1` rows the OUTGOING
-    * (mid → x) — each |Δnight| ≠ 1 candidate is discarded here,
-    * before any checkpoint. The haversine tree is exactly symmetric
-    * under endpoint swap (Δ-negation and the squared sin are sign-
-    * exact, the cos product commutes — spec-pinned bit-for-bit
-    * against the canonical orientation over the corpus), so the
-    * swapped leg-1 distances hash identically to [[trackletPairs]]'. */
-  private[graft] def sampledMidCandidates(tr: DataFrame, hexLt: String): DataFrame = {
-    val s = tr.sparkSession
-    import s.implicits._
-    // r20 opt: |Δnight| = 1 rides the grid join as an EQUI KEY — the
-    // sampled mid explodes to its two admissible neighbor nights
-    // (night−1, night+1; always distinct, so no pair doubles) and the
-    // build side contributes its own night. Exactly the old
-    // post-haversine |Δnight| = 1 filter, but ~2/3 of candidates are
-    // now dropped during the hash probe, before the trig (guide §3.3).
-    val trMid = tr.filter(
-      substring(md5($"k".cast("string")), 1, 1) < lit(hexLt))
-      .withColumn("ek", explode(array(
-        pmod($"k", lit(AssocBatches)) - 1,
-        pmod($"k", lit(AssocBatches)) + 1)))
-    gridCandidates(trMid,
-      tr.withColumn("ek", pmod($"k", lit(AssocBatches))),
-      TrackRateDeg, extraEquiKey = true)
-      .withColumn("nm", pmod($"k1", lit(AssocBatches)).cast("long"))
-      .withColumn("nx", pmod($"k2", lit(AssocBatches)).cast("long"))
-      // both endpoints' ×10⁶ coordinates ride along (the
-      // [[trackletPairs]] r19 discipline) so the sampled fit, too,
-      // reads its inputs off the chain row with zero joins
-      .select($"k1".as("mid"), $"k2".as("x"), $"dist_r6", $"nm", $"nx",
-        round($"ra1" * 1000000).cast("long").as("mid_ra_u6"),
-        round($"decl1" * 1000000).cast("long").as("mid_de_u6"),
-        round($"ra2" * 1000000).cast("long").as("x_ra_u6"),
-        round($"decl2" * 1000000).cast("long").as("x_de_u6"))
-  }
-
-  /** Chains through the sampled mids, from the mid-centric candidate
-    * stream: the incoming legs (swapped back to canonical k1 → mid
-    * orientation) equi-join the outgoing legs on the mid — exactly
-    * the chains [[chainFrame]] would emit whose mid passes the md5
-    * sample, with the identical exact ×10⁶ drift. */
-  private[graft] def sampledChainFrame(cand: DataFrame): DataFrame = {
-    val s = cand.sparkSession
-    import s.implicits._
-    val leg1 = cand.filter($"nx" === $"nm" - 1)
-      .select($"x".as("k1"), $"mid", $"dist_r6".as("r1"),
-        $"x_ra_u6".as("k1_ra_u6"), $"x_de_u6".as("k1_de_u6"),
-        $"mid_ra_u6", $"mid_de_u6")
-    val leg2 = cand.filter($"nx" === $"nm" + 1)
-      .select($"mid", $"x".as("k3"), $"dist_r6".as("r2"),
-        $"x_ra_u6".as("k3_ra_u6"), $"x_de_u6".as("k3_de_u6"))
-    leg1.join(leg2, Seq("mid"))
-      .withColumn("dr_u6", abs(round($"r1" * 1000000).cast("long") -
-        round($"r2" * 1000000).cast("long")))
-      .select($"k1", $"mid", $"k3", $"dr_u6",
-        $"k1_ra_u6", $"k1_de_u6", $"mid_ra_u6", $"mid_de_u6",
-        $"k3_ra_u6", $"k3_de_u6")
-  }
+  /** The rate gate and the presentation order over a chain stream —
+    * shared by the full and sampled readouts. */
+  private[graft] def motionReadout(chains: Dataset[Chain]): DataFrame =
+    chains.toDF().filter(col("dr_u6") <= TrackChainTolU6)
+      .orderBy(col("k1"), col("mid"), col("k3"))
 
   /** The 100-TB scale path of the motion readout: the synthetic
     * corpus links far more "movers" than a real sky (random
     * transients at the 2°/night density), so the registered slice
     * bounds the pipeline with the deterministic 25% md5 sample ON
     * THE MIDDLE KEY ([[TpcSampleHex]], the q_two_point_sampled
-    * discipline) — and the sample now bounds the DOMINANT cost, the
-    * tracklet pair search itself, not just the chain join: the grid
-    * pass probes with the sampled mids only ([[sampledMidCandidates]]
-    * — the md5 filter sits below the grid join, spec-pinned in the
-    * executed plan), so the pair materialization, the checkpoint and
-    * every stage above all scale with the sample. Exact on its
-    * slice — the spec reconciles it row-for-row against the full
-    * readout filtered by the same predicate, and the oracle is the
-    * full readout's with the mid predicate spliced.
+    * discipline). The sample is [[motionLinks]]' `midOk`: md5 runs on
+    * the core detection rows before the exchange, and the kernel
+    * searches legs only around sampled mids, so the leg search and
+    * every stage above it scale with the sample. Exact on its slice
+    * — the spec reconciles it row-for-row against the full readout
+    * filtered by the same predicate, and the oracle is the full
+    * readout's with the mid predicate spliced.
     *
     * Bench watch: must bench WELL below q_track_motion, or the
-    * pushdown below the chain join broke. */
-  def qTrackMotionSampled(s: SparkSession, dir: String): DataFrame =
-    motionFitOver(
-      sampledChainFrame(
-        sampledMidCandidates(transientFrame(s, dir), TpcSampleHex)
-          .localCheckpoint(true)))
+    * sample stopped pruning the leg search. */
+  def qTrackMotionSampled(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    motionReadout(corpusLinks(s, dir, inHashSample($"k"))(_.chains))
+  }
 
   /** Oracle twin: [[trackChainCtes]] (one copy) + the rate gate, the
     * coordinate lookup as three aliased equi-joins (relational form
@@ -1288,18 +1318,6 @@ object Spatial {
   private def cellOf(zone: Column, rb: Column): Column =
     zone.cast("long") * 100000L + rb.cast("long")
 
-  /** Zone metadata for a halo layout: per zone, the at-rest grid's
-    * bucket count (cells sized for zoneHeight-separation — the
-    * [[writeZoneRaPartitioned]] geometry) and the worst-case Δra
-    * between a point IN the zone and anything within `radius` of it
-    * ([[raBoundDeg]]) — the halo window. ≤182 rows; rides along as a
-    * broadcast join. */
-  private def haloZoneMeta(s: SparkSession, radius: Double,
-    zoneHeight: Double): DataFrame =
-    s.createDataFrame(zoneRaBuckets(zoneHeight, zoneHeight).map {
-      case (z, nrb) => (z, nrb, raBoundDeg(z, radius, zoneHeight))
-    }).toDF("zm_zone", "nrb", "dra")
-
   /** Every (cell, replica) a point must be stored in so that a probe
     * joining ONLY its home cell still sees every neighbor within
     * `radius`: the home cell (`is_core = 1`) plus halo copies
@@ -1311,29 +1329,40 @@ object Spatial {
     * replica set covers every home cell such a p can occupy.
     * Replication ≈ (1 + 2·radius/zoneHeight)² — ~2× at the default 5°
     * cells with a 1° radius, Qserv's chunk ≫ overlap regime — and a
-    * point lands at most once per cell (`array_distinct` collapses
-    * ra wraparound), exactly once with `is_core = 1`. */
+    * point lands at most once per cell and exactly once with
+    * `is_core = 1`.
+    *
+    * The zone metadata — per zone of [[zoneRaBuckets]], the at-rest
+    * grid's bucket count (the [[writeZoneRaPartitioned]] geometry) and
+    * the halo window dra = [[raBoundDeg]] — is ≤182 values per column,
+    * looked up from array literals by zone, so the assignment is a
+    * projection and starts no broadcast job. */
   private[graft] def withHaloCells(pts: DataFrame, radius: Double,
     zoneHeight: Double): DataFrame = {
     val s = pts.sparkSession
     import s.implicits._
+    val zm = zoneRaBuckets(zoneHeight, zoneHeight)
+    val (zLo, zHi) = (zm.head._1, zm.last._1)
+    def byZone(values: Array[_]): Column = element_at(lit(values), $"zc" - zLo + 1)
+    def zoneOf(decl: Column): Column = floor((decl + 90.0) / zoneHeight).cast("int")
+    val nrb = byZone(zm.map(_._2).toArray)
+    val dra = byZone(zm.map(z => raBoundDeg(z._1, radius, zoneHeight)).toArray)
+    def raCell(ra: Column): Column = floor(ra * $"nrb" / 360.0).cast("int")
     pts
-      .withColumn("zone0", floor(($"decl" + 90.0) / zoneHeight).cast("int"))
-      .withColumn("zc", explode(sequence(
-        floor(($"decl" - radius + 90.0) / zoneHeight).cast("int"),
-        floor(($"decl" + radius + 90.0) / zoneHeight).cast("int"))))
-      .join(broadcast(haloZoneMeta(s, radius, zoneHeight)),
-        $"zc" === $"zm_zone")
-      .withColumn("rb", explode(array_distinct(
-        when($"dra" >= 180.0, sequence(lit(0), $"nrb" - 1))
-          .otherwise(transform(
-            sequence(floor(($"ra" - $"dra") * $"nrb" / 360.0).cast("int"),
-              floor(($"ra" + $"dra") * $"nrb" / 360.0).cast("int")),
-            b => pmod(b, $"nrb"))))))
-      .withColumn("is_core", ($"zc" === $"zone0" &&
-        $"rb" === floor($"ra" * $"nrb" / 360.0).cast("int")).cast("int"))
-      .withColumn("cell", cellOf($"zc", $"rb"))
-      .select($"k", $"ra", $"decl", $"is_core", $"cell")
+      .select($"k", $"ra", $"decl", explode(sequence(
+        greatest(zoneOf($"decl" - radius), lit(zLo)),
+        least(zoneOf($"decl" + radius), lit(zHi)))).as("zc"))
+      .select($"k", $"ra", $"decl", $"zc", nrb.as("nrb"), dra.as("dra"))
+      // the ra cells within ±dra, each once: the whole ring when the
+      // window wraps onto itself, else one run taken mod nrb
+      .select($"k", $"ra", $"decl", $"zc", $"nrb", explode(
+        when($"dra" >= 180.0 || raCell($"ra" + $"dra") - raCell($"ra" - $"dra") >= $"nrb",
+          sequence(lit(0), $"nrb" - 1))
+          .otherwise(sequence(raCell($"ra" - $"dra"), raCell($"ra" + $"dra")))).as("rb"))
+      .select($"k", $"ra", $"decl",
+        ($"zc" === zoneOf($"decl") && pmod($"rb", $"nrb") === raCell($"ra"))
+          .cast("int").as("is_core"),
+        cellOf($"zc", pmod($"rb", $"nrb")).as("cell"))
   }
 
   /** Home-cell-only assignment — the probe side of the layout (each
@@ -2562,8 +2591,12 @@ object Spatial {
     * sample, the same engine-exact idiom as q_sample_stratified. */
   val TpcSampleHex = "4"
 
+  /** Key `k` is in the deterministic [[TpcSampleHex]] md5 sample. */
+  private def inHashSample(k: Column): Column =
+    substring(md5(k.cast("string")), 1, 1) < TpcSampleHex
+
   private def hashSample(df: DataFrame): DataFrame =
-    df.filter(substring(md5(col("k").cast("string")), 1, 1) < TpcSampleHex)
+    df.filter(inHashSample(col("k")))
 
   /** The 100-TB scale path for the correlation function, as an
     * EXECUTABLE query (not a doc note): the deterministic md5

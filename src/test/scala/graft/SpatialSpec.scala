@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -928,36 +929,142 @@ class SpatialSpec extends AnyFunSuite with RegistryRows {
     assert(gc.getAs[Long]("n_tracks") > 0L, "no consistent tracks at sf0.001")
   }
 
+  /** Driver-side brute force of the motion linker over detections and
+    * catalog points (k, ra, decl): every distance and ×10⁶ integer is
+    * the one haversine tree under round(·, 6) on a Spark cross join,
+    * the linking itself plain Scala. Nights are k mod 3. Returns the
+    * transient keys, the tracklets and the chains with their fit. */
+  private def bruteLinks(det: DataFrame, cat: DataFrame)
+    : (Set[Long], Seq[queries.Spatial.Leg], Seq[queries.Spatial.Chain]) = {
+    import spark.implicits._
+    val q = queries.Spatial
+    def d6(a: String, b: String) = round(q.distDeg(col(s"$a.ra"), col(s"$a.decl"),
+      col(s"$b.ra"), col(s"$b.decl")), 6)
+    val matched = det.as("d").crossJoin(cat.as("c"))
+      .filter(d6("d", "c") < q.AssocRadiusDeg)
+      .select(col("d.k")).distinct().as[Long].collect().toSet
+    val tr = det.as[(Long, Double, Double)].collect().filterNot(r => matched(r._1))
+      .toSeq.toDF("k", "ra", "decl")
+    val u6 = tr.select(col("k"), round(col("ra") * 1000000).cast("long"),
+      round(col("decl") * 1000000).cast("long")).as[(Long, Long, Long)]
+      .collect().map(r => r._1 -> (r._2, r._3)).toMap
+    val legs = tr.as("a").crossJoin(tr.as("b"))
+      .filter(pmod(col("b.k"), lit(3)) === pmod(col("a.k"), lit(3)) + 1)
+      .select(pmod(col("a.k"), lit(3)).cast("long"), col("a.k"), col("b.k"),
+        d6("a", "b").as("d"))
+      .filter(col("d") < q.TrackRateDeg)
+      .select(col("*"), round(col("d") * 1000000).cast("long"))
+      .as[(Long, Long, Long, Double, Long)].collect().toSeq
+    val chains = for {
+      (_, k1, mid, _, r1) <- legs
+      (_, _, k3, _, r2) <- legs.filter(_._2 == mid)
+    } yield {
+      val (a, m, c) = (u6(k1), u6(mid), u6(k3))
+      q.Chain(k1, mid, k3, c._1 - a._1, c._2 - a._2, a._1 - 2 * m._1 + c._1,
+        a._2 - 2 * m._2 + c._2, math.abs(r1 - r2))
+    }
+    (u6.keySet, legs.map(l => q.Leg(l._1, l._2, l._3, l._4)), chains)
+  }
+
+  test("motion linker: pairs and chains equal a brute force across cell edges, the ra wrap, a polar cap and the rounding edge") {
+    import spark.implicits._
+    val q = queries.Spatial
+    val rnd = new scala.util.Random(7)
+    var id = 0L
+    def key(night: Int): Long = { id += 1; 3 * id + night }
+    def near(ra0: Double, raW: Double, de0: Double, deW: Double) =
+      ((ra0 + (rnd.nextDouble() - 0.5) * raW + 360.0) % 360.0,
+        de0 + (rnd.nextDouble() - 0.5) * deW)
+    // linker cells are 10° zones; at |decl| < 10 a zone has 33 ra
+    // cells, so ra 360/33 is a cell edge and decl 0 a zone edge. The
+    // fields straddle the 0/360 wrap and decl 0, an ra cell edge,
+    // and the two polar caps, where raBoundDeg spans the whole ring.
+    val fields = Seq((0.0, 7.0, 0.0, 7.0, 150), (360.0 / 33, 7.0, 5.0, 7.0, 90),
+      (180.0, 360.0, 87.5, 5.0, 120), (90.0, 360.0, -86.0, 8.0, 60))
+    val scattered = for {
+      (ra0, raW, de0, deW, n) <- fields
+      _ <- 0 until n
+    } yield { val (ra, de) = near(ra0, raW, de0, deW); (key(rnd.nextInt(3)), ra, de) }
+    val catScattered = for {
+      (ra0, raW, de0, deW, n) <- fields
+      _ <- 0 until n / 10
+    } yield { val (ra, de) = near(ra0, raW, de0, deW); (-key(0), ra, de) }
+    // the rounding edges, on one meridian so the separation is Δdecl:
+    // 1.9999994 rounds to 1.999999 < 2 (linked across the decl-0 zone
+    // edge), 1.9999996 rounds to 2.0 (not linked); a catalog point
+    // 0.9999994 away matches, one 1.0000004 away does not
+    val (a0, b1, b1x, c2, dm, dt) =
+      (key(0), key(1), key(1), key(2), key(0), key(0))
+    val planted = Seq((a0, 20.0, -1.0), (b1, 20.0, 0.9999994),
+      (b1x, 20.5, 0.9999996), (c2, 20.0, 2.5), (dm, 40.0, 5.0), (dt, 45.0, 5.0))
+    val b1xFrom = key(0)
+    val det = (scattered ++ planted :+ ((b1xFrom, 20.5, -1.0)))
+      .toDF("k", "ra", "decl")
+    val cat = (catScattered ++ Seq((-1L, 40.0, 5.9999994), (-2L, 45.0, 6.0000004)))
+      .toDF("k", "ra", "decl")
+    val (trans, pairs, chains) = bruteLinks(det, cat)
+    val gotTrans = q.motionLinks(det, cat, lit(true))(_.transients)(
+      org.apache.spark.sql.Encoders.scalaLong).collect().toSeq
+    val gotPairs = q.motionLinks(det, cat, lit(true))(_.pairs).collect().toSeq
+    val gotChains = q.motionLinks(det, cat, lit(true))(_.chains).collect().toSeq
+    assert(gotTrans.sorted == trans.toSeq.sorted, "transient set differs")
+    assert(gotPairs.size == gotPairs.toSet.size, "a pair was emitted twice")
+    assert(gotPairs.toSet == pairs.toSet, s"pairs differ: " +
+      s"${(gotPairs.toSet -- pairs).take(5)} vs ${(pairs.toSet -- gotPairs).take(5)}")
+    val ids = gotChains.map(c => (c.k1, c.mid, c.k3))
+    assert(ids.size == ids.toSet.size, "a (k1, mid, k3) was emitted twice")
+    assert(gotChains.toSet == chains.toSet, "chains differ")
+    // the fixture reaches every edge it plants
+    val pos = (scattered ++ planted).map(r => r._1 -> (r._2, r._3)).toMap
+    def across(p: queries.Spatial.Leg)(f: ((Double, Double), (Double, Double)) => Boolean) =
+      pos.contains(p.k1) && pos.contains(p.k2) && f(pos(p.k1), pos(p.k2))
+    assert(pairs.exists(across(_)((a, b) => math.abs(a._1 - b._1) > 180 && a._2.abs < 10)),
+      "no pair across the ra wrap")
+    assert(pairs.exists(across(_)((a, b) => a._2 * b._2 < 0 && a._2.abs < 10)),
+      "no pair across the decl-0 zone edge")
+    assert(pairs.exists(across(_)((a, b) => a._2 > 80 && b._2 > 80 &&
+      math.abs(a._1 - b._1) > 90)), "no pair across the north polar cap")
+    assert(pairs.exists(p => p.k1 == a0 && p.k2 == b1 && p.dist_r6 == 1.999999))
+    assert(!pairs.exists(_.k2 == b1x), "1.9999996 must round to 2.0 and not link")
+    assert(!trans(dm) && trans(dt), "association-radius rounding edge")
+    assert(chains.exists(c => c.k1 == a0 && c.mid == b1 && c.k3 == c2))
+    assert(chains.size > 100, s"only ${chains.size} chains")
+  }
+
+  test("the motion linker's transient set is q_xmatch_unmatched's at sf0.001") {
+    import spark.implicits._
+    val q = queries.Spatial
+    val linked = q.motionLinks(
+      q.detections(spark, sf).select($"det_k".as("k"), $"ra", $"decl"),
+      q.points(spark, sf), lit(true))(_.transients)(
+      org.apache.spark.sql.Encoders.scalaLong).collect().toSeq
+    val unmatched = q.qXmatchUnmatched(spark, sf).select($"det_k").as[Long]
+      .collect().toSeq
+    assert(linked.size == linked.toSet.size, "a transient was owned twice")
+    assert(linked.sorted == unmatched.sorted,
+      s"linker ${linked.size} vs q_xmatch_unmatched ${unmatched.size}")
+    assert(unmatched.nonEmpty)
+  }
+
   test("q_track_motion recovers a planted constant-rate mover exactly and reconciles with the chain census") {
     import spark.implicits._
     val q = queries.Spatial
-    // planted mover 10→11→12: α = 100 + 0.5·night, δ = 20 + 0.25·night
-    // (all values exact binary fractions, so the ×10⁶ rounding is
-    // exact) — equal-rate legs, so dr_u6 = 0; decoy 20→21→22 drifts
-    // 0.6°/night between legs (> the 0.5° tolerance) and must drop
+    // planted mover 30→31→32 (nights 0, 1, 2): α = 100 + 0.5·night,
+    // δ = 20 + 0.25·night (all values exact binary fractions, so the
+    // ×10⁶ rounding is exact); decoy 60→61→62 drifts 0.6°/night
+    // between legs (> the 0.5° tolerance) and must drop
+    val cat = Seq((1L, 250.0, 60.0)).toDF("k", "ra", "decl")
+    def motion(dets: Seq[(Long, Double, Double)]) =
+      q.motionReadout(q.motionLinks(dets.toDF("k", "ra", "decl"), cat,
+        lit(true))(_.chains)).collect()
     val dets = Seq(
-      (10L, 100.0, 20.0), (11L, 100.5, 20.25), (12L, 101.0, 20.5),
-      (20L, 30.0, -10.0), (21L, 30.3, -10.0), (22L, 31.2, -10.0))
-    // pair frames carry both endpoints' ×10⁶ coordinates (the r19
-    // trackletPairs schema) — the fixture attaches them exactly as the
-    // grid pass would
-    def withU6(rows: Seq[(Long, Long, Long, Double)],
-      ds: Seq[(Long, Double, Double)]) = {
-      val m = ds.map(d => d._1 -> (math.round(d._2 * 1000000),
-        math.round(d._3 * 1000000))).toMap
-      rows.map { case (nf, k1, k2, d) =>
-        (nf, k1, k2, d, m(k1)._1, m(k1)._2, m(k2)._1, m(k2)._2) }
-        .toDF("night_from", "k1", "k2", "dist_r6",
-          "ra1_u6", "de1_u6", "ra2_u6", "de2_u6")
-    }
-    val pairs = withU6(Seq(
-      (0L, 10L, 11L, 0.559017), (1L, 11L, 12L, 0.559017),
-      (0L, 20L, 21L, 0.3), (1L, 21L, 22L, 0.9)), dets)
-    val got = q.trackMotionOver(pairs).collect()
+      (30L, 100.0, 20.0), (31L, 100.5, 20.25), (32L, 101.0, 20.5),
+      (60L, 30.0, -10.0), (61L, 30.3, -10.0), (62L, 31.2, -10.0))
+    val got = motion(dets)
     assert(got.length == 1, s"expected only the mover, got ${got.length}")
     val m = got.head
-    assert(m.getAs[Long]("k1") == 10L && m.getAs[Long]("mid") == 11L &&
-      m.getAs[Long]("k3") == 12L)
+    assert(m.getAs[Long]("k1") == 30L && m.getAs[Long]("mid") == 31L &&
+      m.getAs[Long]("k3") == 32L)
     // rate recovered EXACTLY: 0.5°/night → (x₃−x₁) = 1.0° = 10⁶ u6
     assert(m.getAs[Long]("ra_rate_u6_x2") == 1000000L,
       s"ra rate ${m.getAs[Long]("ra_rate_u6_x2")}")
@@ -966,13 +1073,18 @@ class SpatialSpec extends AnyFunSuite with RegistryRows {
     // residual: SSE = c²/6 = 0)
     assert(m.getAs[Long]("ra_curv_u6") == 0L &&
       m.getAs[Long]("de_curv_u6") == 0L, "linear mover has residual")
-    assert(m.getAs[Long]("dr_u6") == 0L)
+    // the legs differ on the sphere (cos δ changes along the track):
+    // the drift is the exact ×10⁶ difference of their rounded lengths
+    val legs = Seq((30L, 31L), (31L, 32L)).map { case (a, b) =>
+      val (x, y) = (dets.find(_._1 == a).get, dets.find(_._1 == b).get)
+      spark.range(1).select(round(round(q.distDeg(lit(x._2), lit(x._3),
+        lit(y._2), lit(y._3)), 6) * 1000000).cast("long")).as[Long].head()
+    }
+    assert(m.getAs[Long]("dr_u6") == math.abs(legs(0) - legs(1)))
     // a mid-point 4 μdeg off the line carries its residual exactly:
     // c = x₁ − 2·x₂ + x₃ = −8 u6 (SSE = 64/6 u6²)
-    val detsCurved = Seq(
-      (10L, 100.0, 20.0), (11L, 100.500004, 20.25), (12L, 101.0, 20.5))
-    val curved = q.trackMotionOver(withU6(
-      Seq((0L, 10L, 11L, 0.5), (1L, 11L, 12L, 0.5)), detsCurved)).collect()
+    val curved = motion(Seq(
+      (30L, 100.0, 20.0), (31L, 100.500004, 20.25), (32L, 101.0, 20.5)))
     assert(curved.length == 1 &&
       curved.head.getAs[Long]("ra_curv_u6") == -8L,
       s"curvature ${curved.head.getAs[Long]("ra_curv_u6")} != -8")
@@ -980,23 +1092,22 @@ class SpatialSpec extends AnyFunSuite with RegistryRows {
     // motion row per consistent track, and the per-track drifts sum
     // to the census' exact integer drift total
     val census = q.qTrackChains(spark, sf).collect().head
-    val motion = q.qTrackMotion(spark, sf).collect()
-    assert(motion.length.toLong == census.getAs[Long]("n_tracks"),
+    val motionRows = q.qTrackMotion(spark, sf).collect()
+    assert(motionRows.length.toLong == census.getAs[Long]("n_tracks"),
       "one motion row per consistent track violated")
-    assert(motion.map(_.getAs[Long]("dr_u6")).sum ==
+    assert(motionRows.map(_.getAs[Long]("dr_u6")).sum ==
       census.getAs[Long]("sum_dr_u6"),
       "motion drift sum != census drift sum")
   }
 
-  test("q_track_motion_sampled is the full readout on the md5 mid slice, with the sample below the GRID join") {
+  test("q_track_motion_sampled is the full readout on the md5 mid slice, with md5 applied to mids before the linker emits legs") {
     import org.apache.spark.sql.functions._
     val q = queries.Spatial
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) ->
         (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
           r.getLong(7))).toMap
-    val sampled = q.qTrackMotionSampled(spark, sf)
-    val got = keyed(sampled.collect())
+    val got = keyed(q.qTrackMotionSampled(spark, sf).collect())
     // exact on its slice: the full readout filtered by the SAME
     // predicate, row for row
     val full = keyed(queries.Spatial.qTrackMotion(spark, sf)
@@ -1006,114 +1117,93 @@ class SpatialSpec extends AnyFunSuite with RegistryRows {
     assert(got.nonEmpty, "25% slice empty at sf0.001")
     assert(got.size < keyed(queries.Spatial.qTrackMotion(spark, sf)
       .collect()).size, "sample did not shrink the readout")
-    // the haversine symmetry claim behind the mid-centric grid pass:
-    // the sampled stream's SWAPPED leg-1 distances (computed mid→x)
-    // are bit-identical to the canonical x→mid pair stream's over the
-    // whole corpus, and leg-2 matches the canonical mid→x pairs —
-    // i.e. the one directed pass reproduces trackletPairs exactly on
-    // the sampled-mid slice, both roles
-    val tr = q.transientFrame(spark, sf)
-    val cand = q.sampledMidCandidates(tr, q.TpcSampleHex)
-    val leg1 = cand.filter(col("nx") === col("nm") - 1)
-      .select(col("x"), col("mid"), col("dist_r6"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val leg2 = cand.filter(col("nx") === col("nm") + 1)
-      .select(col("mid"), col("x"), col("dist_r6"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val pairs = q.trackletPairs(spark, sf)
-      .select(col("k1"), col("k2"), col("dist_r6")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    def hexOk(k: Long) = java.security.MessageDigest.getInstance("MD5")
-      .digest(k.toString.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.head < q.TpcSampleHex.head
-    assert(leg1 == pairs.filter(p => hexOk(p._2)).toSet,
-      "incoming legs != canonical pairs into sampled mids (bitwise)")
-    assert(leg2 == pairs.filter(p => hexOk(p._1)).toSet,
-      "outgoing legs != canonical pairs out of sampled mids (bitwise)")
-    // the scale claim: the md5 sample sits BELOW the grid join — on
-    // the probe input, under the probe-side cell explode — so the
-    // tracklet search itself is pruned, not just the chain join.
-    // Tree printout order pins it: parent before child, so the grid
-    // join line precedes the Generate (explode) which precedes the
-    // md5 filter; exactly ONE md5 filter exists (paid once, probe
-    // side — never re-applied above the join)
+    // the scale claim: md5 is computed once per detection row below
+    // the linker's exchange, into the mid flag the kernel checks
+    // before it searches a mid's legs — never on the chain stream.
+    // Tree printout order is parent before child: the kernel
+    // (MapPartitions) line precedes the exchange, which precedes the
+    // one md5
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val cand2 = q.sampledMidCandidates(tr, q.TpcSampleHex)
-      cand2.collect()
-      val plan = cand2.queryExecution.executedPlan.toString
-      val iJoin = plan.linesIterator.zipWithIndex.collectFirst {
-        case (l, i) if l.contains("Join") && l.contains("z2") => i
-      }.getOrElse(-1)
-      val lines = plan.linesIterator.toVector
-      val iGen = lines.indexWhere(l => l.contains("Generate") && l.contains("zp"))
+      val lines = q.qTrackMotionSampled(spark, sf).queryExecution
+        .executedPlan.toString.linesIterator.toVector
+      val iKernel = lines.indexWhere(_.contains("MapPartitions"))
+      val iExchange = lines.indexWhere(_.contains("hashpartitioning(cell"))
       val iMd5 = lines.indexWhere(_.contains("md5"))
-      assert(plan.sliding(3).count(_ == "md5") == 1,
-        s"expected exactly one md5 filter in the sampled grid plan:\n$plan")
-      assert(iJoin >= 0 && iGen > iJoin && iMd5 > iGen,
-        s"md5 sample not below the grid join + probe explode " +
-          s"(join@$iJoin, explode@$iGen, md5@$iMd5):\n$plan")
+      assert(lines.count(_.contains("md5")) == 1,
+        s"expected exactly one md5 in the sampled plan:\n${lines.mkString("\n")}")
+      assert(iKernel >= 0 && iExchange > iKernel && iMd5 > iExchange,
+        s"md5 not below the linker's exchange (kernel@$iKernel, " +
+          s"exchange@$iExchange, md5@$iMd5):\n${lines.mkString("\n")}")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  test("dense-field chain join: the AQE skew split engages on a planted crowded middle key") {
+  test("dense cell: 60k legs into one mid stream out as 120,050 chains from one cell") {
     import spark.implicits._
     val q = queries.Spatial
-    val keys = Seq(
-      "spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled")
-    val prev = keys.map(k =>
-      k -> scala.util.Try(Option(spark.conf.get(k))).toOption.flatten)
-    try {
-      // scale the skew machinery down to spec size: force a sort-merge
-      // join (no broadcast escape hatch) and make the dense partition
-      // cross the skew threshold so OptimizeSkewedJoin must split it
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32k")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // a dense field: 60k night-0 tracklets all converging on ONE
-      // middle detection (mid = 0) with two night-1 continuations,
-      // plus 50 ordinary middles to give the skew detector a median
-      val dense = (1 to 60000).map(i =>
-        (0L, 1000L + i, 0L, 1.0 + (i % 7) * 0.01))
-      val cont = Seq((1L, 0L, 200001L, 1.0), (1L, 0L, 200002L, 1.2))
-      val bg = (1 to 50).flatMap(m => Seq(
-        (0L, 5000L + m, m.toLong, 0.8), (1L, m.toLong, 90000L + m, 0.8)))
-      val pairs = spark.createDataFrame(dense ++ cont ++ bg)
-        .toDF("night_from", "k1", "k2", "dist_r6")
-        // chainFrame's r19 schema carries endpoint coordinates; the
-        // skew fixture only counts chains, so zeros suffice
-        .withColumn("ra1_u6", org.apache.spark.sql.functions.lit(0L))
-        .withColumn("de1_u6", org.apache.spark.sql.functions.lit(0L))
-        .withColumn("ra2_u6", org.apache.spark.sql.functions.lit(0L))
-        .withColumn("de2_u6", org.apache.spark.sql.functions.lit(0L))
-      val chains = q.chainFrame(pairs)
-      // collect() executes THIS queryExecution, so the inspected plan
-      // below is the adaptively finalized one (count() would plan a
-      // fresh execution and leave this one unexecuted)
-      val n = chains.collect().length
-      // correctness through the skew-split plan: 60k×2 dense chains
-      // plus one per background middle
-      assert(n == 60000 * 2 + 50, s"chain count $n wrong under skew split")
-      val plan = chains.queryExecution.executedPlan.toString
-      assert(plan.contains("skew=true"),
-        s"AQE skew split did not engage on the dense middle key:\n$plan")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    // a dense field: 60k night-0 detections within 1° of ONE night-1
+    // middle detection (k = 1, at ra 100, decl 0) with two night-2
+    // continuations, plus 50 ordinary mids far apart (decl 30, 5°
+    // steps), one chain each. The dense cell's task holds its rows and
+    // the mid's two leg lists; the 120k chains stream out of their
+    // product (the motionLinks skew bound)
+    val dense = (1 to 60000).map(i => (3L * i,
+      99.5 + (i % 200) * 0.005, -0.75 + (i / 200) * 0.005))
+    val mid = Seq((1L, 100.0, 0.0), (2L, 101.0, 0.0), (5L, 100.0, 1.0))
+    val bg = (1 to 50).flatMap { m =>
+      val k = 3L * (100000 + m)
+      Seq((k, 5.0 * m + 0.5, 30.0), (k + 1, 5.0 * m, 30.0), (k + 2, 5.0 * m - 0.5, 30.0))
+    }
+    val det = (dense ++ mid ++ bg).toDF("k", "ra", "decl")
+    val cat = Seq((1L, 300.0, -60.0)).toDF("k", "ra", "decl")
+    val chains = q.motionLinks(det, cat, lit(true))(_.chains)
+    val n = chains.collect().length
+    assert(n == 60000 * 2 + 50, s"chain count $n, want 120,050")
+    assert(chains.filter($"mid" === 1L).count() == 120000L)
+  }
+
+  test("motion linker budget at sf0.001: each input crosses one exchange, the build starts at most one job") {
+    import org.apache.spark.graftx.JobProbe
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    def scans(p: SparkPlan) = p.collect { case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.head.getName }
+    def aggregate(p: SparkPlan) = (p match {
+      case w: WholeStageCodegenExec => w.child
+      case other => other
+    }).isInstanceOf[BaseAggregateExec]
+    for (name <- Seq("q_tracklets", "q_track_chains", "q_track_motion",
+      "q_track_motion_sampled")) {
+      val fn = SparkEntry.queries(name)
+      val build = JobProbe(spark.sparkContext) { fn(spark, sf) }
+      assert(build.size <= 1, s"$name build started ${build.size} jobs: $build")
+      val prev = spark.conf.get("spark.sql.adaptive.enabled")
+      try {
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        val plan = fn(spark, sf).queryExecution.executedPlan
+        assert(scans(plan).sorted == Seq("customer.parquet", "orders.parquet"),
+          s"$name scans ${scans(plan)}")
+        // the input exchange: the one over the scans with no other
+        // exchange beneath it
+        val (input, rest) = plan.collect { case e: Exchange => e }.partition(e =>
+          scans(e).nonEmpty && e.child.find(_.isInstanceOf[Exchange]).isEmpty)
+        assert(input.size == 1 && input.head.isInstanceOf[ShuffleExchangeExec] &&
+          scans(input.head).sorted == Seq("customer.parquet", "orders.parquet"),
+          s"$name: orders and customer must cross one exchange together:\n$plan")
+        // every other exchange reads the inputs only through it, and is
+        // the presentation sort's or the census aggregate's
+        assert(rest.forall(e => scans(e).isEmpty || e.child.find(_ eq input.head).isDefined),
+          s"$name: an input crosses a second exchange:\n$plan")
+        assert(rest.forall {
+          case e: ShuffleExchangeExec =>
+            e.outputPartitioning.isInstanceOf[RangePartitioning] || aggregate(e.child)
+          case b: BroadcastExchangeExec => aggregate(b.child)
+          case _ => false
+        }, s"$name: an exchange that is neither the sort's nor the census':\n$plan")
+      } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
     }
   }
 
